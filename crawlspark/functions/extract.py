@@ -1,15 +1,21 @@
-"""Vectorized html→text extraction and outlink parsing.
+"""html→text extraction and outlink parsing.
 
 The reference's only extension point is the per-page visitor callback
-(IVisitor.cs:5-8, invoked Downloader.cs:148); here it is a pair of
-Arrow-batched pandas UDFs (BASELINE.json input_hint: "vectorized
-pandas/Arrow UDFs (no per-row Python)").
+(IVisitor.cs:5-8, invoked Downloader.cs:148). The crawl loop extracts
+with Catalyst expressions (``extract_page``/``extract_text``), which run
+in the JVM and start no Python worker. The expressions read the payload
+as UTF-8 text, so a payload that is not valid UTF-8 — which includes
+every gzip member, see ``needs_python`` — is left to the Arrow-batched
+pandas UDFs below (``python=True``): they gunzip and degrade corrupt
+bytes row by row. Callers count ``needs_python`` rows and redo the batch
+with the UDFs when the count is not zero.
 
-Determinism contract: ``extract_text`` must reproduce the corpus ``text``
+Determinism contract: both paths must reproduce the corpus ``text``
 column **byte-identically** (BASELINE.json: "byte-identical extracted
-text per url"). The implementation is locale-free pure byte/str slicing
-— no parser library, no unicode normalization — so the output is stable
-across pandas/Arrow versions.
+text per url"), and agree with each other on every payload the
+expressions accept (tests/test_extract_props.py). The implementation is
+locale-free pure byte/str slicing — no parser library, no unicode
+normalization — so the output is stable across pandas/Arrow versions.
 """
 
 from __future__ import annotations
@@ -18,6 +24,7 @@ import re
 import zlib
 
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, StringType, StructField, StructType
 
@@ -25,8 +32,10 @@ _P_OPEN = b"<p>"
 _P_CLOSE = b"</p>"
 # bytes-level regex: no whole-document utf-8 decode (corrupt/binary
 # payloads must degrade, not fail the task), and only matched hrefs are
-# decoded — identical output for valid utf-8 documents
-_HREF_RE = re.compile(rb'href="([^"]+)"')
+# decoded — identical output for valid utf-8 documents. The same pattern
+# drives the expression path (Java regex over the decoded string).
+_HREF = 'href="([^"]+)"'
+_HREF_RE = re.compile(_HREF.encode())
 _GZIP_MAGIC = b"\x1f\x8b"
 
 
@@ -108,3 +117,37 @@ def extract_page_udf(html: pd.Series) -> pd.DataFrame:
         "text": inflated.map(_extract_text_bytes),
         "links": inflated.map(_extract_links_bytes),
     })
+
+
+def needs_python(html: Column) -> Column:
+    """True where the expressions below may differ from the UDFs: the
+    payload is not valid UTF-8. That covers gzip members too: their magic
+    ``1f 8b`` puts a continuation byte after an ASCII byte, which is never
+    valid UTF-8. False for a NULL payload."""
+    return html.isNotNull() & ~F.is_valid_utf8(html.cast("string"))
+
+
+def extract_text(html: Column) -> Column:
+    """``_extract_text_bytes`` for valid UTF-8 payloads: the text between
+    the first ``<p>`` and the next ``</p>`` (or the end), "" without a
+    ``<p>``, NULL for a NULL payload. Both tags are ASCII, so the
+    character positions of the string functions cut the same bytes."""
+    s = html.cast("string")
+    start = F.instr(s, "<p>")
+    body = F.substring_index(F.substr(s, start + 3), "</p>", 1)
+    return F.when(start == 0, F.lit("")).otherwise(body)
+
+
+def extract_links(html: Column) -> Column:
+    """``_extract_links_bytes`` for valid UTF-8 payloads (an empty list
+    for a NULL payload)."""
+    links = F.regexp_extract_all(html.cast("string"), F.lit(_HREF), 1)
+    return F.coalesce(links, F.array().cast("array<string>"))
+
+
+def extract_page(html: Column, python: bool = False) -> Column:
+    """struct<text, links> of each payload, from the expressions or, with
+    ``python``, from ``extract_page_udf``."""
+    if python:
+        return extract_page_udf(html)
+    return F.struct(extract_text(html).alias("text"), extract_links(html).alias("links"))

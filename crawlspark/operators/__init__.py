@@ -12,4 +12,4 @@ from crawlspark.operators.politeness import (  # noqa: F401
     apply_robots,
     topk_per_host,
 )
-from crawlspark.operators.bloom import BloomShards, seen_filter  # noqa: F401
+from crawlspark.operators.bloom import seen_filter  # noqa: F401

@@ -1,218 +1,126 @@
-"""Partitioned bloom-filter URL-seen set, folded forward incrementally.
+"""JVM bloom-filter URL-seen set, folded forward incrementally.
 
 north_star: "a partitioned bloom/cuckoo-filter URL-seen set (broadcast
-shards rebuilt per epoch)". The *broadcast* is rebuilt per epoch; the
-bitmaps themselves are sized once for a capacity and each epoch OR-merges
-only that epoch's newly-final URLs (O(delta) work, not O(history)), with
-an automatic grow-and-rebuild from the full seen set when the URL count
-outgrows capacity. Candidate urls that are *definitely not seen* skip
-the exact anti-join entirely; only the "maybe seen" residue (true hits +
-false positives) pays for the join against the fetched table. The exact
-anti-join backstop means bloom false positives can never change the
-visited set — property pinned by tests/test_web_crawl.py.
+shards rebuilt per epoch)". The filter is Spark's own
+``org.apache.spark.util.sketch.BloomFilter`` over ``xxhash64(url)``:
+built by ``DataFrame.stat.bloomFilter`` (per-partition filters merged by
+the aggregation, so the driver receives one filter's bytes, whatever the
+partition count) and probed by Catalyst's ``BloomFilterMightContain``
+expression — the same pair Spark's runtime join filters use. Build,
+fold and probe run in the JVM and start no Python worker; the driver's
+Python side only hands the filter's bytes to the probe plan.
+
+The filter is sized once for a capacity and each epoch merges
+(``mergeInPlace``) a filter of only that epoch's newly-final URLs
+(O(delta) work, not O(history)), with an automatic grow-and-rebuild from
+the full seen set when the URL count outgrows capacity. Candidate urls
+that are *definitely not seen* skip the exact anti-join entirely; only
+the "maybe seen" residue (true hits + false positives) pays for the join
+against the fetched table. The exact anti-join backstop means bloom false
+positives can never change the visited set — property pinned by
+tests/test_web_crawl.py. Two urls colliding on ``xxhash64`` are one more
+source of false positives, rescued the same way.
 
 Generalizes the reference's never-revisit guarantee (the cursor
 predicate, Downloader.cs:239-240) to an unordered 10^10-url frontier.
 
-Hashing: ``pd.util.hash_pandas_object`` with two distinct hash keys →
-double hashing g_i = h1 + i·h2. Vectorized over Arrow batches; the
-filter lives in one driver process per run (resume rebuilds it once from
-the committed history), so cross-version hash stability is not required.
-
-Sizing: bits = -n·ln(fpp)/ln(2)², split over ``n_shards`` shards. At
-10^10 urls and fpp=1%, that is ~12 GB of bitmaps — hence shards. The
-distributed build repartitions urls BY SHARD so each task materializes
-only the shards it owns and the driver collects at most one full
-filter's worth of bytes total, independent of input partition count
-(never P full-size partials through the driver). In local mode the probe
-broadcasts all shards; on a real cluster the frontier would be
-pre-partitioned by the same url hash so each executor holds only its
-shard range.
+Sizing: bits = -n·ln(fpp)/ln(2)² (``BloomFilter.optimalNumOfBits``); at
+10^6 urls and fpp=1% the serialized filter is 1.2 MB. The probe plan
+takes it from a scalar subquery over a one-row local relation, not from
+a binary literal: Spark prints a binary literal as hex in every plan
+description it renders (per query and per adaptive re-plan), which at
+10^6 capacity is 9.6 MB of text and 0.2 s per render, growing linearly
+with capacity. The subquery prints as one line and runs on the driver
+without a job.
 """
 
 from __future__ import annotations
 
-import math
+from functools import reduce
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from py4j.protocol import Py4JError
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# exactly 16 chars each and distinct (pd hash keys are truncated to 16
-# bytes — identical prefixes would collapse double hashing to h1 == h2)
-_KEY1 = "crawlspark-blm-1"
-_KEY2 = "crawlspark-blm-2"
+# Spark 4.1 does not register BloomFilterMightContain as a SQL function,
+# so the probe builds the Catalyst expression directly; these two classes
+# are the only internal Spark API the package uses.
+MIGHT_CONTAIN_CLASS = "org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain"
+EXPRESSION_UTILS_CLASS = "org.apache.spark.sql.classic.ExpressionUtils"
 
 
-def _h(urls: pd.Series, key: str) -> np.ndarray:
-    assert len(key) == 16
-    return pd.util.hash_pandas_object(urls, index=False, hash_key=key).to_numpy()
-
-
-class BloomShards:
-    def __init__(self, n_shards: int, bits_per_shard: int, n_hashes: int):
-        self.n_shards = n_shards
-        self.bits_per_shard = bits_per_shard
-        self.n_hashes = n_hashes
-        self.bitmaps = np.zeros((n_shards, (bits_per_shard + 7) // 8), dtype=np.uint8)
-
-    @staticmethod
-    def params(expected: int, fpp: float, n_shards: int) -> tuple[int, int]:
-        bits_total = max(64 * n_shards, int(-expected * math.log(fpp) / (math.log(2) ** 2)))
-        bits_per_shard = (bits_total + n_shards - 1) // n_shards
-        n_hashes = max(1, round(math.log(2) * bits_total / max(expected, 1)))
-        return bits_per_shard, min(n_hashes, 8)
-
-    def _positions(self, urls: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-        h1 = _h(urls, _KEY1)
-        h2 = _h(urls, _KEY2) | 1  # odd → full-period double hashing
-        shard = (h1 % np.uint64(self.n_shards)).astype(np.int64)
-        pos = np.empty((self.n_hashes, len(urls)), dtype=np.int64)
-        for i in range(self.n_hashes):
-            pos[i] = ((h1 + np.uint64(i) * h2) % np.uint64(self.bits_per_shard)).astype(np.int64)
-        return shard, pos
-
-    def add(self, urls: pd.Series) -> None:
-        if len(urls) == 0:
-            return
-        shard, pos = self._positions(urls)
-        flat = self.bitmaps.reshape(-1)
-        row_bytes = self.bitmaps.shape[1]
-        for i in range(self.n_hashes):
-            idx = shard * row_bytes + (pos[i] >> 3)
-            # bitwise_or.at is unbuffered: duplicate indices all land
-            # (plain `flat[idx] |= v` silently drops duplicates)
-            np.bitwise_or.at(flat, idx, np.uint8(1) << (pos[i] & 7).astype(np.uint8))
-
-    def might_contain(self, urls: pd.Series) -> pd.Series:
-        if len(urls) == 0:
-            return pd.Series([], dtype=bool)
-        shard, pos = self._positions(urls)
-        out = np.ones(len(urls), dtype=bool)
-        for i in range(self.n_hashes):
-            bit = (self.bitmaps[shard, pos[i] >> 3] >> (pos[i] & 7).astype(np.uint8)) & 1
-            out &= bit.astype(bool)
-        return pd.Series(out)
-
-    def merge(self, other: "BloomShards") -> "BloomShards":
-        self.bitmaps |= other.bitmaps
-        return self
-
-    def fold_urls(self, urls: DataFrame, url_col: str = "url") -> None:
-        """Distributed shard-partitioned fold: repartition ``urls`` by
-        shard id so each task builds bitmaps ONLY for the shards it owns,
-        then OR-merge the collected (shard, bitmap) rows. Total bytes
-        through the driver ≤ one full filter, independent of the input's
-        partition count. One narrow-row shuffle of the urls."""
-        n_shards = self.n_shards
-        bits = self.bits_per_shard
-        k = self.n_hashes
-        row_bytes = self.bitmaps.shape[1]
-
-        @F.pandas_udf("int")
-        def shard_of(s: pd.Series) -> pd.Series:
-            return pd.Series((_h(s, _KEY1) % np.uint64(n_shards)).astype(np.int32))
-
-        def fold(batches):
-            local: dict[int, np.ndarray] = {}
-            for pdf in batches:
-                s = pdf[url_col]
-                if len(s) == 0:
-                    continue
-                h1 = _h(s, _KEY1)
-                h2 = _h(s, _KEY2) | 1
-                shard = (h1 % np.uint64(n_shards)).astype(np.int64)
-                for sh in np.unique(shard):
-                    mask = shard == sh
-                    bm = local.setdefault(int(sh), np.zeros(row_bytes, dtype=np.uint8))
-                    hh1, hh2 = h1[mask], h2[mask]
-                    for i in range(k):
-                        pos = ((hh1 + np.uint64(i) * hh2) % np.uint64(bits)).astype(np.int64)
-                        np.bitwise_or.at(bm, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-            if local:
-                yield pd.DataFrame({
-                    "shard": list(local.keys()),
-                    "bitmap": [v.tobytes() for v in local.values()],
-                })
-
-        rows = (
-            urls.select(F.col(url_col).alias(url_col))
-            .withColumn("__shard", shard_of(F.col(url_col)))
-            .repartition(n_shards, "__shard")
-            .mapInPandas(fold, "shard int, bitmap binary")
-            .collect()
+def might_contain(spark: SparkSession, bloom: bytes, value: Column) -> Column:
+    """``BloomFilterMightContain(bloom, value)``: true when the serialized
+    filter ``bloom`` may hold the long ``value``, false when it certainly
+    does not. Raises RuntimeError naming both internal classes if the
+    Spark build no longer exposes them."""
+    one_row = spark.createDataFrame(pa.table({"bloom": pa.array([bloom], pa.binary())}))
+    try:
+        jvm = spark._jvm
+        utils = reduce(getattr, EXPRESSION_UTILS_CLASS.split("."), jvm)
+        expr_cls = reduce(getattr, MIGHT_CONTAIN_CLASS.split("."), jvm)
+        expr = expr_cls(
+            utils.expression(one_row.scalar()._jc), utils.expression(value._jc)
         )
-        for r in rows:
-            self.bitmaps[r["shard"]] |= np.frombuffer(r["bitmap"], dtype=np.uint8)
+        return Column(utils.column(expr))
+    except (TypeError, Py4JError) as e:  # a moved class is a non-callable JavaPackage
+        raise RuntimeError(
+            f"bloom probe needs Spark's internal {MIGHT_CONTAIN_CLASS} built through "
+            f"{EXPRESSION_UTILS_CLASS}.column; this Spark build does not provide them: {e}"
+        ) from e
 
-    @staticmethod
-    def build(
-        seen: DataFrame,
-        url_col: str = "url",
-        *,
-        expected: int | None = None,
-        fpp: float = 0.01,
-        n_shards: int = 32,
-    ) -> "BloomShards":
-        """One-shot distributed build (the resume / grow path)."""
-        if expected is None:
-            expected = seen.count()
-        expected = max(expected, 1)
-        bits, k = BloomShards.params(expected, fpp, n_shards)
-        out = BloomShards(n_shards, bits, k)
-        out.fold_urls(seen, url_col)
-        return out
+
+def _build(spark: SparkSession, urls: DataFrame, url_col: str, capacity: int, fpp: float):
+    """A JVM BloomFilter of ``xxhash64(url)`` sized for ``capacity`` urls.
+    Filters of one capacity and fpp have equal bit and hash counts, so
+    they merge."""
+    bits = spark._jvm.org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(capacity, fpp)
+    hashed = urls.select(F.xxhash64(url_col).alias("__h"))
+    return hashed._jdf.stat().bloomFilter("__h", capacity, bits)
+
+
+def _serialize(spark: SparkSession, jfilter) -> bytes:
+    out = spark._jvm.java.io.ByteArrayOutputStream()
+    jfilter.writeTo(out)
+    return bytes(out.toByteArray())
 
 
 class IncrementalSeen:
     """Driver-carried seen-set bloom state for the epoch loop.
 
     Per epoch the engine folds only that epoch's newly-final urls into
-    the bitmaps (one small shard-partitioned job over the cached epoch
-    delta) and re-broadcasts — never a full-history rebuild. When
+    the filter (one small aggregation over the cached epoch delta, merged
+    in place on the driver's JVM) — never a full-history rebuild. When
     ``count`` outgrows ``capacity`` the filter is rebuilt once from the
     committed seen set at 4× capacity (amortized O(log) rebuilds over a
     crawl); between rebuilds the configured fpp holds. Correctness never
     depends on fpp: the exact anti-join backstop rescues all false
     positives."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        *,
-        capacity: int = 1_000_000,
-        fpp: float = 0.01,
-        n_shards: int = 32,
-    ):
+    def __init__(self, spark: SparkSession, *, capacity: int = 1_000_000, fpp: float = 0.01):
         self.spark = spark
         self.fpp = fpp
-        self.n_shards = n_shards
         self.capacity = max(capacity, 1024)
         self.count = 0
-        bits, k = BloomShards.params(self.capacity, fpp, n_shards)
-        self.shards = BloomShards(n_shards, bits, k)
-        self._bc = None
+        self.filter = None  # JVM BloomFilter, built by the first fold
+        self._bytes: bytes | None = None
 
     @property
-    def bc(self):
-        """Current broadcast of the shards (rebuilt after every fold)."""
-        if self._bc is None and self.count > 0:
-            self._bc = self.spark.sparkContext.broadcast(self.shards)
-        return self._bc if self.count > 0 else None
-
-    def _invalidate(self) -> None:
-        if self._bc is not None:
-            self._bc.unpersist(blocking=False)
-            self._bc = None
+    def serialized(self) -> bytes | None:
+        """The filter's bytes for ``seen_filter`` (None while empty)."""
+        if self._bytes is None and self.count > 0:
+            self._bytes = _serialize(self.spark, self.filter)
+        return self._bytes if self.count > 0 else None
 
     def fold(self, urls: DataFrame, n_new: int, url_col: str = "url") -> None:
-        """OR-merge a delta of ``n_new`` urls (O(delta) executor work)."""
+        """Merge a delta of ``n_new`` urls (O(delta) executor work)."""
         if n_new <= 0:
             return
-        self.shards.fold_urls(urls, url_col)
+        delta = _build(self.spark, urls, url_col, self.capacity, self.fpp)
+        self.filter = delta if self.filter is None else self.filter.mergeInPlace(delta)
         self.count += n_new
-        self._invalidate()
+        self._bytes = None
 
     def rebuild_if_needed(self, seen: DataFrame, url_col: str = "url") -> bool:
         """Grow 4× and rebuild from the full committed seen set when the
@@ -221,30 +129,9 @@ class IncrementalSeen:
             return False
         while self.capacity < 2 * self.count:
             self.capacity *= 4
-        bits, k = BloomShards.params(self.capacity, self.fpp, self.n_shards)
-        self.shards = BloomShards(self.n_shards, bits, k)
-        self.shards.fold_urls(seen, url_col)
-        self._invalidate()
+        self.filter = _build(self.spark, seen, url_col, self.capacity, self.fpp)
+        self._bytes = None
         return True
-
-
-def build_seen_shards(
-    spark: SparkSession,
-    seen_urls: DataFrame,
-    *,
-    url_col: str = "url",
-    seen_count: int | None = None,
-    n_shards: int = 32,
-    fpp: float = 0.01,
-):
-    """Build + broadcast seen-set bloom shards in one shot. Returns None
-    for an empty seen set. (The epoch loop uses IncrementalSeen instead;
-    this remains the standalone-query path.)"""
-    n_seen = seen_urls.count() if seen_count is None else seen_count
-    if n_seen == 0:
-        return None
-    shards = BloomShards.build(seen_urls, url_col, expected=n_seen, fpp=fpp, n_shards=n_shards)
-    return spark.sparkContext.broadcast(shards)
 
 
 def seen_filter(
@@ -254,33 +141,26 @@ def seen_filter(
     *,
     url_col: str = "url",
     use_bloom: bool = True,
-    shards_bc=None,
-    seen_count: int | None = None,
-    n_shards: int = 32,
+    bloom: bytes | None = None,
     fpp: float = 0.01,
 ) -> DataFrame:
     """candidates ∖ seen, exactly. With the bloom pre-filter, only the
     'maybe seen' residue joins against the seen table; 'definitely new'
-    rows bypass the shuffle. Pass ``shards_bc`` (from build_seen_shards
-    or IncrementalSeen.bc) to reuse one bloom build across filters.
-    Falls back to a plain left_anti when the seen set is empty or bloom
-    is disabled."""
+    rows bypass the shuffle. Pass ``bloom`` (IncrementalSeen.serialized)
+    to reuse one filter across calls; without it the filter is built here
+    from ``seen_urls``. Falls back to a plain left_anti when bloom is
+    disabled, and returns the candidates when the seen set is empty."""
     if not use_bloom:
         return candidates.join(seen_urls.select(url_col), url_col, "left_anti")
-    if shards_bc is None:
-        shards_bc = build_seen_shards(
-            spark, seen_urls, url_col=url_col, seen_count=seen_count,
-            n_shards=n_shards, fpp=fpp,
-        )
-    if shards_bc is None:
-        return candidates
-    bc = shards_bc
+    if bloom is None:
+        n_seen = seen_urls.count()
+        if n_seen == 0:
+            return candidates
+        bloom = _serialize(spark, _build(spark, seen_urls, url_col, n_seen, fpp))
 
-    @F.pandas_udf("boolean")
-    def maybe_seen(urls: pd.Series) -> pd.Series:
-        return bc.value.might_contain(urls)
-
-    tagged = candidates.withColumn("__maybe", maybe_seen(F.col(url_col)))
+    tagged = candidates.withColumn(
+        "__maybe", might_contain(spark, bloom, F.xxhash64(url_col))
+    )
     new = tagged.where(~F.col("__maybe")).drop("__maybe")
     residue = (
         tagged.where(F.col("__maybe")).drop("__maybe")

@@ -7,7 +7,7 @@ outputs commit atomically (SURVEY.md §1.3 — the reference processes
 ``web_crawl``   — the north_star engine: frontier → robots → salted
                   per-host top-K dequeue → fetch-with-retry (join against
                   the pages snapshot, Downloader.cs:297-318 retry bound)
-                  → vectorized text extract → link discovery → next-epoch
+                  → expression text extract → link discovery → next-epoch
                   frontier. Visit order is a property of the data:
                   (epoch, priority, discovery_ts, url).
 
@@ -32,9 +32,13 @@ small runs, so the loop runs a FIXED, small number of actions per epoch):
     Observation attached to the write plan and from parquet FOOTER
     metadata of the written files — O(#files) driver work, no data-page
     reads, no standalone count() actions.
-  * the seen-set bloom is folded forward incrementally (O(epoch delta)),
-    shard-partitioned so the driver collects at most one filter's worth
-    of bytes (operators/bloom.py).
+  * the seen-set bloom is folded forward incrementally (O(epoch delta)):
+    Spark's JVM bloom filter, merged on the driver and probed by a
+    Catalyst expression (operators/bloom.py);
+  * extraction runs as Catalyst expressions, so the default loop starts
+    no Python worker. An epoch that meets payloads that are not valid
+    UTF-8 (gzip members, poison blobs) is staged again on the Arrow UDF,
+    and later epochs of the state dir start there (functions/extract.py).
   * the per-host window is the salted two-phase top-K (politeness.py) —
     no hot-host task;
   * the fetch is an equi-join on ``url`` — small dequeues broadcast (the
@@ -66,7 +70,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from crawlspark.functions.extract import extract_page_udf, extract_text_udf
+from crawlspark.functions.extract import (
+    extract_page,
+    extract_text,
+    extract_text_udf,
+    needs_python,
+)
 from crawlspark.functions.urls import host_of, is_valid_http_url, normalize_url
 from crawlspark.operators.bloom import IncrementalSeen, seen_filter
 from crawlspark.operators.intervals import bucketed_interval_join
@@ -102,6 +111,12 @@ def _utc_naive(v: dt.datetime | None) -> dt.datetime | None:
     if v is not None and v.tzinfo is not None:
         v = v.astimezone(dt.timezone.utc).replace(tzinfo=None)
     return v
+
+
+def _needed_python(stats: list[dict]) -> bool:
+    """Whether a committed epoch or increment met payloads only the
+    Python extraction reads byte-identically (functions/extract.py)."""
+    return any(s.get("python_fallback_rows", 0) > 0 for s in stats)
 
 
 def _dir_files(epoch_dir: str) -> list[str]:
@@ -185,13 +200,13 @@ class CrawlConfig:
     respect_crawl_delay: bool = False
     delay_epoch_seconds: float = 60.0
     bloom_fpp: float = 0.01
-    bloom_shards: int = 32
     bloom_capacity: int = 1_000_000  # initial sizing; grows 4x on overflow
     # cost-based activation: below this seen-set size the exact
-    # broadcast anti-join is cheaper than an Arrow probe round-trip per
-    # link (the seen urls fit in a broadcast); above it the broadcast is
-    # impossible and the bloom shards carry the filter. Set 0 to force
-    # bloom from the first epoch (tests do).
+    # anti-join after the link dedup is cheaper than a per-epoch filter
+    # fold plus a probe and a second pass over the links (the seen urls
+    # fit in a broadcast); above it the broadcast is impossible and the
+    # bloom prefilter carries the check. Set 0 to force bloom from the
+    # first epoch (tests do).
     bloom_min_seen: int = 2_000_000
     # Exponential per-host budget backoff on fetch failures: a host
     # whose attempts keep failing (5xx storm, dead site) gets its
@@ -295,6 +310,8 @@ def web_crawl(
     prior = state.epoch_stats()
     # final outcomes only (ok + failed) — retried urls are still pending
     total_final = sum(s.get("urls_fetched", 0) + s.get("urls_failed", 0) for s in prior)
+    # sticky: once an epoch needed the Python extraction, later ones start there
+    python = _needed_python(prior)
 
     # pin the tiny broadcast sides once per RUN: every epoch job
     # broadcasts them, and without this each broadcast re-scans the
@@ -338,8 +355,7 @@ def web_crawl(
     seen_bloom: IncrementalSeen | None = None
     if cfg.use_bloom:
         seen_bloom = IncrementalSeen(
-            spark, capacity=max(cfg.bloom_capacity, 2 * total_final),
-            fpp=cfg.bloom_fpp, n_shards=cfg.bloom_shards,
+            spark, capacity=max(cfg.bloom_capacity, 2 * total_final), fpp=cfg.bloom_fpp,
         )
         # (no eager fold here: the per-epoch catch-up below folds the
         # committed history once the seen set crosses bloom_min_seen —
@@ -470,168 +486,180 @@ def web_crawl(
             .when(att1 >= F.lit(cfg.max_attempts), F.lit("failed"))
             .otherwise(F.lit("retry"))
         )
-        base = joined.select(
-            "url", "host", "priority", "discovery_ts",
-            F.when(ok, F.col("warc_ts")).alias("warc_ts"),
-            extract_page_udf(F.col("html")).alias("page"),
-            F.when(ok, F.col("lang")).alias("lang"),
-            status.alias("status"),
-            F.when(ok, F.length("html").cast("long")).otherwise(F.lit(0)).alias("content_bytes"),
-            att1.alias("attempts"),
-            ok.alias("__ok"),
-        ).select(
-            "url", "host", "priority", "discovery_ts", "warc_ts",
-            F.when(F.col("__ok"), F.col("page.text")).alias("text"),
-            F.when(F.col("__ok"), F.col("page.links")).alias("links"),
-            "lang", "status", "attempts", "content_bytes",
-        )
-        # analysis in a second projection so the extraction UDF column is
-        # referenced (and evaluated) exactly once
-        if cfg.analyze:
-            # simhash via the Arrow UDF, not the HOF expression: Catalyst
-            # re-evaluates HOF lambdas per element, and the 64-lane
-            # interpreted accumulate made analyze=True ~8x slower than
-            # off (textops.simhash64_udf docstring; bench analyze row)
-            from crawlspark.operators.textops import (
-                quality_micro,
-                simhash64_udf,
-                token_count,
-            )
-
-            base = base.withColumns({
-                "n_tokens": token_count(F.col("text")),
-                "simhash": simhash64_udf(F.col("text")),
-                "quality_micro": quality_micro(F.col("text")),
-            })
-        else:
-            base = base.withColumns({
-                "n_tokens": F.lit(None).cast("long"),
-                "simhash": F.lit(None).cast("long"),
-                "quality_micro": F.lit(None).cast("long"),
-            })
-        # single pages scan + single html decode; html never cached
-        base = base.localCheckpoint(eager=False) if cfg.local_checkpoint else base.cache()
-        # ONE observation on the full dequeued-outcome relation: row
-        # counts, byte sum and cursor come out of the write job itself —
-        # no standalone count() actions (driver-latency lever). The
-        # observe node sits ABOVE the cache/checkpoint boundary and only
-        # on the branch feeding write A, so it fires exactly once.
-        obs = Observation(f"epoch_{epoch}")
-        base_obs = base.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_dequeued"),
-            F.count(F.when(F.col("status") == "ok", 1)).alias("n_ok"),
-            F.count(F.when(F.col("status") == "failed", 1)).alias("n_failed"),
-            F.sum("content_bytes").alias("bytes"),
-            F.max("warc_ts").alias("max_warc"),
-        )
-
-        # 4. stage the fetched table: FINAL outcomes only ('ok'/'failed');
-        #    'retry' rows go back to the frontier instead (O1 retry).
-        fetched_out = base_obs.where(F.col("status") != "retry").drop("links")
-
-        # 5. discover outlinks → next frontier.
-        #      next = dedupe(remaining ∪ retries ∪ (links ∖ seen)) ∖ finals
-        #    where dedupe keeps the min (discovery_ts, priority) entry —
-        #    an existing pending/retrying row always beats a fresh
-        #    re-discovery (its discovery_ts is older), matching the
-        #    sequential-reference semantics. Only the LINKS see the
-        #    seen-set (bloom prefilter + exact anti-join backstop on the
-        #    maybe-seen residue); remaining and retries are unseen by the
-        #    frontier invariant. finals excludes this epoch's outcomes.
-        # No host here: host_of is a regex per row and links are PRE-dedup
-        # (the same url can appear from thousands of pages) — deriving
-        # host after the groupBy shuffle computes it once per SURVIVOR
-        # and keeps the biggest shuffle of the epoch host-free.
-        raw_url = F.explode("links").alias("url")
-        links = base.where(F.col("status") == "ok").select(
-            raw_url, (F.col("priority") + 1).alias("priority")
-        )
-        if cfg.normalize_urls:
-            # canonicalize BEFORE validity/dedup/seen — alias forms of
-            # one URL must collapse to a single frontier row
-            links = links.withColumn("url", normalize_url(F.col("url")))
-        links = links.where(is_valid_http_url(F.col("url")))
-        if blocklist is not None:
-            # per-label-depth broadcast hash anti-joins — narrow, the
-            # blocklist broadcast is built once per run and reused
-            links = filter_blocked_hosts(links, blocklist)
-        if cfg.trap_guard:
-            # trap-shaped links never reach dedup/seen/frontier: the
-            # guard runs pre-shuffle on the raw link stream, so an
-            # unbounded URL family costs only its extraction bytes
-            links = filter_crawl_traps(links)
-        links = (
-            links.withColumn("discovery_ts", F.lit(_discovery_ts(epoch + 1)))
-            .withColumn("attempts", F.lit(0))
-        )
         # cost-based seen-check: once the seen set outgrows a broadcast
-        # (bloom_min_seen), the bloom shards prefilter links BEFORE the
+        # (bloom_min_seen), the bloom filter prefilters links BEFORE the
         # groupBy shuffle and only the maybe-seen residue joins the seen
         # table. Below the threshold, the exact anti-join runs AFTER the
         # groupBy (reusing its url partitioning) against a broadcastable
-        # seen side — cheaper than an Arrow probe round-trip per link.
+        # seen side — no per-epoch fold and no second pass over the links.
         # Catch-up fold: first epoch above the threshold (or a resume)
         # folds the committed history once; OR-ing is idempotent.
         bloom_active = seen_bloom is not None and total_final >= cfg.bloom_min_seen
         if bloom_active and seen_bloom.count < total_final:
             seen_bloom.fold(state.seen_urls(spark), n_new=total_final - seen_bloom.count)
             seen_bloom.rebuild_if_needed(state.seen_urls(spark))
-        if bloom_active:
-            # seen_filter evaluates its input twice (definitely-new +
-            # maybe-seen residue branches), so it must run over a CHEAP
-            # plan — the link explode straight off the cached `base`,
-            # never a post-shuffle relation.
-            links = seen_filter(
-                spark, links, state.seen_urls(spark),
-                use_bloom=True,
-                shards_bc=seen_bloom.bc,
-                seen_count=seen_bloom.count,
+
+        # The extraction runs as expressions unless the state dir already
+        # met payloads they cannot read (``python``). The write's
+        # Observation counts such payloads; when there are any, the epoch
+        # is staged again on the Python UDF (staged dirs stay invisible
+        # until the commit below, and the re-write overwrites them), and
+        # ``python`` stays True for the epochs after it.
+        for python in (python, True):
+            base = joined.select(
+                "url", "host", "priority", "discovery_ts",
+                F.when(ok, F.col("warc_ts")).alias("warc_ts"),
+                extract_page(F.col("html"), python).alias("page"),
+                F.when(ok, F.col("lang")).alias("lang"),
+                status.alias("status"),
+                F.when(ok, F.length("html").cast("long")).otherwise(F.lit(0)).alias("content_bytes"),
+                att1.alias("attempts"),
+                ok.alias("__ok"),
+                (ok & needs_python(F.col("html"))).alias("__py"),
+            ).select(
+                "url", "host", "priority", "discovery_ts", "warc_ts",
+                F.when(F.col("__ok"), F.col("page.text")).alias("text"),
+                F.when(F.col("__ok"), F.col("page.links")).alias("links"),
+                "lang", "status", "attempts", "content_bytes", "__py",
             )
-        frontier_cols = ["url", "priority", "discovery_ts", "attempts"]
-        next_frontier = (
-            remaining.select(*frontier_cols)
-            .unionByName(base.where(F.col("status") == "retry").select(*frontier_cols))
-            .unionByName(links.select(*frontier_cols))
-            .groupBy("url")
-            .agg(F.min(F.struct("discovery_ts", "priority", "attempts")).alias("s"))
-            .select(
-                "url",
-                F.col("s.priority").alias("priority"),
-                F.col("s.discovery_ts").alias("discovery_ts"),
-                F.col("s.attempts").alias("attempts"),
-            )
-            .join(
-                base.where(F.col("status") != "retry").select("url").hint("SHUFFLE_HASH"),
-                "url", "left_anti",
-            )
-        )
-        if not bloom_active and total_final > 0:
-            # exact path: remaining/retries are unseen by the frontier
-            # invariant, so this is a no-op for them; links to seen urls
-            # drop here. Runs on the deduped set, post-shuffle.
-            # SHUFFLE_HASH (here and on the finals anti-join above):
-            # catalyst would pick broadcast for a sub-threshold seen
-            # side, but building a 10^5-10^6-url hashed relation is
-            # SERIAL driver work — a per-epoch constant that anti-scales
-            # (same reason the large fetch join avoids broadcast). The
-            # left side is already url-partitioned by the groupBy, so
-            # only the small right side shuffles, fully parallel.
-            next_frontier = next_frontier.join(
-                state.seen_urls(spark).hint("SHUFFLE_HASH"), "url", "left_anti"
+            # analysis in a second projection so the extraction column is
+            # referenced (and evaluated) exactly once
+            if cfg.analyze:
+                # simhash via the Arrow UDF, not the HOF expression: Catalyst
+                # re-evaluates HOF lambdas per element, and the 64-lane
+                # interpreted accumulate made analyze=True ~8x slower than
+                # off (textops.simhash64_udf docstring; bench analyze row)
+                from crawlspark.operators.textops import (
+                    quality_micro,
+                    simhash64_udf,
+                    token_count,
+                )
+
+                base = base.withColumns({
+                    "n_tokens": token_count(F.col("text")),
+                    "simhash": simhash64_udf(F.col("text")),
+                    "quality_micro": quality_micro(F.col("text")),
+                })
+            else:
+                base = base.withColumns({
+                    "n_tokens": F.lit(None).cast("long"),
+                    "simhash": F.lit(None).cast("long"),
+                    "quality_micro": F.lit(None).cast("long"),
+                })
+            # single pages scan + single html decode; html never cached
+            base = base.localCheckpoint(eager=False) if cfg.local_checkpoint else base.cache()
+            # ONE observation on the full dequeued-outcome relation: row
+            # counts, byte sum and cursor come out of the write job itself —
+            # no standalone count() actions (driver-latency lever). The
+            # observe node sits ABOVE the cache/checkpoint boundary and only
+            # on the branch feeding write A, so it fires exactly once.
+            obs = Observation(f"epoch_{epoch}_py" if python else f"epoch_{epoch}")
+            base_obs = base.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_dequeued"),
+                F.count(F.when(F.col("status") == "ok", 1)).alias("n_ok"),
+                F.count(F.when(F.col("status") == "failed", 1)).alias("n_failed"),
+                F.sum("content_bytes").alias("bytes"),
+                F.max("warc_ts").alias("max_warc"),
+                F.count(F.when(F.col("__py"), 1)).alias("n_python"),
             )
 
-        # 6. ONE write action stages BOTH tables: fetched rows and next
-        #    frontier union under a discriminator column, partitionBy
-        #    splits them into each table's epoch dir. One pass over the
-        #    caches, one job's worth of scheduling per epoch.
-        combined = fetched_out.withColumn("__table", F.lit("fetched")).unionByName(
-            next_frontier.withColumn("__table", F.lit("frontier")),
-            allowMissingColumns=True,
-        )
-        state.fetched.write_epoch_split(state.frontier, combined, epoch)  # ACTION A
+            # 4. stage the fetched table: FINAL outcomes only ('ok'/'failed');
+            #    'retry' rows go back to the frontier instead (O1 retry).
+            fetched_out = base_obs.where(F.col("status") != "retry").drop("links", "__py")
+
+            # 5. discover outlinks → next frontier.
+            #      next = dedupe(remaining ∪ retries ∪ (links ∖ seen)) ∖ finals
+            #    where dedupe keeps the min (discovery_ts, priority) entry —
+            #    an existing pending/retrying row always beats a fresh
+            #    re-discovery (its discovery_ts is older), matching the
+            #    sequential-reference semantics. Only the LINKS see the
+            #    seen-set (bloom prefilter + exact anti-join backstop on the
+            #    maybe-seen residue); remaining and retries are unseen by the
+            #    frontier invariant. finals excludes this epoch's outcomes.
+            # No host here: host_of is a regex per row and links are PRE-dedup
+            # (the same url can appear from thousands of pages) — deriving
+            # host after the groupBy shuffle computes it once per SURVIVOR
+            # and keeps the biggest shuffle of the epoch host-free.
+            raw_url = F.explode("links").alias("url")
+            links = base.where(F.col("status") == "ok").select(
+                raw_url, (F.col("priority") + 1).alias("priority")
+            )
+            if cfg.normalize_urls:
+                # canonicalize BEFORE validity/dedup/seen — alias forms of
+                # one URL must collapse to a single frontier row
+                links = links.withColumn("url", normalize_url(F.col("url")))
+            links = links.where(is_valid_http_url(F.col("url")))
+            if blocklist is not None:
+                # per-label-depth broadcast hash anti-joins — narrow, the
+                # blocklist broadcast is built once per run and reused
+                links = filter_blocked_hosts(links, blocklist)
+            if cfg.trap_guard:
+                # trap-shaped links never reach dedup/seen/frontier: the
+                # guard runs pre-shuffle on the raw link stream, so an
+                # unbounded URL family costs only its extraction bytes
+                links = filter_crawl_traps(links)
+            links = (
+                links.withColumn("discovery_ts", F.lit(_discovery_ts(epoch + 1)))
+                .withColumn("attempts", F.lit(0))
+            )
+            if bloom_active:
+                # seen_filter evaluates its input twice (definitely-new +
+                # maybe-seen residue branches), so it must run over a CHEAP
+                # plan — the link explode straight off the cached `base`,
+                # never a post-shuffle relation.
+                links = seen_filter(
+                    spark, links, state.seen_urls(spark),
+                    use_bloom=True,
+                    bloom=seen_bloom.serialized,
+                )
+            frontier_cols = ["url", "priority", "discovery_ts", "attempts"]
+            next_frontier = (
+                remaining.select(*frontier_cols)
+                .unionByName(base.where(F.col("status") == "retry").select(*frontier_cols))
+                .unionByName(links.select(*frontier_cols))
+                .groupBy("url")
+                .agg(F.min(F.struct("discovery_ts", "priority", "attempts")).alias("s"))
+                .select(
+                    "url",
+                    F.col("s.priority").alias("priority"),
+                    F.col("s.discovery_ts").alias("discovery_ts"),
+                    F.col("s.attempts").alias("attempts"),
+                )
+                .join(
+                    base.where(F.col("status") != "retry").select("url").hint("SHUFFLE_HASH"),
+                    "url", "left_anti",
+                )
+            )
+            if not bloom_active and total_final > 0:
+                # exact path: remaining/retries are unseen by the frontier
+                # invariant, so this is a no-op for them; links to seen urls
+                # drop here. Runs on the deduped set, post-shuffle.
+                # SHUFFLE_HASH (here and on the finals anti-join above):
+                # catalyst would pick broadcast for a sub-threshold seen
+                # side, but building a 10^5-10^6-url hashed relation is
+                # SERIAL driver work — a per-epoch constant that anti-scales
+                # (same reason the large fetch join avoids broadcast). The
+                # left side is already url-partitioned by the groupBy, so
+                # only the small right side shuffles, fully parallel.
+                next_frontier = next_frontier.join(
+                    state.seen_urls(spark).hint("SHUFFLE_HASH"), "url", "left_anti"
+                )
+
+            # 6. ONE write action stages BOTH tables: fetched rows and next
+            #    frontier union under a discriminator column, partitionBy
+            #    splits them into each table's epoch dir. One pass over the
+            #    caches, one job's worth of scheduling per epoch.
+            combined = fetched_out.withColumn("__table", F.lit("fetched")).unionByName(
+                next_frontier.withColumn("__table", F.lit("frontier")),
+                allowMissingColumns=True,
+            )
+            state.fetched.write_epoch_split(state.frontier, combined, epoch)  # ACTION A
+            m = obs.get
+            if python or m["n_python"] == 0:
+                break
+            base.unpersist()
         _t("write fetched+frontier")
-        m = obs.get
         n_dequeued = m["n_dequeued"]
         n_ok, n_failed = m["n_ok"], m["n_failed"]
         n_final = n_ok + n_failed
@@ -684,6 +712,7 @@ def web_crawl(
             "urls_retrying": int(n_retry),
             "urls_pending_after": int(n_frontier),
             "bytes": int(m["bytes"] or 0),
+            "python_fallback_rows": int(m["n_python"]),
         }
         state.commit_epoch(epoch, cursors={"download": cursor}, stats=epoch_stats)
         stats_out.append(epoch_stats)
@@ -793,6 +822,7 @@ def catalog_crawl(
     log.debug("Format paths: {}", format_paths)
     state = CrawlState(state_dir)
     run = state.next_epoch()
+    python = _needed_python(state.epoch_stats())
 
     if depth == "service_index":
         # ServiceIndex depth fetches + validates only the service index
@@ -888,7 +918,7 @@ def catalog_crawl(
         )
         text_col = F.col("__mirror")
     else:
-        text_col = extract_text_udf(F.col("html"))
+        text_col = extract_text_udf(F.col("html")) if python else extract_text(F.col("html"))
 
     if mirror_dir is not None:
         # O2 physical disk mirror with the --format-paths fanout toggle
@@ -908,24 +938,34 @@ def catalog_crawl(
             mirror_dir,
         )
 
-    fetched_rows = leaves.select(
-        "url",
-        host_of(F.col("url")).alias("host"),
-        F.lit(0).alias("priority"),
-        F.lit(_discovery_ts(run)).alias("discovery_ts"),
-        "warc_ts",
-        text_col.alias("text"),
-        "lang",
-        F.lit("ok").alias("status"),
-        F.lit(1).alias("attempts"),
-        F.length("html").cast("long").alias("content_bytes"),
-        F.lit(None).cast("long").alias("n_tokens"),
-        F.lit(None).cast("long").alias("simhash"),
-        F.lit(None).cast("long").alias("quality_micro"),
-    )
-    state.fetched.write_epoch(fetched_rows, run)
+    def fetched_rows(text_col):
+        return leaves.select(
+            "url",
+            host_of(F.col("url")).alias("host"),
+            F.lit(0).alias("priority"),
+            F.lit(_discovery_ts(run)).alias("discovery_ts"),
+            "warc_ts",
+            text_col.alias("text"),
+            "lang",
+            F.lit("ok").alias("status"),
+            F.lit(1).alias("attempts"),
+            F.length("html").cast("long").alias("content_bytes"),
+            F.lit(None).cast("long").alias("n_tokens"),
+            F.lit(None).cast("long").alias("simhash"),
+            F.lit(None).cast("long").alias("quality_micro"),
+        )
 
-    agg = leaves.agg(F.max("warc_ts").alias("mx"), F.count("*").alias("n")).first()
+    state.fetched.write_epoch(fetched_rows(text_col), run)
+
+    agg = leaves.agg(
+        F.max("warc_ts").alias("mx"),
+        F.count("*").alias("n"),
+        F.count(F.when(needs_python(F.col("html")), 1)).alias("n_python"),
+    ).first()
+    if agg["n_python"] and json_formatting == "unchanged" and not python:
+        # payloads the text expression cannot read: redo the staged
+        # (still uncommitted) increment with the Python UDF
+        state.fetched.write_epoch(fetched_rows(extract_text_udf(F.col("html"))), run)
     new_cursor = max(cursor, agg["mx"] or EPOCH_MIN)
     n_leaves = int(agg["n"])
     with log.indent():
@@ -934,7 +974,10 @@ def catalog_crawl(
             log.info("Downloaded {} catalog leaves", n_leaves)  # Downloader.cs:151
     state.commit_epoch(
         run, cursors={consumer: new_cursor},
-        stats={"pages": n_pages, "urls_fetched": n_leaves},
+        stats={
+            "pages": n_pages, "urls_fetched": n_leaves,
+            "python_fallback_rows": int(agg["n_python"]),
+        },
     )
     sel_pages.unpersist()
     leaves.unpersist()

@@ -34,6 +34,14 @@ def package_pyfiles(out_path: str | None = None) -> str:
     return out_path
 
 
+def default_driver_memory(ram_bytes: int | None = None) -> str:
+    """16g, capped at half of physical RAM (whole GiB, at least 1g) so
+    the driver JVM leaves room for the OS and the Python side."""
+    if ram_bytes is None:
+        ram_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, ram_bytes // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "crawlspark",
     master: str | None = None,
@@ -75,7 +83,10 @@ def get_spark(
         # for timestamp columns — per-partition lineage reads ONLY footer
         # metadata, never data pages (O(#files) driver work per epoch)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("CRAWLSPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("CRAWLSPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -8,8 +8,9 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
-from crawlspark.plans.epoch import CrawlConfig, web_crawl
+from crawlspark.plans.epoch import CrawlConfig, catalog_crawl, web_crawl
 from crawlspark.plans.state import CrawlState
+from crawlspark.sources.tables import EpochTable
 
 
 @F.udf(BinaryType())
@@ -35,20 +36,39 @@ def test_extract_udfs_gunzip_transparently(spark):
     assert out[4]["text"] == "" and out[4]["links"] == []
 
 
-def test_crawl_on_gzipped_corpus_is_byte_identical(spark, corpus_dir, crawl_run, tmp_path):
+def test_crawl_on_gzipped_corpus_is_byte_identical(
+    spark, corpus_dir, crawl_run, tmp_path, monkeypatch
+):
     """Full engine run over the same corpus with every html payload
-    gzipped: identical visited set, order, and extracted text."""
-    plain_state, _ = crawl_run
+    gzipped: identical visited set, order, and extracted text. The plain
+    crawl never leaves the expression extraction; the gzipped one falls
+    back to the Python UDF, re-staging only its first epoch."""
+    plain_state, plain_stats = crawl_run
+    assert all(s["python_fallback_rows"] == 0 for s in plain_stats)
+    writes = []
+    split = EpochTable.write_epoch_split
+
+    def counting_split(self, other, combined, epoch, *a, **kw):
+        writes.append(epoch)
+        return split(self, other, combined, epoch, *a, **kw)
+
+    monkeypatch.setattr(EpochTable, "write_epoch_split", counting_split)
     pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
     gz_pages = pages.withColumn("html", _gzip_udf("html"))
     seeds = spark.read.parquet(os.path.join(corpus_dir, "seeds.parquet"))
     robots = spark.read.parquet(os.path.join(corpus_dir, "robots.parquet"))
     budgets = spark.read.parquet(os.path.join(corpus_dir, "host_budgets.parquet"))
     gz_state = str(tmp_path / "gz_state")
-    web_crawl(
+    gz_stats = web_crawl(
         spark, gz_pages, gz_state, seeds, robots=robots, host_budgets=budgets,
         config=CrawlConfig(default_budget=8, max_epochs=20),
     )
+    assert gz_stats[0]["python_fallback_rows"] > 0
+    assert sum(s["python_fallback_rows"] for s in gz_stats) == sum(
+        s["urls_fetched"] for s in gz_stats
+    )
+    # one extra staging pass for the state dir, not one per epoch
+    assert writes[:2] == [0, 0] and sorted(set(writes)) == writes[1:]
 
     def trace(state_dir):
         return [
@@ -59,3 +79,21 @@ def test_crawl_on_gzipped_corpus_is_byte_identical(spark, corpus_dir, crawl_run,
         ]
 
     assert trace(gz_state) == trace(plain_state)
+
+
+def test_catalog_on_gzipped_pages_is_byte_identical(spark, corpus_dir, tmp_path):
+    """catalog_crawl stages an increment with the text expression and
+    redoes it with the Python UDF when the payloads are gzipped."""
+    pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
+    index = spark.read.parquet(os.path.join(corpus_dir, "index.parquet"))
+    texts = {}
+    for name, src in (("plain", pages), ("gz", pages.withColumn("html", _gzip_udf("html")))):
+        state_dir = str(tmp_path / name)
+        res = catalog_crawl(spark, src, index, state_dir, depth="leaf")
+        assert res["leaves"] > 0
+        (stats,) = CrawlState(state_dir).epoch_stats()
+        assert (stats["python_fallback_rows"] > 0) == (name == "gz")
+        texts[name] = sorted(
+            (r["url"], r["text"]) for r in CrawlState(state_dir).fetched.read(spark).collect()
+        )
+    assert texts["gz"] == texts["plain"]

@@ -8,7 +8,7 @@ from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
 from crawlspark.functions.urls import hash_prefix_bin, host_of, path_of
-from crawlspark.operators.bloom import BloomShards, seen_filter
+from crawlspark.operators.bloom import IncrementalSeen, might_contain, seen_filter
 from crawlspark.operators.ordering import (
     commit_budget_cutoff,
     cursor_filter,
@@ -118,11 +118,12 @@ def test_url_parsing(spark):
     assert row["h"] == "h5.example" and row["p"] == "/page/p7"
 
 
-def test_bloom_no_false_negatives():
-    bf = BloomShards(8, 1 << 12, 4)
-    added = pd.Series([f"https://h{i}.example/p{i}" for i in range(500)])
-    bf.add(added)
-    assert bf.might_contain(added).all()
+def test_bloom_no_false_negatives(spark):
+    added = spark.createDataFrame([Row(url=f"https://h{i}.example/p{i}") for i in range(500)])
+    seen = IncrementalSeen(spark, capacity=1024)
+    seen.fold(added, n_new=500)
+    probe = added.select(might_contain(spark, seen.serialized, F.xxhash64("url")).alias("m"))
+    assert all(r["m"] for r in probe.collect())
 
 
 def test_seen_filter_matches_exact_anti_join(spark):
