@@ -19,7 +19,7 @@ O25/O26 time_bucket_shard, O27 hash_prefix_bin, politeness/frontier
 dequeue (north_star) frontier_dequeue, bloom seen-set bloom_seen_filter;
 O3 json_roundtrip + json_rewrite (RewriteJson modes);
 training-data ops: dedup_exact, dedup_minhash_lsh, dedup_simhash,
-ngram_jaccard, embedding_topk (+ rows-only LSH/IVF/multimodal/streaming
+ngram_jaccard, embedding_topk (+ rows-only LSH/IVF/multimodal
 variants), lang_id, quality_score, token_count, fingerprint,
 winnow_fingerprint + winnow_overlap (rolling-hash local overlap),
 hash_split_assign + stratified_sample (deterministic splits),
@@ -493,7 +493,7 @@ _register(
 
 def _q_sessionize(spark, sf_dir):
     """Stateful sessionization in batch: 30-min-gap sessions per user via
-    lag + cumulative sum (the batch twin of the streaming session op)."""
+    lag + cumulative sum."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
@@ -636,7 +636,7 @@ _mh_band_rows = " UNION ALL ".join(
 # operator with the web-scale bucket cap engaged (strictly more logic,
 # identical output on this corpus), and the uncapped shingle→signature→
 # band→join pipeline stays exact-oracled through dedup_lsh_verify's
-# uncapped candidate CTE (bench.py's headliner moved to the capped name)
+# uncapped candidate CTE
 
 
 # shared oracle CTE prefix: shingles → signatures → band keys → distinct
@@ -728,8 +728,7 @@ _register(
 
 def _q_lsh_bucket_keepers(spark, sf_dir):
     """Collision-only LSH admission (dedup.lsh_bucket_keepers): a doc is
-    dropped iff any band bucket holds a smaller id — the batch twin of
-    the streaming near-dup gate (streaming/lsh.py), order-independent
+    dropped iff any band bucket holds a smaller id — order-independent
     min-per-bucket rule, no Jaccard verify."""
     from crawlspark.operators.dedup import lsh_bucket_keepers
 
@@ -1690,51 +1689,6 @@ _register("chunk_documents", _q_chunk_documents, None)
 _TAIL_ORACLES["chunk_documents"] = _chunk_tail_oracle()
 
 
-# -- page metadata (title / description / charset / og:title) ------------------
-# Planted head built portably from doc_id: title always present (case
-# varies), description on every 2nd page (with a duplicate to pin
-# first-wins), charset as HTML5 attr or legacy http-equiv, og on 5ths.
-_PAGEMETA_HTML = (
-    "'<TITLE>Doc ' || CAST(doc_id AS STRING) || '</TITLE>'"
-    " || CASE WHEN doc_id % 2 = 0 THEN"
-    "   '<meta name=\"description\" content=\"summary ' || CAST(doc_id % 7 AS STRING) || '\">' ||"
-    "   '<meta name=\"description\" content=\"dup never wins\">' ELSE '' END"
-    " || CASE CAST(doc_id % 3 AS INT)"
-    "   WHEN 0 THEN '<meta charset=\"UTF-8\">'"
-    "   WHEN 1 THEN '<meta http-equiv=\"Content-Type\" content=\"text/html; charset=iso-8859-1\">'"
-    "   ELSE '' END"
-    " || CASE WHEN doc_id % 5 = 0 THEN"
-    "   '<meta property=\"og:title\" content=\"OG ' || CAST(doc_id AS STRING) || '\">' ELSE '' END"
-    " || '<p>' || text || '</p>'"
-)
-
-
-def _q_page_metadata(spark, sf_dir):
-    """Head-metadata extraction (pagemeta.page_metadata): title /
-    meta description (first wins) / declared charset (HTML5 + legacy
-    http-equiv) / og:title over deterministically planted heads."""
-    from crawlspark.operators.pagemeta import page_metadata
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_PAGEMETA_HTML).alias("html")
-    )
-    return page_metadata(docs)
-
-
-def _pagemeta_tail_oracle() -> str:
-    from crawlspark.operators.pagemeta import page_metadata_sql
-
-    html = _PAGEMETA_HTML.replace("AS STRING)", "AS VARCHAR)").replace(
-        "CAST(doc_id % 3 AS INT)", "CAST(doc_id % 3 AS INTEGER)"
-    )
-    inner = f"(SELECT doc_id, {html} AS html FROM documents) d"
-    return page_metadata_sql(table=inner, html_col="html")
-
-
-_register("page_metadata", _q_page_metadata, None)
-_TAIL_ORACLES["page_metadata"] = _pagemeta_tail_oracle()
-
-
 def _pct_x10_expr(mult: int) -> str:
     """EXACT interpolated percentile in integer x10 micro-units over a
     sorted array column `arr` of BIGINTs with `n = size(arr)`:
@@ -2012,8 +1966,7 @@ _register(
 # only the FIRST 50 registered queries, so every exact-oracled query must
 # be registered ABOVE this header and the header section must hold ONLY
 # rows-only registrations (their semantics are pinned by tests/ instead:
-# ANN recall floors in test_similarity.py, streaming never-reemit and
-# incremental==batch in test_streaming.py, the crawl trace in
+# ANN recall floors in test_similarity.py, the crawl trace in
 # test_web_crawl.py). tests/test_query_contract.py pins this invariant.
 # ---------------------------------------------------------------------------
 
@@ -2130,64 +2083,6 @@ def _q_image_phash_dedup(spark, sf_dir):
 
 
 _register("image_phash_dedup", _q_image_phash_dedup, None)
-
-
-def _q_stream_dedup_mini(spark, sf_dir):
-    """Structured Streaming surfaced in the query contract: one
-    availableNow run of the checkpointed ingest dedup
-    (streaming/dedup.py — dropDuplicates on content fingerprint) over
-    the documents table in a fresh workdir, returning the emitted
-    first-seen (doc_id, fp) rows. Rows-only: streaming state isn't
-    SQL-expressible; the batch twin ``dedup_exact`` carries the exact
-    oracle and tests/test_streaming.py pins the never-reemit contract."""
-    import tempfile
-
-    from crawlspark.streaming.dedup import read_deduped, stream_exact_dedup
-
-    work = tempfile.mkdtemp(prefix="streamdedup")
-    in_dir = os.path.join(work, "in")
-    os.makedirs(in_dir)
-    os.symlink(
-        os.path.join(sf_dir, "documents.parquet"),
-        os.path.join(in_dir, "documents.parquet"),
-    )
-    q = stream_exact_dedup(
-        spark, in_dir, os.path.join(work, "ckpt"), os.path.join(work, "out")
-    )
-    q.awaitTermination(300)
-    return read_deduped(spark, os.path.join(work, "out"))
-
-
-_register("stream_dedup_mini", _q_stream_dedup_mini, None)
-
-
-def _q_stream_sessionize_mini(spark, sf_dir):
-    """Custom stateful streaming operator surfaced in the query
-    contract: one availableNow run of the applyInPandasWithState
-    sessionizer (streaming/sessions.py — O(1) per-user state,
-    vectorized per-batch) over the events table in a fresh workdir.
-    Rows-only: streaming state isn't SQL-expressible; the batch twin
-    ``sessionize`` carries the exact oracle and
-    tests/test_streaming.py pins incremental == batch."""
-    import tempfile
-
-    from crawlspark.streaming.sessions import read_sessions, stream_sessionize
-
-    work = tempfile.mkdtemp(prefix="streamsess")
-    in_dir = os.path.join(work, "in")
-    os.makedirs(in_dir)
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(in_dir, "events.parquet"),
-    )
-    q = stream_sessionize(
-        spark, in_dir, os.path.join(work, "ckpt"), os.path.join(work, "out")
-    )
-    q.awaitTermination(300)
-    return read_sessions(spark, os.path.join(work, "out"))
-
-
-_register("stream_sessionize_mini", _q_stream_sessionize_mini, None)
 
 
 def _q_crawl_mini_epoch(spark, sf_dir):
@@ -2470,113 +2365,6 @@ def _ccnet_tail_oracle() -> str:
 
 _register("ccnet_bucket", _q_ccnet_buckets, None)
 _TAIL_ORACLES["ccnet_bucket"] = _ccnet_tail_oracle()
-
-
-# -- encoding-artifact repair (ftfy-shaped mojibake / NBSP / control fix) ------
-# Artifacts planted deterministically from doc_id with an expression
-# valid in BOTH engines (chr(), CASE, || all portable): every third doc
-# gets cp1252 mojibake, every fifth a C0 control + NBSP.
-_FIX_SUFFIX = (
-    "CASE WHEN doc_id % 3 = 0 THEN ' itâ€™s â€œmojibakeâ€¦ Ã©tÃ©' ELSE '' END"
-    " || CASE WHEN doc_id % 5 = 0 THEN chr(31) || 'ctl' || chr(160) || 'nb'"
-    " ELSE '' END"
-)
-
-
-def _q_repair_encoding(spark, sf_dir):
-    """Mojibake / NBSP / control-char repair with per-class corruption
-    counts (fixtext.repair_encoding) over documents with
-    deterministically planted cp1252 artifacts."""
-    from crawlspark.operators.fixtext import repair_encoding
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.concat(F.col("text"), F.expr(_FIX_SUFFIX)).alias("text")
-    )
-    return repair_encoding(docs)
-
-
-def _repair_tail_oracle() -> str:
-    from crawlspark.operators.fixtext import repair_encoding_sql
-
-    inner = f"(SELECT doc_id, text || ({_FIX_SUFFIX}) AS text FROM documents) d"
-    return repair_encoding_sql(table=inner)
-
-
-_register("repair_encoding", _q_repair_encoding, None)
-_TAIL_ORACLES["repair_encoding"] = _repair_tail_oracle()
-
-
-# -- lexical retrieval: inverted index + exact-integer BM25-shaped top-k -------
-# Queries synthesized from the corpus itself (2 words from every 41st
-# doc), so hits are guaranteed and scores exercise tf-saturation, the
-# idf surrogate, and multi-term summation.
-def _q_retrieve_topk(spark, sf_dir):
-    from crawlspark.operators.retrieval import retrieve_topk
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    qs = d.where(F.col("doc_id") % 41 == 0).select(
-        F.col("doc_id").alias("query_id"),
-        F.concat_ws(" ", F.slice(F.split("text", " "), 3, 2)).alias("qtext"),
-    )
-    return retrieve_topk(d, qs, k=5)
-
-
-def _retrieve_tail_oracle() -> str:
-    from crawlspark.operators.retrieval import retrieve_topk_sql
-
-    queries_cte = (
-        "SELECT doc_id AS query_id, "
-        "array_to_string(string_split(text, ' ')[3:4], ' ') AS qtext "
-        "FROM documents WHERE doc_id % 41 = 0"
-    )
-    return retrieve_topk_sql(queries_cte, k=5)
-
-
-_register("retrieve_topk", _q_retrieve_topk, None)
-_TAIL_ORACLES["retrieve_topk"] = _retrieve_tail_oracle()
-
-
-# -- robots-meta + rel=nofollow link admission ---------------------------------
-# Deterministic page HTML from doc_id: every 4th page noindex+nofollow
-# via meta (two attribute orders + a 'none' shorthand + an irrelevant
-# directive), every page one plain link, every 3rd an extra
-# rel=nofollow link.
-_ROBOTSMETA_HTML = (
-    "'<p>' || text || '</p>'"
-    " || CASE doc_id % 4"
-    "      WHEN 0 THEN '<meta name=\"robots\" content=\"noindex, nofollow\">'"
-    "      WHEN 1 THEN '<META CONTENT=\"none\" NAME=\"robots\">'"
-    "      WHEN 2 THEN '<meta name=\"robots\" content=\"noarchive\">'"
-    "      ELSE '' END"
-    " || '<a href=\"/l' || CAST(doc_id % 7 AS STRING) || '\">t</a>'"
-    " || CASE WHEN doc_id % 3 = 0"
-    "      THEN '<a rel=\"nofollow\" href=\"/n' || CAST(doc_id % 5 AS STRING)"
-    "           || '\">u</a>' ELSE '' END"
-)
-
-
-def _q_admissible_links(spark, sf_dir):
-    """Per-link crawl admission under page-level robots directives
-    (robotsmeta.admissible_links): meta noindex/nofollow/none parsing +
-    rel=nofollow link verdicts over deterministically planted HTML."""
-    from crawlspark.operators.robotsmeta import admissible_links
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_ROBOTSMETA_HTML).alias("html")
-    )
-    return admissible_links(docs)
-
-
-def _robotsmeta_tail_oracle() -> str:
-    from crawlspark.operators.robotsmeta import admissible_links_sql
-
-    html = _ROBOTSMETA_HTML.replace("AS STRING)", "AS VARCHAR)")
-    inner = f"(SELECT doc_id, {html} AS html FROM documents) d"
-    return admissible_links_sql(table=inner, html_col="html")
-
-
-_register("admissible_links", _q_admissible_links, None)
-_TAIL_ORACLES["admissible_links"] = _robotsmeta_tail_oracle()
 
 
 # -- corpus mixing: exact Hamilton apportionment of a token budget -------------
@@ -2965,29 +2753,6 @@ def _dust_tail_oracle() -> str:
 
 _register("dust_rules", _q_dust_rules, None)
 _TAIL_ORACLES["dust_rules"] = _dust_tail_oracle()
-
-
-# -- curation funnel: staged keep/kill with first-kill attribution -------------
-# The published-style pipeline audit (operators/funnel.py) composing
-# lang gate -> Gopher length -> top-token repetition -> exact dedup ->
-# decontamination over the documents table, benchmark = doc_id % 37
-# (decontam's own deterministic benchmark convention).
-def _q_curation_funnel(spark, sf_dir):
-    from crawlspark.operators.funnel import curation_funnel
-
-    d = _t(spark, sf_dir, "documents")
-    bench = d.where(F.col("doc_id") % 37 == 0).select("text")
-    return curation_funnel(d, bench)
-
-
-def _funnel_tail_oracle() -> str:
-    from crawlspark.operators.funnel import curation_funnel_sql
-
-    return curation_funnel_sql(bench_pred="doc_id % 37 = 0")
-
-
-_register("curation_funnel", _q_curation_funnel, None)
-_TAIL_ORACLES["curation_funnel"] = _funnel_tail_oracle()
 
 
 # -- inbound anchor-text aggregation ------------------------------------------

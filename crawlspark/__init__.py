@@ -10,15 +10,20 @@ frontier/politeness/seen-set machinery a web-scale crawl needs
 
 Layout:
   sources/    table storage: epoch-manifest parquet tables (Iceberg-like
-              atomic commits without the Iceberg runtime)
-  functions/  scalar/vectorized column functions (url parsing, html→text
-              extraction, hashing, time formatting)
+              atomic commits without the Iceberg runtime) and the disk
+              mirror of downloaded documents
+  functions/  scalar/vectorized column functions (url parsing and
+              canonical forms, html→text extraction, mirror paths)
   operators/  relational operators (cursor filters, ordered top-K,
-              politeness dequeue, bloom seen-set, dedup, similarity,
-              text analysis)
+              interval joins, politeness dequeue, robots, bloom seen-set,
+              url guards, JSON rewrite, inline text analysis; and the
+              data-curation operators behind ``__spark_entry__.py``:
+              dedup, similarity, text filters, multimodal decode)
   plans/      multi-step dataflows (catalog crawl, web crawl epochs,
               incremental reports, checkpoint state)
-  streaming/  structured-streaming variants of the incremental reports
+  __main__    the ``python -m crawlspark`` CLI: ``crawl``, ``download``
+              and ``update-reports``
+  testdata    deterministic synthetic corpora for tests and examples
 """
 
 __version__ = "0.1.0"

@@ -26,7 +26,7 @@ import zlib
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BinaryType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 _P_OPEN = b"<p>"
 _P_CLOSE = b"</p>"
@@ -85,22 +85,9 @@ def _extract_links_bytes(html: bytes | None) -> list[str]:
     return out
 
 
-@F.pandas_udf(BinaryType())
-def gunzip_udf(payload: pd.Series) -> pd.Series:
-    """Standalone transparent-decompression column for pipelines that
-    materialize inflated html (the extraction UDFs below already gunzip
-    inline, so the fetch path never needs this extra pass)."""
-    return payload.map(_maybe_gunzip)
-
-
 @F.pandas_udf(StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(lambda b: _extract_text_bytes(_maybe_gunzip(b)))
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def extract_links_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: _extract_links_bytes(_maybe_gunzip(b)))
 
 
 @F.pandas_udf(StructType([

@@ -49,12 +49,6 @@ def hash_prefix_bin(key: Column | str, levels: int = 1) -> Column:
     return F.concat_ws("/", *parts)
 
 
-def host_shard(url: Column | str, num_shards: int) -> Column:
-    """Stable shard id for a url's host — the frontier partition key.
-    Hot hosts are later salted on top of this (operators/politeness)."""
-    return F.pmod(F.xxhash64(host_of(url)), F.lit(num_shards)).cast("int")
-
-
 def normalize_url(url: Column | str) -> Column:
     """RFC-3986-style safe normalization, as pure regexp expressions
     (every step dialect-portable — the oracle runs the same chain):

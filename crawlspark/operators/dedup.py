@@ -290,10 +290,9 @@ def lsh_bucket_keepers(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     """Collision-only LSH admission: ``(id, admitted)`` where a doc is
     dropped iff ANY of its band buckets (band_idx, band_key) contains a
     smaller doc id — the pure min-per-bucket rule, no Jaccard verify.
-    Order-independent by construction (a min over each bucket), which
-    is what makes it the batch twin of the STREAMING gate
-    (streaming/lsh.py): a first-arrival-wins stream equals this rule
-    exactly when docs arrive in id order. Use :func:`lsh_dedup_keepers`
+    Order-independent by construction (a min over each bucket): a
+    first-arrival-wins stream equals this rule exactly when docs arrive
+    in id order. Use :func:`lsh_dedup_keepers`
     when you want verified (higher-precision) batch dedup; this rule
     trades false drops for a verify-free single aggregate.
 

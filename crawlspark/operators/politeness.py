@@ -218,7 +218,6 @@ def topk_per_host_split(
     host_budgets: DataFrame | None,
     default_budget: int,
     salt: int = 8,
-    checkpoint: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Politeness dequeue returning (dequeued, remainder, phase1_cache).
 
@@ -242,11 +241,7 @@ def topk_per_host_split(
     df = df.withColumn("__salt", F.pmod(F.xxhash64("url"), F.lit(salt)).cast("int"))
     w1 = Window.partitionBy("host", "__salt").orderBy(*order)
     phase1 = df.withColumn("__rn1", F.row_number().over(w1))
-    # checkpoint=True swaps the cache for localCheckpoint(eager=False):
-    # same one-materialization reuse, but the lineage is truncated so
-    # every downstream action stops re-analyzing the pre-dequeue plan
-    # tree (measured A/B in BENCH/BASELINE.md round 5)
-    phase1 = phase1.localCheckpoint(eager=False) if checkpoint else phase1.cache()
+    phase1 = phase1.cache()
 
     out_cols = [c for c in candidates.columns]
     kept = phase1.where(F.col("__rn1") <= F.col("__budget"))

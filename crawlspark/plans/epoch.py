@@ -231,12 +231,6 @@ class CrawlConfig:
     # always-on QA that tolerates the 1.5x.
     analyze: bool = False
     broadcast_threshold: int = 100_000  # dequeues larger than this use a shuffle-hash join
-    phase1_checkpoint: bool = False  # politeness phase-1 relation: localCheckpoint
-    # instead of cache (round-5 A/B lever — see BENCH/BASELINE.md)
-    local_checkpoint: bool = False   # truncate plan lineage at the epoch's cached
-    # relations: the epoch plan tree is deep, and every downstream action pays
-    # Catalyst analysis of the whole tree; checkpointing caps driver-side
-    # planning cost per epoch (use reliable checkpoints on a real cluster)
 
     def validate(self) -> None:
         if self.default_budget < 1:
@@ -377,9 +371,8 @@ def web_crawl(
             break
         tmark[0] = time.time()
         # tag every job this epoch submits — the Spark UI groups them,
-        # and event-log analysis (tools/scaling_ab.py) filters the timed
-        # epoch loop from warmup/generation jobs by prefix + state dir
-        # (the bench warmup crawls into a `warmcrawl*` temp dir)
+        # and event-log analysis (perfbench/tracing.py) tells the epoch
+        # loop's jobs from setup jobs by this prefix
         spark.sparkContext.setLocalProperty(
             "spark.job.description", f"crawl-epoch-{epoch}:{state_dir}"
         )
@@ -438,17 +431,13 @@ def web_crawl(
         if cfg.global_budget_per_epoch is None:
             dequeued, remaining, phase1 = topk_per_host_split(
                 allowed, epoch_budgets, cfg.default_budget, salt=cfg.salt,
-                checkpoint=cfg.phase1_checkpoint,
             )
         else:
-            phase1 = (
-                allowed.localCheckpoint(eager=False)
-                if cfg.phase1_checkpoint else allowed.cache()
-            )
+            phase1 = allowed.cache()
             dequeued = topk_per_host(phase1, epoch_budgets, cfg.default_budget, salt=cfg.salt)
             dequeued = ordered_limit(dequeued, cfg.global_budget_per_epoch, list(ORDER_COLS))
             remaining = None  # derived below from the final dequeued set
-        dequeued = dequeued.localCheckpoint(eager=False) if cfg.local_checkpoint else dequeued.cache()
+        dequeued = dequeued.cache()
         if remaining is None:
             remaining = phase1.join(dequeued.select("url"), "url", "left_anti")
 
@@ -547,11 +536,11 @@ def web_crawl(
                     "quality_micro": F.lit(None).cast("long"),
                 })
             # single pages scan + single html decode; html never cached
-            base = base.localCheckpoint(eager=False) if cfg.local_checkpoint else base.cache()
+            base = base.cache()
             # ONE observation on the full dequeued-outcome relation: row
             # counts, byte sum and cursor come out of the write job itself —
             # no standalone count() actions (driver-latency lever). The
-            # observe node sits ABOVE the cache/checkpoint boundary and only
+            # observe node sits ABOVE the cache boundary and only
             # on the branch feeding write A, so it fires exactly once.
             obs = Observation(f"epoch_{epoch}_py" if python else f"epoch_{epoch}")
             base_obs = base.observe(

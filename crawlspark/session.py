@@ -11,6 +11,7 @@ vectorized pandas-UDF path mandated by BASELINE.json input_hint.
 from __future__ import annotations
 
 import os
+import re
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -42,6 +43,19 @@ def default_driver_memory(ram_bytes: int | None = None) -> str:
     return f"{max(1, min(16, ram_bytes // 2 // 2**30))}g"
 
 
+def master_cores(master: str) -> int:
+    """Core count a Spark master string asks for: N for ``local[N]`` and
+    ``local[N,F]``, n·c for ``local-cluster[n,c,m]``, and the machine's
+    CPU count for ``local[*]`` and every other master."""
+    m = re.fullmatch(r"local\[(\d+)(?:\s*,\s*\d+)?\]", master)
+    if m:
+        return int(m.group(1))
+    m = re.fullmatch(r"local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*\d+\s*\]", master)
+    if m:
+        return int(m.group(1)) * int(m.group(2))
+    return os.cpu_count() or 8
+
+
 def get_spark(
     app_name: str = "crawlspark",
     master: str | None = None,
@@ -59,9 +73,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        # parse local[N]; fall back to os.cpu_count
-        inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
-        shuffle_partitions = os.cpu_count() or 8 if inner == "*" else int(inner)
+        shuffle_partitions = master_cores(master)
 
     builder = (
         SparkSession.builder.master(master)

@@ -3,7 +3,7 @@
 import pyspark.sql.types as T
 from pyspark.sql import functions as F
 
-from crawlspark.functions.extract import extract_links_udf, extract_text_udf
+from crawlspark.functions.extract import extract_links, extract_text_udf
 from crawlspark.functions.urls import is_valid_http_url
 from crawlspark.testdata import build_pages, pages_only
 
@@ -41,7 +41,7 @@ def test_links_are_valid_corpus_urls(spark):
     urls = {r["url"] for r in full.select("url").collect()}
     links = (
         pages_only(full)
-        .select(F.explode(extract_links_udf(F.col("html"))).alias("link"))
+        .select(F.explode(extract_links(F.col("html"))).alias("link"))
         .collect()
     )
     assert len(links) > 0

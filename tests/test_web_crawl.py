@@ -228,31 +228,6 @@ def test_fetch_join_strategies_agree(spark, tmp_path):
     assert traces[100_000] == traces[0]
 
 
-def test_phase1_checkpoint_matches_cache(spark, tmp_path):
-    """phase1_checkpoint=True (politeness phase-1 via localCheckpoint,
-    the bench default since round 5) must produce the identical trace
-    as the cache() path."""
-    from crawlspark.testdata import write_corpus
-
-    d = str(tmp_path / "c")
-    paths = write_corpus(spark, d, n_pages=120, n_hosts=6)
-    pages = spark.read.parquet(paths["pages"])
-    seeds = spark.read.parquet(paths["seeds"])
-    traces = {}
-    for ckpt in (False, True):
-        sd = str(tmp_path / f"s{ckpt}")
-        web_crawl(
-            spark, pages, sd, seeds,
-            config=CrawlConfig(default_budget=6, max_epochs=15,
-                               phase1_checkpoint=ckpt),
-        )
-        traces[ckpt] = [
-            (r["epoch"], r["url"], r["status"], r["text"])
-            for r in CrawlState(sd).fetched.read(spark).orderBy("epoch", "url").collect()
-        ]
-    assert traces[False] == traces[True]
-
-
 def test_global_budget_caps_epoch(spark, tmp_path):
     from crawlspark.testdata import write_corpus
 
