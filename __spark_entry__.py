@@ -1667,28 +1667,6 @@ _register("classifier_auc", _q_classifier_auc, None)
 _TAIL_ORACLES["calibration_bins"], _TAIL_ORACLES["classifier_auc"] = _eval_oracles()
 
 
-def _q_chunk_documents(spark, sf_dir):
-    """Embedding-pipeline chunking (chunking.chunk_documents): sliding
-    32-token windows with 8-token overlap, per-chunk provenance
-    (start_tok / n_tok), pure per-row array algebra + one explode."""
-    from crawlspark.operators.chunking import chunk_documents
-
-    return chunk_documents(
-        _t(spark, sf_dir, "documents").select("doc_id", "text"),
-        chunk_tokens=32, overlap=8,
-    )
-
-
-def _chunk_tail_oracle() -> str:
-    from crawlspark.operators.chunking import chunk_documents_sql
-
-    return chunk_documents_sql(chunk_tokens=32, overlap=8)
-
-
-_register("chunk_documents", _q_chunk_documents, None)
-_TAIL_ORACLES["chunk_documents"] = _chunk_tail_oracle()
-
-
 def _pct_x10_expr(mult: int) -> str:
     """EXACT interpolated percentile in integer x10 micro-units over a
     sorted array column `arr` of BIGINTs with `n = size(arr)`:
@@ -2367,38 +2345,6 @@ _register("ccnet_bucket", _q_ccnet_buckets, None)
 _TAIL_ORACLES["ccnet_bucket"] = _ccnet_tail_oracle()
 
 
-# -- corpus mixing: exact Hamilton apportionment of a token budget -------------
-# Weights derived per-source by the same deterministic expression both
-# engines evaluate; target chosen so allocations force remainder
-# distribution (not divisible by the weight sum).
-def _q_corpus_mix(spark, sf_dir):
-    """Training-mix planning (mixing.corpus_mix_plan): largest-remainder
-    apportionment of a 1M-token budget across sources — exact integers,
-    sum(alloc) == target as an identity — plus per-source epoch
-    pressure (epochs_micro)."""
-    from crawlspark.operators.mixing import corpus_mix_plan, source_token_stats
-
-    d = _t(spark, sf_dir, "documents").select("source", "text")
-    # checkpoint: the weights branch below is a second consumer of the
-    # rollup — without the barrier the corpus aggregates twice
-    stats = source_token_stats(d).localCheckpoint(eager=True)
-    weights = stats.select(
-        "source",
-        (F.lit(100) + F.length("source") * 37 % 400).cast("long").alias("weight"),
-    )
-    return corpus_mix_plan(stats, weights, 1_000_003)
-
-
-def _mixing_tail_oracle() -> str:
-    from crawlspark.operators.mixing import corpus_mix_plan_sql
-
-    return corpus_mix_plan_sql(1_000_003)
-
-
-_register("corpus_mix", _q_corpus_mix, None)
-_TAIL_ORACLES["corpus_mix"] = _mixing_tail_oracle()
-
-
 # -- mirror-path formatting (O25/O26 + --format-paths) -----------------------
 # URL → disk-mirror destination with the reference's directory-fanout
 # sharding (PathFormatter.cs:30-60, Downloader.cs:246-279). The synthetic
@@ -2703,108 +2649,6 @@ _register("recrawl_schedule", _q_recrawl_schedule, None)
 _TAIL_ORACLES["recrawl_schedule"] = _recrawl_tail_oracle()
 
 
-# -- DUST: learned content-irrelevant URL parameters ---------------------------
-# DustBuster's query-param fragment (operators/dust.py) over a url/fp
-# relation synthesized from events: ~10 hosts x 5 paths x 4 ids; 'sid'
-# rides along on every third url and never affects the fingerprint
-# (accepted), 'v' rides along on every fifth and DOES (counter-evidence
-# kills it), ids are always present (never a candidate).
-def _q_dust_rules(spark, sf_dir):
-    from crawlspark.operators.dust import mine_dust_rules
-
-    ev = _t(spark, sf_dir, "events")
-    host = F.concat(F.lit("h"), (F.col("user_id") % 10).cast("string"), F.lit(".com"))
-    path = F.concat(F.lit("/p"), (F.col("event_id") % 5).cast("string"))
-    idv = (F.col("event_id") % 4).cast("string")
-    sid = F.when(
-        F.col("event_id") % 3 == 0,
-        F.concat(F.lit("&sid="), (F.col("event_id") % 2).cast("string")),
-    ).otherwise(F.lit(""))
-    vpart = F.when(
-        F.col("event_id") % 5 == 0,
-        F.concat(F.lit("&v="), (F.col("event_id") % 2).cast("string")),
-    ).otherwise(F.lit(""))
-    url = F.concat(
-        F.lit("http://"), host, path, F.lit("?id="), idv, sid, vpart
-    )
-    fp = F.md5(F.concat(host, path, F.lit("#"), idv, F.lit("#"), vpart))
-    obs = ev.select(url.alias("url"), fp.alias("content_fp"))
-    return mine_dust_rules(obs, min_support=3)
-
-
-def _dust_tail_oracle() -> str:
-    from crawlspark.operators.dust import mine_dust_rules_sql
-
-    obs = """(SELECT
-        'http://h' || CAST(user_id % 10 AS VARCHAR) || '.com/p'
-          || CAST(event_id % 5 AS VARCHAR) || '?id=' || CAST(event_id % 4 AS VARCHAR)
-          || CASE WHEN event_id % 3 = 0
-                  THEN '&sid=' || CAST(event_id % 2 AS VARCHAR) ELSE '' END
-          || CASE WHEN event_id % 5 = 0
-                  THEN '&v=' || CAST(event_id % 2 AS VARCHAR) ELSE '' END AS url,
-        md5('h' || CAST(user_id % 10 AS VARCHAR) || '.com/p'
-          || CAST(event_id % 5 AS VARCHAR) || '#' || CAST(event_id % 4 AS VARCHAR)
-          || '#'
-          || CASE WHEN event_id % 5 = 0
-                  THEN '&v=' || CAST(event_id % 2 AS VARCHAR) ELSE '' END) AS content_fp
-      FROM events) dustsrc"""
-    return mine_dust_rules_sql(obs, min_support=3)
-
-
-_register("dust_rules", _q_dust_rules, None)
-_TAIL_ORACLES["dust_rules"] = _dust_tail_oracle()
-
-
-# -- inbound anchor-text aggregation ------------------------------------------
-# The classic web-graph text signal, over the same deterministic link
-# graph as `pagerank` with anchors cut from the source doc's text
-# (2 words at a src-dependent offset — deterministic variety, many
-# targets receive the same anchor from different sources).
-def _q_anchor_text(spark, sf_dir):
-    from crawlspark.operators.anchors import aggregate_anchor_text
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    n = d.groupBy().count().withColumnRenamed("count", "n")
-    a = d.crossJoin(F.broadcast(n))
-    # single-word anchors off a src-dependent offset: the ~30-word
-    # synthetic vocabulary makes anchors collide, so counts (not just
-    # the tie-break) drive the rank; the % 97 hub edge gives dsts < 97
-    # web-like indegree skew, same shape as the pagerank graph
-    anchor = F.element_at(F.split("text", " "), (F.col("doc_id") % 4 + 1).cast("int"))
-    # ONE corpus scan: the four edge families explode from an array per
-    # row instead of a 4-branch union that re-scanned documents (and
-    # re-evaluated the anchor split) per branch — same rows, and the
-    # downstream aggregation is order-insensitive (r6)
-    dsts = F.array(
-        *[((F.col("doc_id") * mult + off) % F.col("n"))
-          for mult, off in ((7, 1), (31, 2), (101, 3))],
-        F.col("doc_id") % 97,
-    )
-    edges = a.select(F.explode(dsts).alias("dst"), anchor.alias("anchor"))
-    return aggregate_anchor_text(edges, k_top=3, salt=4)
-
-
-def _anchor_tail_oracle() -> str:
-    from crawlspark.operators.anchors import aggregate_anchor_text_sql
-
-    anchor = "string_split(text, ' ')[CAST(a.doc_id % 4 + 1 AS INT)]"
-    edges = f"""
-      WITH nn AS (SELECT count(*) AS n FROM documents)
-      SELECT (a.doc_id * 7 + 1) % nn.n AS dst, {anchor} AS anchor FROM documents a, nn
-      UNION ALL
-      SELECT (a.doc_id * 31 + 2) % nn.n, {anchor} FROM documents a, nn
-      UNION ALL
-      SELECT (a.doc_id * 101 + 3) % nn.n, {anchor} FROM documents a, nn
-      UNION ALL
-      SELECT a.doc_id % 97, {anchor} FROM documents a
-    """
-    return aggregate_anchor_text_sql(edges, k_top=3)
-
-
-_register("anchor_text_agg", _q_anchor_text, None)
-_TAIL_ORACLES["anchor_text_agg"] = _anchor_tail_oracle()
-
-
 # -- robots.txt Sitemap directive capture -------------------------------------
 # Host-global Sitemap: lines (sitemaps.org protocol) captured by the
 # same expression-only line fold as the disallow rules — the discovery
@@ -2864,56 +2708,6 @@ def _robots_sm_tail_oracle() -> str:
 
 _register("robots_sitemaps", _q_robots_sitemaps, None)
 _TAIL_ORACLES["robots_sitemaps"] = _robots_sm_tail_oracle()
-
-
-# -- redirect-chain resolution -------------------------------------------------
-# Pointer-doubling fixpoint (O(log max_hops) self-joins) vs the DuckDB
-# recursive-CTE walk — chains, a planted self-loop (doc 3) and 2-cycle
-# (13<->23), and whatever loops the functional graph x -> (2x+1) % n
-# produces, identically in both engines. ~40% of documents redirect.
-_REDIR_PLANTS = "CASE WHEN doc_id = 3 THEN 3 WHEN doc_id = 13 THEN 23 WHEN doc_id = 23 THEN 13 ELSE (doc_id * 2 + 1) % {n} END"
-
-
-def _q_redirect_resolve(spark, sf_dir):
-    from crawlspark.operators.redirects import resolve_redirects
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    n = d.groupBy().count().withColumnRenamed("count", "n")
-    a = d.crossJoin(F.broadcast(n)).where(F.col("doc_id") % 10 < 4)
-
-    def url(i):
-        return F.concat(
-            F.lit("https://h"), (i % 41).cast("string"),
-            F.lit(".example/p"), i.cast("string"),
-        )
-
-    dst_id = (
-        F.when(F.col("doc_id") == 3, F.lit(3))
-        .when(F.col("doc_id") == 13, F.lit(23))
-        .when(F.col("doc_id") == 23, F.lit(13))
-        .otherwise((F.col("doc_id") * 2 + 1) % F.col("n"))
-    )
-    edges = a.select(url(F.col("doc_id")).alias("src"), url(dst_id).alias("dst"))
-    return resolve_redirects(edges)
-
-
-def _redirect_tail_oracle() -> str:
-    from crawlspark.operators.redirects import resolve_redirects_sql
-
-    u = "'https://h' || CAST({i} % 41 AS VARCHAR) || '.example/p' || CAST({i} AS VARCHAR)"
-    edges = f"""
-      WITH nn AS (SELECT count(*) AS n FROM documents)
-      SELECT {u.format(i='doc_id')} AS src,
-             {u.format(i='d2')} AS dst
-      FROM (
-        SELECT doc_id, {_REDIR_PLANTS.format(n='nn.n')} AS d2
-        FROM documents, nn WHERE doc_id % 10 < 4
-      )"""
-    return resolve_redirects_sql(edges)
-
-
-_register("redirect_resolve", _q_redirect_resolve, None)
-_TAIL_ORACLES["redirect_resolve"] = _redirect_tail_oracle()
 
 
 # -- spider-trap URL guards ----------------------------------------------------
@@ -3114,28 +2908,6 @@ _TAIL_ORACLES["backoff_derate"] = """
   FROM j ORDER BY host"""
 
 
-# -- host-level curation rollup --------------------------------------------------
-# RefinedWeb-style domain admission: per-host doc counts, corpus-wide
-# prefix-dup share (key = md5 of the first 40 chars — non-vacuous: 47
-# dup docs across hosts at sf0.01), token mass, dominant language, and
-# the keep decision, all micro-unit exact. operators/hoststats.py.
-def _q_host_curation(spark, sf_dir):
-    from crawlspark.operators.hoststats import host_curation_stats
-
-    return host_curation_stats(
-        _t(spark, sf_dir, "documents"),
-        key_prefix_len=40, min_docs=20, max_dup_share_micro=100_000,
-    )
-
-
-from crawlspark.operators.hoststats import host_curation_stats_sql  # noqa: E402
-
-_register("host_curation", _q_host_curation, None)
-_TAIL_ORACLES["host_curation"] = host_curation_stats_sql(
-    key_prefix_len=40, min_docs=20, max_dup_share_micro=100_000
-)
-
-
 # -- DSIR importance-weighted data selection --------------------------------------
 # Xie et al. 2023 hashed-bigram importance resampling, integer-exact:
 # fit target (lang='en' docs) and raw (all docs) hashed-bigram
@@ -3160,20 +2932,22 @@ _TAIL_ORACLES["dsir_select"] = dsir_sql(target_predicate="lang = 'en'", k=100)
 
 # ---------------------------------------------------------------------------
 # Round-5 window rotation (continuing the r4-verdict plan: every exact
-# oracle gets a green DRIVER CORRECTNESS row in some round). The nine
+# oracle gets a green DRIVER CORRECTNESS row in some round). The
 # demoted names below each carry a green row from CORRECTNESS_r04; the
-# nine promoted ones have never been driver-checked. Demoted queries
+# promoted ones have never been driver-checked. Demoted queries
 # stay exact-checked via tail_oracle_sql() + the pytest parity gate,
 # which runs the identical compare over windowed AND tail oracles.
 # ---------------------------------------------------------------------------
+# max_cursor, json_rewrite and (below) distinct_commits are not demoted,
+# so that the window keeps 50 oracled queries.
 _R5_DEMOTE = [
-    "max_cursor", "json_rewrite", "ngram_jaccard", "embedding_near_dups_exact",
+    "ngram_jaccard", "embedding_near_dups_exact",
     "top_token_frac", "paragraph_dedup", "sequence_pack", "hash_split_assign",
     "url_normalize",
 ]
 _R5_PROMOTE = [
-    "anchor_text_agg", "c4_line_filter", "gopher_quality", "robots_sitemaps",
-    "mirror_path", "redirect_resolve", "url_trap_filter", "blocklist_filter",
+    "c4_line_filter", "gopher_quality", "robots_sitemaps",
+    "mirror_path", "url_trap_filter", "blocklist_filter",
     "prioritized_dequeue",
 ]
 for _n in _R5_DEMOTE:
@@ -3181,19 +2955,18 @@ for _n in _R5_DEMOTE:
 for _n in _R5_PROMOTE:
     _ORACLES[_n] = _TAIL_ORACLES.pop(_n)
 
-# r5c (same session, later work): five more exact oracles landed after
+# r5c (same session, later work): more exact oracles landed after
 # the r5b rotation and have never been driver-checked — promote them;
-# the five demoted names are all green in CORRECTNESS_r04 and their
-# machinery stays exercised by windowed siblings (commit_budget_cutoff
-# covers the distinct+sort commit set; host_parse keeps the url
+# the demoted names are all green in CORRECTNESS_r04 and their
+# machinery stays exercised by windowed siblings (host_parse keeps the url
 # function family; gopher_quality/lang_id keep textops; simhash_pairs
 # subsumes the per-doc simhash agg it builds on).
 _R5C_DEMOTE = [
-    "distinct_commits", "hash_prefix_bin", "quality_score",
+    "hash_prefix_bin", "quality_score",
     "repetition_profile", "dedup_simhash",
 ]
 _R5C_PROMOTE = [
-    "backoff_derate", "host_curation", "dsir_select",
+    "backoff_derate", "dsir_select",
     "boilerplate_blocks", "recrawl_schedule",
 ]
 for _n in _R5C_DEMOTE:

@@ -8,25 +8,48 @@ over the pages log with its **own watermark cursor** (O30), updated by:
     delta  = pages WHERE warc_ts ∈ (cursor, max]          (O5)
     agg    = groupBy(key).agg(...)                         (O10/O18/O19)
     merged = (existing ∪ agg).groupBy(key).sum(...)        (O21 merge)
-    write  = orderBy(key) → atomic overwrite + CSV export  (O22/O17/O23)
+    write  = orderBy(key) → new version + CSV export       (O22/O17/O23)
 
 The merge is the reference's only join-like operator: a full-outer
 key-merge with element-wise sum (CsvAggregateReportVisitor.cs:21-74).
-At scale the overwrite becomes an Iceberg ``MERGE INTO``; the delta agg
-is map-side-partial and shuffles only the (tiny) key space.
+At scale the new version becomes an Iceberg ``MERGE INTO``; the delta
+agg is map-side-partial and shuffles only the (tiny) key space.
+
+Each report commits exactly like the crawl state (``sources/tables.py``),
+through its own ``CommitLog``:
+
+    {report_dir}/{name}.parquet/_commits.json   ← versions + cursor meta
+    {report_dir}/{name}.parquet/epoch={v}/      ← version v's rows
+    {report_dir}/{name}.csv                     ← single-file CSV mirror
+
+An update stages version v, writes the CSV, then commits v with the
+report's cursor in the commit meta (``{"cursors": {name: head}}``) — the
+one atomic step. A kill before the commit replays the same delta; a kill
+after it finds the cursor advanced. The append report (``deleted_pages``)
+adds one version per update and its live rows are every committed
+version; its CSV grows in place and the meta also records the CSV's
+committed length, to which a replay truncates a torn tail. An aggregate
+report's live rows are its latest version alone. Every other entry of
+the directory (older aggregate versions, uncommitted or torn stages) is
+deleted after each commit and at the start of each update, so at rest
+``{name}.parquet`` holds exactly the live rows (readers that skip
+``_``-prefixed names, such as pyarrow, need no commit log). One log per
+report, not per report dir: reports update independently (O30), and
+``EpochTable.read`` treats every committed epoch as present in its table.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from crawlspark.operators.ordering import EPOCH_MIN
+from crawlspark.sources.tables import CommitLog, EpochTable
 
 ISO_O_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSSXXX"  # DateTimeOffset "O" analog (O23)
 
@@ -66,7 +89,7 @@ def page_count_by_day_kind(delta: DataFrame) -> DataFrame:
         )
     )
     # O20 totals invariant, enforced IN the plan (raise_error fires during
-    # the write job, before the stage swap — the reference throws during
+    # the write job, before the commit — the reference throws during
     # visiting, CatalogLeafCountByTypeReportUpdater.cs:30-36) instead of a
     # standalone count action per update.
     guarded = F.when(
@@ -77,183 +100,156 @@ def page_count_by_day_kind(delta: DataFrame) -> DataFrame:
 
 # -- incremental store -------------------------------------------------------
 
+_DAY = T.StructField("day", T.TimestampType())
+
+# name -> (extractor, schema, sort/key columns, summed columns). Summed
+# columns None marks the append report: it adds a version per update
+# instead of merging into the latest one.
+_SPECS = {
+    "deleted_pages": (
+        deleted_pages,
+        T.StructType([T.StructField("warc_ts", T.TimestampType()), T.StructField("url", T.StringType())]),
+        ["warc_ts", "url"], None,
+    ),
+    "page_count_by_day": (
+        page_count_by_day,
+        T.StructType([_DAY, T.StructField("value", T.LongType())]),
+        ["day"], ["value"],
+    ),
+    "page_count_by_day_kind": (
+        page_count_by_day_kind,
+        T.StructType([_DAY, T.StructField("details", T.LongType()), T.StructField("deletes", T.LongType())]),
+        ["day"], ["details", "deletes"],
+    ),
+}
+
+REPORTS = tuple(_SPECS)
+
+# Per-report cursor and manifest files of the layout before reports
+# moved onto CommitLog.
+_OLD_LAYOUT = ("_cursor.", "_applied.")
+
+
 class ReportStore:
-    """Per-report parquet + CSV mirror + independent cursor file."""
+    """The report dir: per report, a CommitLog-governed directory of
+    versions plus a single-file CSV mirror."""
 
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+        old = sorted(f for f in os.listdir(root) if f.startswith(_OLD_LAYOUT))
+        if old:
+            # reports are derived data: rebuilding beats migrating, and an
+            # old flat {name}.parquet next to new versions would be
+            # double-counted
+            raise ValueError(
+                f"report dir {root} has the older cursor-file layout "
+                f"({', '.join(old)}); delete the directory and run "
+                "update-reports again to rebuild the reports from the pages log"
+            )
 
-    def _meta_path(self, name: str) -> str:
-        return os.path.join(self.root, f"_cursor.{name}.json")
+    def _table(self, name: str) -> EpochTable:
+        log = CommitLog(os.path.join(self.root, f"{name}.parquet"))
+        return EpochTable(self.root, f"{name}.parquet", _SPECS[name][1], log)
+
+    @staticmethod
+    def _live(name: str, table: EpochTable) -> list[int]:
+        epochs = table.log.committed_epochs()
+        return epochs if _SPECS[name][3] is None else epochs[-1:]
 
     def cursor(self, name: str, default: dt.datetime | None = None) -> dt.datetime:
         """Read-with-default (O29); ``default`` is the reference's
-        --default-cursor-value (UpdateReportsCommandHandler.cs:38-40,
-        Cursor.cs:12-27) — it seeds a BRAND-NEW report's cursor (e.g.
-        'reports from 2015 onward only'); a committed cursor always
-        wins. For append reports the manifest is the commit log: an
-        update whose data landed but whose cursor write was lost to a
-        crash is repaired here (effective cursor = max of the cursor
-        file and every applied update's head), so a replay neither
-        re-appends those rows nor skips rows that arrived after the
-        crash."""
-        p = self._meta_path(name)
-        base = default if default is not None else EPOCH_MIN
-        if os.path.exists(p):
-            with open(p) as f:
-                base = dt.datetime.fromisoformat(json.load(f)["cursor"])
-        applied = self._manifest(name)["applied"]
-        for head_iso in applied.values():
-            h = dt.datetime.fromisoformat(head_iso)
-            if h > base:
-                base = h
-        return base
+        --default-cursor-value (UpdateReportsCommandHandler.cs:38-40)."""
+        return self._table(name).log.cursor(name, default)
 
-    def _write_cursor(self, name: str, value: dt.datetime) -> None:
-        tmp = self._meta_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"cursor": value.isoformat()}, f)
-        os.replace(tmp, self._meta_path(name))
+    def read(self, spark: SparkSession, name: str) -> DataFrame:
+        """The report's live rows (empty before its first update)."""
+        table = self._table(name)
+        return table.read(spark, epochs=self._live(name, table)).drop("epoch")
 
-    def read(self, spark: SparkSession, name: str, schema=None) -> DataFrame | None:
-        p = os.path.join(self.root, f"{name}.parquet")
-        if not os.path.exists(p):
-            return None
-        # recursive: append-style reports are a directory of per-update
-        # subdirs (u_<cursor>/part-*.parquet); aggregate reports stay flat
-        return spark.read.option("recursiveFileLookup", "true").parquet(p)
+    def sweep(self, name: str) -> None:
+        """Delete every entry of the report's directory but the commit log
+        and its live versions: older aggregate versions and whatever a
+        killed update left uncommitted."""
+        table = self._table(name)
+        keep = {os.path.basename(table.log.path)}
+        keep.update(os.path.basename(table._epoch_dir(v)) for v in self._live(name, table))
+        for entry in os.listdir(table.dir):
+            path = os.path.join(table.dir, entry)
+            if entry in keep:
+                continue
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            else:
+                os.remove(path)
 
-    def _overwrite(self, df: DataFrame, name: str, order_cols: list[str]) -> None:
-        """Atomic read-merge-rewrite: stage, swap (the whole-file rewrite
-        of CsvAggregateReportVisitor.cs:60-73, made atomic). The plan is
-        executed exactly once, into the parquet stage; the CSV mirror is
-        derived from the staged files — re-running the merged plan after
-        the swap would read the (replaced) previous report."""
-        final = os.path.join(self.root, f"{name}.parquet")
-        stage = os.path.join(self.root, f"_stage.{name}.parquet")
-        df.orderBy(*order_cols).write.mode("overwrite").parquet(stage)  # O22 sort
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(stage, final)
-        # CSV mirror with round-trip timestamp format (O17/O23), from the
-        # materialized parquet
-        csv_stage = os.path.join(self.root, f"_stage.{name}.csv")
-        csv_final = os.path.join(self.root, f"{name}.csv")
-        out = df.sparkSession.read.parquet(final).orderBy(*order_cols)
-        for field in out.schema.fields:
-            if field.dataType.typeName() == "timestamp":
-                out = out.withColumn(field.name, F.date_format(field.name, ISO_O_FMT))
-        out.select(*df.columns).coalesce(1).write.mode("overwrite").option("header", True).csv(csv_stage)
-        if os.path.exists(csv_final):
-            shutil.rmtree(csv_final)
-        os.rename(csv_stage, csv_final)
+    def update(self, spark: SparkSession, name: str, delta: DataFrame, head: dt.datetime) -> None:
+        """Stage the next version of ``name`` from the pages ``delta``,
+        write the CSV mirror, and commit the version with cursor ``head``.
 
-    def update_aggregate(
-        self,
-        spark: SparkSession,
-        name: str,
-        delta_agg: DataFrame,
-        key_cols: list[str],
-        sum_cols: list[str],
-    ) -> None:
-        """O21: full-outer key-merge with element-wise sum."""
-        existing = self.read(spark, name)
-        merged = (
-            delta_agg if existing is None
-            else existing.unionByName(delta_agg)
-            .groupBy(*key_cols)
-            .agg(*[F.sum(c).alias(c) for c in sum_cols])
-        )
-        self._overwrite(merged, name, key_cols)
+        Append report (O17, CsvAppendReportVisitor.cs:20-41): the version
+        is the delta's rows alone, so an update costs O(delta) and never
+        rewrites history. Aggregate reports (O21,
+        CsvAggregateReportVisitor.cs:21-74): the version is the latest
+        one full-outer key-merged with the delta's aggregate."""
+        extract, _, keys, sums = _SPECS[name]
+        table = self._table(name)
+        last = table.log.last_epoch()
+        version = 0 if last is None else last + 1
+        rows = extract(delta)
+        if sums is not None and last is not None:
+            rows = (
+                self.read(spark, name).unionByName(rows)
+                .groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sums])
+            )
+        table.write_epoch(rows.orderBy(*keys), version)  # O22 sort
+        meta = {"cursors": {name: head.isoformat()}}
+        if sums is None:
+            committed = 0 if last is None else table.log.read()["meta"][str(last)]["csv_len"]
+            meta["csv_len"] = self._write_csv(spark, name, table, version, committed)
+        else:
+            self._write_csv(spark, name, table, version, None)
+        table.log.commit(version, meta)
+        self.sweep(name)
 
-    # -- true O(delta) append (O17) -----------------------------------------
-
-    def _manifest(self, name: str) -> dict:
-        p = os.path.join(self.root, f"_applied.{name}.json")
-        if not os.path.exists(p):
-            return {"applied": {}, "csv_len": 0}
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, name: str, man: dict) -> None:
-        p = os.path.join(self.root, f"_applied.{name}.json")
-        with open(p + ".tmp", "w") as f:
-            json.dump(man, f)
-        os.replace(p + ".tmp", p)
-
-    def update_append(
-        self,
-        spark: SparkSession,
-        name: str,
-        delta: DataFrame,
-        order_cols: list[str],
-        update_key: str = "full",
-        head: str = "",
-    ) -> bool:
-        """O17: append-style report, cost O(delta) per update — the
-        reference APPENDS rows (CsvAppendReportVisitor.cs:20-41); the r2
-        union-and-rewrite grew without bound with history.
-
-        Layout: ``{name}.parquet/u_<update_key>/part-*.parquet`` — each
-        update adds ONE subdir (atomic rename), history is never
-        rewritten; readers get the union via recursive listing (at
-        cluster scale this is an Iceberg fast-append snapshot). The CSV
-        mirror is a single FILE appended in place, header-once, exactly
-        the reference's shape; a manifest records applied update keys +
-        the CSV byte length, so a crashed update replays idempotently
-        (same key → same subdir; a torn CSV tail is truncated back to
-        the last recorded length before re-appending)."""
-        man = self._manifest(name)
-        if update_key in man["applied"]:
-            return False  # crash-replay of a fully applied update: no-op
-        safe_key = "".join(ch if ch.isalnum() else "_" for ch in update_key)
-        final_dir = os.path.join(self.root, f"{name}.parquet")
-        sub = os.path.join(final_dir, f"u_{safe_key}")
-        stage = os.path.join(self.root, f"_stage.{name}.u")
-        delta.orderBy(*order_cols).write.mode("overwrite").parquet(stage)
-        os.makedirs(final_dir, exist_ok=True)
-        if os.path.exists(sub):  # torn previous attempt: replaced wholesale
-            shutil.rmtree(sub)
-        os.rename(stage, sub)
-        self._csv_append(spark, name, sub, order_cols, man)
-        man["applied"][update_key] = head
-        self._write_manifest(name, man)
-        return True
-
-    def _csv_append(
-        self, spark: SparkSession, name: str, delta_dir: str,
-        order_cols: list[str], man: dict,
-    ) -> None:
-        """Append the staged delta's rows to the single-file CSV mirror.
-        Driver-side byte concat is O(delta) — identical to the
-        reference's own file-append cost (CsvAppendReportVisitor.cs) —
-        and never touches history."""
-        out = spark.read.parquet(delta_dir).orderBy(*order_cols)
+    def _write_csv(
+        self, spark: SparkSession, name: str, table: EpochTable, version: int,
+        append_at: int | None,
+    ) -> int:
+        """Write ``version``'s rows to the single-file CSV mirror, header
+        once, round-trip timestamp format (O17/O23), and return its
+        length. ``append_at`` None replaces the whole file through a temp
+        file and ``os.replace`` (CsvAggregateReportVisitor.cs:60-73);
+        otherwise the file is truncated to ``append_at``, the committed
+        length (a torn tail of a killed update goes), and the rows are
+        appended (CsvAppendReportVisitor.cs). The driver-side byte copy is
+        O(version), like the reference's own file writes."""
+        out = spark.read.parquet(table._epoch_dir(version)).orderBy(*_SPECS[name][2])
         header = out.columns
         for field in out.schema.fields:
             if field.dataType.typeName() == "timestamp":
                 out = out.withColumn(field.name, F.date_format(field.name, ISO_O_FMT))
-        csv_stage = os.path.join(self.root, f"_stage.{name}.csv")
-        out.select(*header).coalesce(1).write.mode("overwrite").csv(csv_stage)
-        csv_final = os.path.join(self.root, f"{name}.csv")
-        if os.path.isdir(csv_final):  # pre-r3 directory mirror: not migrated
-            shutil.rmtree(csv_final)
-        mode = "r+b" if os.path.exists(csv_final) else "wb"
-        with open(csv_final, mode) as dst:
-            dst.truncate(man["csv_len"])  # repair a torn tail from a crash
+        stage = os.path.join(table.dir, "_csv_parts")
+        out.coalesce(1).write.mode("overwrite").csv(stage)
+        final = os.path.join(self.root, f"{name}.csv")
+        if append_at is None:
+            path, mode = os.path.join(table.dir, "_csv.tmp"), "wb"
+        else:
+            path, mode = final, "r+b" if os.path.exists(final) else "wb"
+        with open(path, mode) as dst:
+            dst.truncate(append_at or 0)
             dst.seek(0, os.SEEK_END)
             if dst.tell() == 0:
-                dst.write((",".join(header) + "\n").encode())  # header-once
-            for part in sorted(os.listdir(csv_stage)):
+                dst.write((",".join(header) + "\n").encode())
+            for part in sorted(os.listdir(stage)):
                 if part.startswith("part-") and part.endswith(".csv"):
-                    with open(os.path.join(csv_stage, part), "rb") as src:
+                    with open(os.path.join(stage, part), "rb") as src:
                         shutil.copyfileobj(src, dst)
-            man["csv_len"] = dst.tell()
-        shutil.rmtree(csv_stage)
-
-
-REPORTS = ("deleted_pages", "page_count_by_day", "page_count_by_day_kind")
+            length = dst.tell()
+        if append_at is None:
+            os.replace(path, final)
+        shutil.rmtree(stage)
+        return length
 
 
 def update_reports(
@@ -264,11 +260,11 @@ def update_reports(
     default_cursor: dt.datetime | None = None,
 ) -> dict[str, int]:
     """Incrementally update each selected report to the pages log's head,
-    each under its own ``report.{name}`` cursor — independent consumers
-    of one log (O30, UpdateReportsCommandHandler.cs:104-117).
-    ``default_cursor`` seeds brand-new report cursors (the reference's
-    --default-cursor-value); committed cursors always win. Names match
-    case-insensitively and unknowns list the valid set, mirroring
+    each under its own cursor — independent consumers of one log (O30,
+    UpdateReportsCommandHandler.cs:104-117). ``default_cursor`` seeds
+    brand-new report cursors (the reference's --default-cursor-value);
+    committed cursors always win. Names match case-insensitively and
+    unknowns list the valid set, mirroring
     UpdateReportsCommandHandler.cs:59-75's OrdinalIgnoreCase validator."""
     canon = {r.lower(): r for r in REPORTS}
     unknown = [n for n in names if n.lower() not in canon]
@@ -282,6 +278,7 @@ def update_reports(
     head = pages.agg(F.max("warc_ts")).first()[0]  # the loop's ONE standalone action
     updated: dict[str, int] = {}
     for name in names:
+        store.sweep(name)  # what a killed earlier update left behind
         cursor = store.cursor(name, default=default_cursor)
         # head == max(warc_ts), so head <= cursor ⇔ the delta is empty:
         # the skip decision needs no count action at all
@@ -293,22 +290,6 @@ def update_reports(
         # delta row count rides the write job as an Observation — no
         # standalone delta.count() per report (2·N actions → N writes)
         obs = Observation()
-        delta = delta.observe(obs, F.count(F.lit(1)).alias("n"))
-        if name == "deleted_pages":
-            applied = store.update_append(
-                spark, name, deleted_pages(delta), ["warc_ts", "url"],
-                update_key=cursor.isoformat(), head=head.isoformat(),
-            )
-            if not applied:  # replay guard hit: obs never fired, don't block on it
-                store._write_cursor(name, head)
-                updated[name] = 0
-                continue
-        elif name == "page_count_by_day":
-            store.update_aggregate(spark, name, page_count_by_day(delta), ["day"], ["value"])
-        elif name == "page_count_by_day_kind":
-            store.update_aggregate(
-                spark, name, page_count_by_day_kind(delta), ["day"], ["details", "deletes"]
-            )
-        store._write_cursor(name, head)
+        store.update(spark, name, delta.observe(obs, F.count(F.lit(1)).alias("n")), head)
         updated[name] = int(obs.get["n"])
     return updated

@@ -19,7 +19,6 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from crawlspark.operators.ordering import EPOCH_MIN
 from crawlspark.sources.tables import CommitLog, EpochTable
 
 FETCHED_SCHEMA = T.StructType([
@@ -83,20 +82,7 @@ class CrawlState:
     def cursor(
         self, consumer: str = "download", default: dt.datetime | None = None
     ) -> dt.datetime:
-        """Read-with-default: missing cursor ⇒ ``default`` (the
-        reference's --default-cursor-value, Cursor.cs:12-27), falling
-        back to EPOCH_MIN ≙ DateTimeOffset.MinValue. A COMMITTED cursor
-        always wins — the default only seeds brand-new consumers (e.g.
-        'reports from 2015 onward only' on first run)."""
-        best = None
-        for meta in self.log.read().get("meta", {}).values():
-            c = meta.get("cursors", {}).get(consumer)
-            if c:
-                v = dt.datetime.fromisoformat(c)
-                best = v if best is None or v > best else best
-        if best is not None:
-            return best
-        return default if default is not None else EPOCH_MIN
+        return self.log.cursor(consumer, default)
 
     def next_epoch(self) -> int:
         last = self.log.last_epoch()

@@ -23,12 +23,16 @@ On a real cluster this maps 1:1 onto Iceberg: ``write_epoch`` →
 ``writeTo(t).overwritePartitions()``, ``CommitLog`` → the Iceberg
 snapshot commit; the engine code above this layer is storage-agnostic.
 
+Reports (``plans/reports.py``) use the same log: one per report, whose
+epochs are the report's versions and whose meta carries its cursor.
+
 Partition pruning still works: reads list only committed epoch dirs, so
 Spark never opens uncommitted or stale data files.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import shutil
@@ -37,9 +41,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from crawlspark.operators.ordering import EPOCH_MIN
+
 
 class CommitLog:
-    """Atomic JSON commit log shared by all tables of one crawl state dir."""
+    """Atomic JSON commit log shared by all tables of one crawl state dir
+    (or by the versions of one report)."""
 
     def __init__(self, root: str):
         self.root = root
@@ -58,6 +65,22 @@ class CommitLog:
     def last_epoch(self) -> int | None:
         epochs = self.committed_epochs()
         return max(epochs) if epochs else None
+
+    def cursor(self, consumer: str, default: dt.datetime | None = None) -> dt.datetime:
+        """Read-with-default watermark of ``consumer``: the largest
+        ``meta["cursors"][consumer]`` of any commit. With none, ``default``
+        (the reference's --default-cursor-value, Cursor.cs:12-27), falling
+        back to EPOCH_MIN ≙ DateTimeOffset.MinValue. A COMMITTED cursor
+        always wins — the default only seeds brand-new consumers (e.g.
+        'reports from 2015 onward only' on first run)."""
+        found = [
+            dt.datetime.fromisoformat(meta["cursors"][consumer])
+            for meta in self.read().get("meta", {}).values()
+            if consumer in meta.get("cursors", {})
+        ]
+        if found:
+            return max(found)
+        return default if default is not None else EPOCH_MIN
 
     def commit(self, epoch: int, meta: dict | None = None) -> None:
         state = self.read()

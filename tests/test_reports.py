@@ -3,6 +3,7 @@ from-scratch aggregate, cursors are independent per report (O30)."""
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from crawlspark.plans.reports import (
@@ -47,8 +48,6 @@ def test_incremental_merge_equals_full_aggregate(spark, tmp_path):
 def test_report_names_match_case_insensitively(spark, tmp_path):
     """UpdateReportsCommandHandler.cs:59-75 parity: names validate with
     OrdinalIgnoreCase; unknowns error listing the valid set."""
-    import pytest
-
     full = pages_only(build_pages(spark, 60, n_hosts=4))
     root = str(tmp_path / "reports")
     counts = update_reports(spark, full, root, names=("Deleted_Pages", "PAGE_COUNT_BY_DAY"))
@@ -114,7 +113,7 @@ def test_append_report_update_cost_is_o_delta(spark, tmp_path):
         assert after[path] == sig
     assert len(after) > len(before)  # the delta arrived as NEW files
     subdirs = {p.name for p in pq_dir.iterdir() if p.is_dir()}
-    assert len(subdirs) == 2  # one u_<cursor> subdir per update
+    assert subdirs == {"epoch=0", "epoch=1"}  # one version dir per update
     # csv grew in place (append), no header duplication
     csv_text = (tmp_path / "reports" / "deleted_pages.csv").read_text()
     assert (tmp_path / "reports" / "deleted_pages.csv").stat().st_size >= csv_len_before
@@ -124,22 +123,6 @@ def test_append_report_update_cost_is_o_delta(spark, tmp_path):
     exp = full.where(F.col("url").rlike(r"^https://[^/]+/private/")).count()
     assert got == exp
     assert sum(1 for ln in csv_text.strip().splitlines()[1:]) == exp
-
-
-def test_append_report_replay_is_idempotent(spark, tmp_path):
-    """A crash-replay of the SAME update (same cursor) must not duplicate
-    rows in parquet or CSV — the manifest gates both."""
-    full = pages_only(build_pages(spark, 150, n_hosts=5))
-    root = str(tmp_path / "reports")
-    update_reports(spark, full, root, names=("deleted_pages",))
-    store = ReportStore(root)
-    n1 = store.read(spark, "deleted_pages").count()
-    csv1 = (tmp_path / "reports" / "deleted_pages.csv").read_text()
-    # simulate the crash window: cursor file lost AFTER data was applied
-    (tmp_path / "reports" / "_cursor.deleted_pages.json").unlink()
-    update_reports(spark, full, root, names=("deleted_pages",))
-    assert store.read(spark, "deleted_pages").count() == n1
-    assert (tmp_path / "reports" / "deleted_pages.csv").read_text() == csv1
 
 
 def test_report_cursors_are_independent(spark, tmp_path):
@@ -166,3 +149,17 @@ def test_update_reports_default_cursor_skips_history(spark, tmp_path):
     )
     assert got == full.where(F.col("warc_ts") > F.lit(cut)).count()
     assert 0 < got < full.count()
+
+
+@pytest.mark.parametrize(
+    "old_file", ["_cursor.page_count_by_day.json", "_applied.deleted_pages.json"]
+)
+def test_old_layout_report_dir_is_refused(tmp_path, old_file):
+    """A report dir with the cursor or manifest files of the older layout
+    is refused, not read: its flat {name}.parquet would be counted again
+    next to the new versions. Reports are rebuilt from the pages log."""
+    root = tmp_path / "reports"
+    (root / "page_count_by_day.parquet").mkdir(parents=True)
+    (root / old_file).write_text("{}")
+    with pytest.raises(ValueError, match="delete the directory"):
+        ReportStore(str(root))
