@@ -831,143 +831,145 @@ def catalog_crawl(
     log.info("Downloading catalog index")  # Downloader.cs:93
     sel_pages = cursor_filter(index, cursor, ts_col="page_ts")
     sel_pages = ordered_limit(sel_pages, max_pages, ["page_ts", "page_no"]).cache()
-    n_pages = sel_pages.count()
-    with log.indent():
-        log.debug("Found {} pages with new data.", n_pages)  # Downloader.cs:99
-    if n_pages == 0:
-        sel_pages.unpersist()
-        return {"run": run, "pages": 0, "leaves": 0, "cursor": cursor}
-
-    if depth == "index":
-        new_cursor = sel_pages.agg(F.max("page_ts")).first()[0]
-        state.commit_epoch(run, cursors={consumer: new_cursor}, stats={"pages": n_pages})
-        sel_pages.unpersist()
-        return {"run": run, "pages": n_pages, "leaves": 0, "cursor": new_cursor}
-
-    # Leaf→page membership from the index's advertised timestamp ranges:
-    # a leaf belongs to page p iff warc_ts ∈ (prev page_ts, page_ts].
-    # Leaves newer than every advertised page_ts match no page and defer
-    # to the next run — the reference's `max = pageItem.CommitTimestamp`
-    # rule (Downloader.cs:126). The membership join is the bucketed
-    # interval join (operators/intervals.py): a BroadcastHashJoin on a
-    # derived time-bucket key with the exact range predicate as residual
-    # — O(1) per leaf at any page count, where the naive theta join is a
-    # BroadcastNestedLoopJoin evaluating O(#pages) predicates per leaf.
-    # index is tiny by design → one sorted array of (page_ts, page_no);
-    # posexplode + element_at derive each page's predecessor bound
-    # without a single-partition window node (Catalyst folds a
-    # constant partitionBy to an empty spec and WindowExec warns)
-    idx_arr = index.groupBy().agg(
-        F.array_sort(F.collect_list(F.struct("page_ts", "page_no"))).alias("a")
-    )
-    bounds = idx_arr.select(F.col("a"), F.posexplode("a").alias("i", "s")).select(
-        F.col("s.page_no").alias("page_no"),
-        F.col("s.page_ts").alias("page_ts"),
-        F.when(F.col("i") == 0, F.lit(EPOCH_MIN))
-        .otherwise(F.element_at("a", F.col("i"))["page_ts"])
-        .alias("prev_ts"),
-    )
-    leaves = (
-        bucketed_interval_join(pages, bounds, ts_col="warc_ts")
-        .where(F.col("warc_ts") > F.lit(cursor) if cursor > EPOCH_MIN else F.lit(True))
-        .drop("prev_ts")
-        .join(F.broadcast(sel_pages.select("page_no")), "page_no", "left_semi")
-    )
-
-    if max_commits is not None:
-        leaves = commit_budget_cutoff(leaves, max_commits, ts_col="warc_ts")
-
-    if depth == "page":
-        # Page depth enumerates leaf items without downloading them, but
-        # MaxCommits still bounds the commits processed and the cursor
-        # stops at the last included commit — the reference re-crawls the
-        # remainder next run, never skips (Downloader.cs:222-224).
-        if max_commits is not None:
-            agg_ts = leaves.agg(F.max("warc_ts")).first()[0]
-            new_cursor = max(cursor, agg_ts or EPOCH_MIN)
-        else:
-            new_cursor = sel_pages.agg(F.max("page_ts")).first()[0]
-        state.commit_epoch(run, cursors={consumer: new_cursor}, stats={"pages": n_pages})
-        sel_pages.unpersist()
-        return {"run": run, "pages": n_pages, "leaves": 0, "cursor": new_cursor}
-
-    leaves = leaves.cache()
-
-    if json_formatting != "unchanged":
-        # --format-paths-style mirroring (DownloadCommandHandler.cs:49-52,
-        # 99): the document persisted to the mirror is the O3-rewritten
-        # JSON body, not the raw bytes. Expects JSON documents (the
-        # reference's catalog is all JSON; its parser throws on garbage
-        # too, JsonFileHelper.cs:86-89).
-        from crawlspark.operators.jsonfmt import rewrite_json
-
-        leaves = rewrite_json(
-            leaves.withColumn("__doc", F.col("html").cast("string")),
-            "__doc", mode=json_formatting, out_col="__mirror", flag_col="__rw",
-        )
-        text_col = F.col("__mirror")
-    else:
-        text_col = extract_text_udf(F.col("html")) if python else extract_text(F.col("html"))
-
-    if mirror_dir is not None:
-        # O2 physical disk mirror with the --format-paths fanout toggle
-        # (DownloadCommandHandler.cs:49-52, Downloader.cs:246-296): the
-        # mirrored body is the (possibly O3-rewritten) document, the path
-        # is the reference's host/path mapping with 500-page bucket dirs
-        # and y/m/d/h timestamp explosion when format_paths is on.
-        from crawlspark.functions.paths import mirror_path
-        from crawlspark.sources.mirror import write_mirror
-
-        body = text_col if json_formatting != "unchanged" else F.col("html").cast("string")
-        write_mirror(
-            leaves.select(
-                mirror_path(F.col("url"), format_paths=format_paths).alias("dest"),
-                body.alias("content"),
-            ),
-            mirror_dir,
-        )
-
-    def fetched_rows(text_col):
-        return leaves.select(
-            "url",
-            host_of(F.col("url")).alias("host"),
-            F.lit(0).alias("priority"),
-            F.lit(_discovery_ts(run)).alias("discovery_ts"),
-            "warc_ts",
-            text_col.alias("text"),
-            "lang",
-            F.lit("ok").alias("status"),
-            F.lit(1).alias("attempts"),
-            F.length("html").cast("long").alias("content_bytes"),
-            F.lit(None).cast("long").alias("n_tokens"),
-            F.lit(None).cast("long").alias("simhash"),
-            F.lit(None).cast("long").alias("quality_micro"),
-        )
-
-    state.fetched.write_epoch(fetched_rows(text_col), run)
-
-    agg = leaves.agg(
-        F.max("warc_ts").alias("mx"),
-        F.count("*").alias("n"),
-        F.count(F.when(needs_python(F.col("html")), 1)).alias("n_python"),
-    ).first()
-    if agg["n_python"] and json_formatting == "unchanged" and not python:
-        # payloads the text expression cannot read: redo the staged
-        # (still uncommitted) increment with the Python UDF
-        state.fetched.write_epoch(fetched_rows(extract_text_udf(F.col("html"))), run)
-    new_cursor = max(cursor, agg["mx"] or EPOCH_MIN)
-    n_leaves = int(agg["n"])
-    with log.indent():
-        log.info("Processing {} catalog pages", n_pages)  # Downloader.cs:123
+    cached = [sel_pages]
+    try:
+        n_pages = sel_pages.count()
         with log.indent():
-            log.info("Downloaded {} catalog leaves", n_leaves)  # Downloader.cs:151
-    state.commit_epoch(
-        run, cursors={consumer: new_cursor},
-        stats={
-            "pages": n_pages, "urls_fetched": n_leaves,
-            "python_fallback_rows": int(agg["n_python"]),
-        },
-    )
-    sel_pages.unpersist()
-    leaves.unpersist()
-    return {"run": run, "pages": n_pages, "leaves": n_leaves, "cursor": new_cursor}
+            log.debug("Found {} pages with new data.", n_pages)  # Downloader.cs:99
+        if n_pages == 0:
+            return {"run": run, "pages": 0, "leaves": 0, "cursor": cursor}
+
+        if depth == "index":
+            new_cursor = sel_pages.agg(F.max("page_ts")).first()[0]
+            state.commit_epoch(run, cursors={consumer: new_cursor}, stats={"pages": n_pages})
+            return {"run": run, "pages": n_pages, "leaves": 0, "cursor": new_cursor}
+
+        # Leaf→page membership from the index's advertised timestamp ranges:
+        # a leaf belongs to page p iff warc_ts ∈ (prev page_ts, page_ts].
+        # Leaves newer than every advertised page_ts match no page and defer
+        # to the next run — the reference's `max = pageItem.CommitTimestamp`
+        # rule (Downloader.cs:126). The membership join is the bucketed
+        # interval join (operators/intervals.py): a BroadcastHashJoin on a
+        # derived time-bucket key with the exact range predicate as residual
+        # — O(1) per leaf at any page count, where the naive theta join is a
+        # BroadcastNestedLoopJoin evaluating O(#pages) predicates per leaf.
+        # index is tiny by design → one sorted array of (page_ts, page_no);
+        # posexplode + element_at derive each page's predecessor bound
+        # without a single-partition window node (Catalyst folds a
+        # constant partitionBy to an empty spec and WindowExec warns)
+        idx_arr = index.groupBy().agg(
+            F.array_sort(F.collect_list(F.struct("page_ts", "page_no"))).alias("a")
+        )
+        bounds = idx_arr.select(F.col("a"), F.posexplode("a").alias("i", "s")).select(
+            F.col("s.page_no").alias("page_no"),
+            F.col("s.page_ts").alias("page_ts"),
+            F.when(F.col("i") == 0, F.lit(EPOCH_MIN))
+            .otherwise(F.element_at("a", F.col("i"))["page_ts"])
+            .alias("prev_ts"),
+        )
+        leaves = (
+            bucketed_interval_join(pages, bounds, ts_col="warc_ts")
+            .where(F.col("warc_ts") > F.lit(cursor) if cursor > EPOCH_MIN else F.lit(True))
+            .drop("prev_ts")
+            .join(F.broadcast(sel_pages.select("page_no")), "page_no", "left_semi")
+        )
+
+        if max_commits is not None:
+            leaves = commit_budget_cutoff(leaves, max_commits, ts_col="warc_ts")
+
+        if depth == "page":
+            # Page depth enumerates leaf items without downloading them, but
+            # MaxCommits still bounds the commits processed and the cursor
+            # stops at the last included commit — the reference re-crawls the
+            # remainder next run, never skips (Downloader.cs:222-224).
+            if max_commits is not None:
+                agg_ts = leaves.agg(F.max("warc_ts")).first()[0]
+                new_cursor = max(cursor, agg_ts or EPOCH_MIN)
+            else:
+                new_cursor = sel_pages.agg(F.max("page_ts")).first()[0]
+            state.commit_epoch(run, cursors={consumer: new_cursor}, stats={"pages": n_pages})
+            return {"run": run, "pages": n_pages, "leaves": 0, "cursor": new_cursor}
+
+        leaves = leaves.cache()
+        cached.append(leaves)
+
+        if json_formatting != "unchanged":
+            # --format-paths-style mirroring (DownloadCommandHandler.cs:49-52,
+            # 99): the document persisted to the mirror is the O3-rewritten
+            # JSON body, not the raw bytes. Expects JSON documents (the
+            # reference's catalog is all JSON; its parser throws on garbage
+            # too, JsonFileHelper.cs:86-89).
+            from crawlspark.operators.jsonfmt import rewrite_json
+
+            leaves = rewrite_json(
+                leaves.withColumn("__doc", F.col("html").cast("string")),
+                "__doc", mode=json_formatting, out_col="__mirror", flag_col="__rw",
+            )
+            text_col = F.col("__mirror")
+        else:
+            text_col = extract_text_udf(F.col("html")) if python else extract_text(F.col("html"))
+
+        if mirror_dir is not None:
+            # O2 physical disk mirror with the --format-paths fanout toggle
+            # (DownloadCommandHandler.cs:49-52, Downloader.cs:246-296): the
+            # mirrored body is the (possibly O3-rewritten) document, the path
+            # is the reference's host/path mapping with 500-page bucket dirs
+            # and y/m/d/h timestamp explosion when format_paths is on.
+            from crawlspark.functions.paths import mirror_path
+            from crawlspark.sources.mirror import write_mirror
+
+            body = text_col if json_formatting != "unchanged" else F.col("html").cast("string")
+            write_mirror(
+                leaves.select(
+                    mirror_path(F.col("url"), format_paths=format_paths).alias("dest"),
+                    body.alias("content"),
+                ),
+                mirror_dir,
+            )
+
+        def fetched_rows(text_col):
+            return leaves.select(
+                "url",
+                host_of(F.col("url")).alias("host"),
+                F.lit(0).alias("priority"),
+                F.lit(_discovery_ts(run)).alias("discovery_ts"),
+                "warc_ts",
+                text_col.alias("text"),
+                "lang",
+                F.lit("ok").alias("status"),
+                F.lit(1).alias("attempts"),
+                F.length("html").cast("long").alias("content_bytes"),
+                F.lit(None).cast("long").alias("n_tokens"),
+                F.lit(None).cast("long").alias("simhash"),
+                F.lit(None).cast("long").alias("quality_micro"),
+            )
+
+        state.fetched.write_epoch(fetched_rows(text_col), run)
+
+        agg = leaves.agg(
+            F.max("warc_ts").alias("mx"),
+            F.count("*").alias("n"),
+            F.count(F.when(needs_python(F.col("html")), 1)).alias("n_python"),
+        ).first()
+        if agg["n_python"] and json_formatting == "unchanged" and not python:
+            # payloads the text expression cannot read: redo the staged
+            # (still uncommitted) increment with the Python UDF
+            state.fetched.write_epoch(fetched_rows(extract_text_udf(F.col("html"))), run)
+        new_cursor = max(cursor, agg["mx"] or EPOCH_MIN)
+        n_leaves = int(agg["n"])
+        with log.indent():
+            log.info("Processing {} catalog pages", n_pages)  # Downloader.cs:123
+            with log.indent():
+                log.info("Downloaded {} catalog leaves", n_leaves)  # Downloader.cs:151
+        state.commit_epoch(
+            run, cursors={consumer: new_cursor},
+            stats={
+                "pages": n_pages, "urls_fetched": n_leaves,
+                "python_fallback_rows": int(agg["n_python"]),
+            },
+        )
+        return {"run": run, "pages": n_pages, "leaves": n_leaves, "cursor": new_cursor}
+    finally:
+        # a failed increment must not leave its caches in the session
+        for df in cached:
+            df.unpersist()

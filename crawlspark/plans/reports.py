@@ -1,19 +1,24 @@
 """Incremental reports: cursor-driven derived aggregates over the pages log.
 
-The reference's ``update-reports`` command re-runs the crawl loop with a
-report visitor and merges per-page aggregates into CSVs
-(Reports/CsvReportUpdater.cs:37-59). Here each report is a derived table
-over the pages log with its **own watermark cursor** (O30), updated by:
+The reference's ``update-reports`` command makes one pass over the
+catalog, and its visitors merge each report in memory before rewriting
+the CSV (UpdateReportsCommandHandler.cs:47-120,
+CsvAggregateReportVisitor.cs:21-74). Here each report has its **own
+watermark cursor** (O30), and the reports that share a cursor (normally
+all three) share one aggregate scan of the pages log:
 
-    delta  = pages WHERE warc_ts ∈ (cursor, max]          (O5)
-    agg    = groupBy(key).agg(...)                         (O10/O18/O19)
-    merged = (existing ∪ agg).groupBy(key).sum(...)        (O21 merge)
-    write  = orderBy(key) → new version + CSV export       (O22/O17/O23)
+    delta = pages WHERE warc_ts ∈ (cursor, head]                  (O5)
+    days  = delta.groupBy(day).agg(details, deletes, max(warc_ts)) (O18-O20)
 
-The merge is the reference's only join-like operator: a full-outer
-key-merge with element-wise sum (CsvAggregateReportVisitor.cs:21-74).
-At scale the new version becomes an Iceberg ``MERGE INTO``; the delta
-agg is map-side-partial and shuffles only the (tiny) key space.
+``days`` is O(days) rows and is collected: its max warc_ts is ``head``,
+and details + deletes is every report's delta row count. The aggregate
+reports are merged on the driver (O21): the latest version, O(days) rows
+read with pyarrow, key-summed with ``days``, sorted by day (O22) and
+written back with pyarrow, CSV included (O17/O23). An aggregate update
+therefore costs O(days) and no Spark job. Only the append report
+(``deleted_pages``, O16) is O(delta): one distributed write of the
+delta's rows sorted by (warc_ts, url), whose CSV rows the driver then
+appends from the written version.
 
 Each report commits exactly like the crawl state (``sources/tables.py``),
 through its own ``CommitLog``:
@@ -29,13 +34,15 @@ after it finds the cursor advanced. The append report (``deleted_pages``)
 adds one version per update and its live rows are every committed
 version; its CSV grows in place and the meta also records the CSV's
 committed length, to which a replay truncates a torn tail. An aggregate
-report's live rows are its latest version alone. Every other entry of
-the directory (older aggregate versions, uncommitted or torn stages) is
-deleted after each commit and at the start of each update, so at rest
-``{name}.parquet`` holds exactly the live rows (readers that skip
-``_``-prefixed names, such as pyarrow, need no commit log). One log per
-report, not per report dir: reports update independently (O30), and
-``EpochTable.read`` treats every committed epoch as present in its table.
+report's live rows are its latest version alone, and its commit expires
+the older versions from the log, so the log stays one entry long. Every
+other entry of the directory (older aggregate versions, uncommitted or
+torn stages) is deleted after each commit and at the start of each
+update, so at rest ``{name}.parquet`` holds exactly the live rows
+(readers that skip ``_``-prefixed names, such as pyarrow, need no commit
+log). One log per report, not per report dir: reports update
+independently (O30), and ``EpochTable.read`` treats every committed
+epoch as present in its table.
 """
 
 from __future__ import annotations
@@ -44,7 +51,9 @@ import datetime as dt
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -53,6 +62,8 @@ from crawlspark.sources.tables import CommitLog, EpochTable
 
 ISO_O_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSSXXX"  # DateTimeOffset "O" analog (O23)
 
+_PRIVATE = r"^https://[^/]+/private/"
+
 
 # -- report extractors (pure column logic) ----------------------------------
 
@@ -60,10 +71,7 @@ def deleted_pages(delta: DataFrame) -> DataFrame:
     """Append-style filter+project report (O16): /private/ pages are the
     'delete event' analog of nuget:PackageDelete
     (DeletedPackagesReportUpdater.cs:14-25)."""
-    return (
-        delta.where(F.col("url").rlike(r"^https://[^/]+/private/"))
-        .select("warc_ts", "url")
-    )
+    return delta.where(F.col("url").rlike(_PRIVATE)).select("warc_ts", "url")
 
 
 def page_count_by_day(delta: DataFrame) -> DataFrame:
@@ -78,7 +86,13 @@ def page_count_by_day_kind(delta: DataFrame) -> DataFrame:
     """Conditional-count pivot (O19) + totals invariant (O20,
     CatalogLeafCountByTypeReportUpdater.cs:22-38): every page is exactly
     one of {details, delete}, so details+deletes == total."""
-    kind = F.when(F.col("url").rlike(r"^https://[^/]+/private/"), "delete").otherwise("details")
+    return _day_counts(delta).drop("head")
+
+
+def _day_counts(delta: DataFrame) -> DataFrame:
+    """``page_count_by_day_kind`` plus each day's max warc_ts as ``head``:
+    the one aggregate an update runs per cursor."""
+    kind = F.when(F.col("url").rlike(_PRIVATE), "delete").otherwise("details")
     out = (
         delta.withColumn("kind", kind)
         .groupBy(F.date_trunc("DAY", F.col("warc_ts")).alias("day"))
@@ -86,10 +100,11 @@ def page_count_by_day_kind(delta: DataFrame) -> DataFrame:
             F.sum(F.when(F.col("kind") == "details", 1).otherwise(0)).alias("details"),
             F.sum(F.when(F.col("kind") == "delete", 1).otherwise(0)).alias("deletes"),
             F.count("*").alias("__total"),
+            F.max("warc_ts").alias("head"),
         )
     )
     # O20 totals invariant, enforced IN the plan (raise_error fires during
-    # the write job, before the commit — the reference throws during
+    # the aggregate job, before any commit — the reference throws during
     # visiting, CatalogLeafCountByTypeReportUpdater.cs:30-36) instead of a
     # standalone count action per update.
     guarded = F.when(
@@ -98,28 +113,69 @@ def page_count_by_day_kind(delta: DataFrame) -> DataFrame:
     return out.withColumn("details", guarded).drop("__total")
 
 
+# -- driver-side CSV formatting -------------------------------------------------
+
+_UNIX = dt.datetime(1970, 1, 1)
+_TRIMMED = "".join(map(chr, range(33)))  # what the CSV writer strips from each end
+
+
+def _iso_o(micros: int) -> str:
+    """``date_format(ts, ISO_O_FMT)`` in the UTC session time zone."""
+    t = _UNIX + dt.timedelta(microseconds=micros)
+    return f"{t.year:04d}-{t:%m-%dT%H:%M:%S}.{t.microsecond:06d}0Z"
+
+
+def _csv_field(value) -> str:
+    """One value as Spark's CSV writer prints it with default options:
+    null is empty, whitespace and control characters are stripped from
+    both ends, an empty string is ``""``, and a value holding a comma,
+    quote, CR or LF is quoted with ``\\`` escaping ``"`` and ``\\``."""
+    if value is None:
+        return ""
+    if not isinstance(value, str):
+        return str(value)
+    value = value.strip(_TRIMMED)
+    if not value:
+        return '""'
+    if any(c in value for c in ',"\r\n'):
+        return '"' + value.replace("\\", "\\\\").replace('"', '\\"') + '"'
+    return value
+
+
+def csv_lines(rows: pa.Table) -> bytes:
+    """``rows`` as CSV lines without a header, byte-identical to Spark's
+    CSV writer after ``date_format(c, ISO_O_FMT)`` on every timestamp
+    column, with or without a time zone (O17/O23)."""
+    cols = []
+    for col in rows.columns:
+        if pa.types.is_timestamp(col.type):
+            micros = col.cast(pa.timestamp("us", col.type.tz)).cast(pa.int64()).to_pylist()
+            values = [None if m is None else _iso_o(m) for m in micros]
+        else:
+            values = col.to_pylist()
+        cols.append([_csv_field(v) for v in values])
+    return "".join(",".join(row) + "\n" for row in zip(*cols)).encode()
+
+
 # -- incremental store -------------------------------------------------------
 
 _DAY = T.StructField("day", T.TimestampType())
 
-# name -> (extractor, schema, sort/key columns, summed columns). Summed
-# columns None marks the append report: it adds a version per update
-# instead of merging into the latest one.
+# name -> (schema, the report's values for a day's (details, deletes)).
+# Values None marks the append report: it adds a version of the delta's
+# rows per update instead of merging into the latest one.
 _SPECS = {
     "deleted_pages": (
-        deleted_pages,
         T.StructType([T.StructField("warc_ts", T.TimestampType()), T.StructField("url", T.StringType())]),
-        ["warc_ts", "url"], None,
+        None,
     ),
     "page_count_by_day": (
-        page_count_by_day,
         T.StructType([_DAY, T.StructField("value", T.LongType())]),
-        ["day"], ["value"],
+        lambda details, deletes: (details + deletes,),
     ),
     "page_count_by_day_kind": (
-        page_count_by_day_kind,
         T.StructType([_DAY, T.StructField("details", T.LongType()), T.StructField("deletes", T.LongType())]),
-        ["day"], ["details", "deletes"],
+        lambda details, deletes: (details, deletes),
     ),
 }
 
@@ -150,12 +206,12 @@ class ReportStore:
 
     def _table(self, name: str) -> EpochTable:
         log = CommitLog(os.path.join(self.root, f"{name}.parquet"))
-        return EpochTable(self.root, f"{name}.parquet", _SPECS[name][1], log)
+        return EpochTable(self.root, f"{name}.parquet", _SPECS[name][0], log)
 
     @staticmethod
     def _live(name: str, table: EpochTable) -> list[int]:
         epochs = table.log.committed_epochs()
-        return epochs if _SPECS[name][3] is None else epochs[-1:]
+        return epochs if _SPECS[name][1] is None else epochs[-1:]
 
     def cursor(self, name: str, default: dt.datetime | None = None) -> dt.datetime:
         """Read-with-default (O29); ``default`` is the reference's
@@ -183,54 +239,72 @@ class ReportStore:
             else:
                 os.remove(path)
 
-    def update(self, spark: SparkSession, name: str, delta: DataFrame, head: dt.datetime) -> None:
-        """Stage the next version of ``name`` from the pages ``delta``,
-        write the CSV mirror, and commit the version with cursor ``head``.
+    def update(
+        self, name: str, delta: DataFrame, days: list[tuple[int, int, int]], head: dt.datetime,
+    ) -> None:
+        """Stage the next version of ``name``, write the CSV mirror, and
+        commit the version with cursor ``head``. ``delta`` is the pages
+        delta and ``days`` its collected ``(day micros, details,
+        deletes)`` rows.
 
         Append report (O17, CsvAppendReportVisitor.cs:20-41): the version
         is the delta's rows alone, so an update costs O(delta) and never
         rewrites history. Aggregate reports (O21,
         CsvAggregateReportVisitor.cs:21-74): the version is the latest
-        one full-outer key-merged with the delta's aggregate."""
-        extract, _, keys, sums = _SPECS[name]
+        one key-merged with ``days`` on the driver, O(days)."""
+        schema, values = _SPECS[name]
         table = self._table(name)
         last = table.log.last_epoch()
         version = 0 if last is None else last + 1
-        rows = extract(delta)
-        if sums is not None and last is not None:
-            rows = (
-                self.read(spark, name).unionByName(rows)
-                .groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sums])
-            )
-        table.write_epoch(rows.orderBy(*keys), version)  # O22 sort
         meta = {"cursors": {name: head.isoformat()}}
-        if sums is None:
+        if values is None:
+            rows = deleted_pages(delta).select(*[F.col(f.name).cast(f.dataType) for f in schema])
+            # one task sorts the delta's rows (O22): the driver reads them
+            # all back for the CSV anyway
+            table.write_epoch(rows.repartition(1).sortWithinPartitions("warc_ts", "url"), version)
             committed = 0 if last is None else table.log.read()["meta"][str(last)]["csv_len"]
-            meta["csv_len"] = self._write_csv(spark, name, table, version, committed)
+            written = pq.read_table(table._epoch_dir(version))
+            meta["csv_len"] = self._write_csv(name, table, written, committed)
+            table.log.commit(version, meta)
         else:
-            self._write_csv(spark, name, table, version, None)
-        table.log.commit(version, meta)
+            merged = self._merge(name, table, last, days)
+            table.write_epoch_arrow(merged, version)
+            self._write_csv(name, table, merged, None)
+            table.log.commit(version, meta, expire=True)
         self.sweep(name)
 
+    @staticmethod
+    def _merge(
+        name: str, table: EpochTable, last: int | None, days: list[tuple[int, int, int]],
+    ) -> pa.Table:
+        """Version ``last`` full-outer key-merged with ``days`` by
+        element-wise sum, sorted by day (O21/O22)."""
+        schema, values = _SPECS[name]
+        cols = schema.names[1:]
+        merged: dict[int, list[int]] = {}
+        if last is not None:
+            old = pq.read_table(table._epoch_dir(last))
+            day_us = old["day"].cast(pa.timestamp("us", old["day"].type.tz)).cast(pa.int64())
+            old_values = zip(*(old[c].to_pylist() for c in cols))
+            merged = {d: list(v) for d, v in zip(day_us.to_pylist(), old_values)}
+        for day, details, deletes in days:
+            new = values(details, deletes)
+            merged[day] = [a + b for a, b in zip(merged.get(day, [0] * len(new)), new)]
+        order = sorted(merged)
+        arrays = [pa.array(order, pa.int64()).cast(pa.timestamp("us", "UTC"))]
+        arrays += [pa.array([merged[d][i] for d in order], pa.int64()) for i in range(len(cols))]
+        return pa.table(arrays, names=schema.names)
+
     def _write_csv(
-        self, spark: SparkSession, name: str, table: EpochTable, version: int,
-        append_at: int | None,
+        self, name: str, table: EpochTable, rows: pa.Table, append_at: int | None,
     ) -> int:
-        """Write ``version``'s rows to the single-file CSV mirror, header
-        once, round-trip timestamp format (O17/O23), and return its
-        length. ``append_at`` None replaces the whole file through a temp
-        file and ``os.replace`` (CsvAggregateReportVisitor.cs:60-73);
-        otherwise the file is truncated to ``append_at``, the committed
-        length (a torn tail of a killed update goes), and the rows are
-        appended (CsvAppendReportVisitor.cs). The driver-side byte copy is
-        O(version), like the reference's own file writes."""
-        out = spark.read.parquet(table._epoch_dir(version)).orderBy(*_SPECS[name][2])
-        header = out.columns
-        for field in out.schema.fields:
-            if field.dataType.typeName() == "timestamp":
-                out = out.withColumn(field.name, F.date_format(field.name, ISO_O_FMT))
-        stage = os.path.join(table.dir, "_csv_parts")
-        out.coalesce(1).write.mode("overwrite").csv(stage)
+        """Write ``rows`` to the single-file CSV mirror, header once, and
+        return its length. ``append_at`` None replaces the whole file
+        through a temp file and ``os.replace``
+        (CsvAggregateReportVisitor.cs:60-73); otherwise the file is
+        truncated to ``append_at``, the committed length (a torn tail of
+        a killed update goes), and the rows are appended
+        (CsvAppendReportVisitor.cs)."""
         final = os.path.join(self.root, f"{name}.csv")
         if append_at is None:
             path, mode = os.path.join(table.dir, "_csv.tmp"), "wb"
@@ -240,15 +314,11 @@ class ReportStore:
             dst.truncate(append_at or 0)
             dst.seek(0, os.SEEK_END)
             if dst.tell() == 0:
-                dst.write((",".join(header) + "\n").encode())
-            for part in sorted(os.listdir(stage)):
-                if part.startswith("part-") and part.endswith(".csv"):
-                    with open(os.path.join(stage, part), "rb") as src:
-                        shutil.copyfileobj(src, dst)
+                dst.write((",".join(_SPECS[name][0].names) + "\n").encode())
+            dst.write(csv_lines(rows))
             length = dst.tell()
         if append_at is None:
             os.replace(path, final)
-        shutil.rmtree(stage)
         return length
 
 
@@ -261,11 +331,12 @@ def update_reports(
 ) -> dict[str, int]:
     """Incrementally update each selected report to the pages log's head,
     each under its own cursor — independent consumers of one log (O30,
-    UpdateReportsCommandHandler.cs:104-117). ``default_cursor`` seeds
-    brand-new report cursors (the reference's --default-cursor-value);
-    committed cursors always win. Names match case-insensitively and
-    unknowns list the valid set, mirroring
-    UpdateReportsCommandHandler.cs:59-75's OrdinalIgnoreCase validator."""
+    UpdateReportsCommandHandler.cs:104-117) — and return each report's
+    delta row count. ``default_cursor`` seeds brand-new report cursors
+    (the reference's --default-cursor-value); committed cursors always
+    win. Names match case-insensitively and unknowns list the valid set,
+    mirroring UpdateReportsCommandHandler.cs:59-75's OrdinalIgnoreCase
+    validator."""
     canon = {r.lower(): r for r in REPORTS}
     unknown = [n for n in names if n.lower() not in canon]
     if unknown:
@@ -275,21 +346,26 @@ def update_reports(
         )
     names = tuple(dict.fromkeys(canon[n.lower()] for n in names))
     store = ReportStore(report_root)
-    head = pages.agg(F.max("warc_ts")).first()[0]  # the loop's ONE standalone action
-    updated: dict[str, int] = {}
+    by_cursor: dict[dt.datetime, list[str]] = {}
     for name in names:
         store.sweep(name)  # what a killed earlier update left behind
-        cursor = store.cursor(name, default=default_cursor)
-        # head == max(warc_ts), so head <= cursor ⇔ the delta is empty:
-        # the skip decision needs no count action at all
-        if head is None or head <= cursor:
-            updated[name] = 0
-            continue
-        delta = pages.where(F.col("warc_ts") > F.lit(cursor)) if cursor > EPOCH_MIN else pages
+        by_cursor.setdefault(store.cursor(name, default=default_cursor), []).append(name)
+    updated = dict.fromkeys(names, 0)
+    for cursor, group in by_cursor.items():
+        delta = pages.where(F.col("warc_ts").isNotNull())
+        if cursor > EPOCH_MIN:
+            delta = delta.where(F.col("warc_ts") > F.lit(cursor))
+        # the ONE aggregate job of these reports: O(days) rows
+        days = _day_counts(delta).select(
+            F.unix_micros(F.col("day").cast("timestamp")), "details", "deletes", "head",
+        ).collect()
+        if not days:
+            continue  # nothing after the cursor: the skip needs no other job
+        head = max(r[3] for r in days)
+        day_rows = [tuple(r[:3]) for r in days]
+        # pin the append report's scan to what the aggregate saw
         delta = delta.where(F.col("warc_ts") <= F.lit(head))
-        # delta row count rides the write job as an Observation — no
-        # standalone delta.count() per report (2·N actions → N writes)
-        obs = Observation()
-        store.update(spark, name, delta.observe(obs, F.count(F.lit(1)).alias("n")), head)
-        updated[name] = int(obs.get["n"])
+        for name in group:
+            store.update(name, delta, day_rows, head)
+            updated[name] = sum(details + deletes for _, details, deletes in day_rows)
     return updated

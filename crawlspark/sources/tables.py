@@ -82,8 +82,14 @@ class CommitLog:
             return max(found)
         return default if default is not None else EPOCH_MIN
 
-    def commit(self, epoch: int, meta: dict | None = None) -> None:
+    def commit(self, epoch: int, meta: dict | None = None, *, expire: bool = False) -> None:
+        """Add ``epoch`` (and its meta) to the log in one atomic replace.
+        ``expire`` also drops every other epoch and its meta in that same
+        replace (Iceberg ``expire_snapshots`` analog), for a table whose
+        live rows are its latest epoch alone."""
         state = self.read()
+        if expire:
+            state["epochs"], state["meta"] = [], {}
         if epoch not in state["epochs"]:
             state["epochs"].append(epoch)
             state["epochs"].sort()
@@ -145,14 +151,7 @@ class EpochTable:
         already-collected rows go straight to parquet via pyarrow — no
         Spark job, same directory layout and schema as write_epoch."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        stage = os.path.join(self.dir, f"_stage_epoch={epoch}")
-        final = self._epoch_dir(epoch)
-        for d in (stage, final):
-            if os.path.exists(d):
-                shutil.rmtree(d)
-        os.makedirs(stage)
         pa_types = {
             "timestamp": pa.timestamp("us"), "integer": pa.int32(),
             "long": pa.int64(), "string": pa.string(), "double": pa.float64(),
@@ -162,7 +161,23 @@ class EpochTable:
             names.append(field.name)
             vals = [r[i] for r in rows]
             arrays.append(pa.array(vals, type=pa_types.get(field.dataType.typeName())))
-        pq.write_table(pa.table(dict(zip(names, arrays))), os.path.join(stage, "part-0.parquet"))
+        self.write_epoch_arrow(pa.table(dict(zip(names, arrays))), epoch)
+
+    def write_epoch_arrow(self, table, epoch: int) -> None:
+        """Stage + atomically rename one epoch partition holding the
+        pyarrow ``table``, written by the driver (no Spark job). Same
+        staging and visibility contract as write_epoch."""
+        import pyarrow.parquet as pq
+
+        stage = os.path.join(self.dir, f"_stage_epoch={epoch}")
+        final = self._epoch_dir(epoch)
+        for d in (stage, final):
+            if os.path.exists(d):
+                shutil.rmtree(d)
+        os.makedirs(stage)
+        # no ARROW:schema footer key: Spark ignores it, and the parquet
+        # logical types already carry every type the tables use
+        pq.write_table(table, os.path.join(stage, "part-0.parquet"), store_schema=False)
         os.rename(stage, final)
 
     def write_epoch_split(

@@ -5,8 +5,10 @@ row (the reference's "re-crawl, never skip" contract).
 
 ``crash_at(k)`` counts the Python-level mutations the engine makes
 (``os.rename``, ``os.replace``, ``shutil.rmtree``, Spark's parquet and
-CSV writes) and raises in place of the k-th, so mutation k and all after
-it never happen. Each test sweeps k over every mutation of one call.
+CSV writes, the driver's pyarrow parquet writes) and raises in place of
+the k-th, so mutation k and all after it never happen. Each test sweeps
+k over every mutation of one call, and checks that the killed call left
+no cached data in the session.
 """
 
 import contextlib
@@ -17,6 +19,7 @@ import shutil
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
@@ -49,7 +52,8 @@ def crash_at(k: int):
         return wrapper
 
     targets = [(os, "rename"), (os, "replace"), (shutil, "rmtree"),
-               (DataFrameWriter, "parquet"), (DataFrameWriter, "csv")]
+               (DataFrameWriter, "parquet"), (DataFrameWriter, "csv"),
+               (pq, "write_table")]
     originals = [(obj, attr, getattr(obj, attr)) for obj, attr in targets]
     for obj, attr, fn in originals:
         setattr(obj, attr, counted(attr, fn))
@@ -58,6 +62,10 @@ def crash_at(k: int):
     finally:
         for obj, attr, fn in originals:
             setattr(obj, attr, fn)
+
+
+def _persisted_rdds() -> int:
+    return SparkSession.getActiveSession().sparkContext._jsc.getPersistentRDDs().size()
 
 
 def _sweep_kills(prepared: str, scratch: str, call, snapshot) -> tuple[int, list[str]]:
@@ -72,6 +80,7 @@ def _sweep_kills(prepared: str, scratch: str, call, snapshot) -> tuple[int, list
     while True:
         shutil.rmtree(scratch)
         shutil.copytree(prepared, scratch)
+        persisted = _persisted_rdds()
         with crash_at(k) as seen:
             try:
                 call(scratch)
@@ -79,6 +88,8 @@ def _sweep_kills(prepared: str, scratch: str, call, snapshot) -> tuple[int, list
                 pass
         if len(seen) < k:  # no mutation left to kill before
             return k - 1, failures
+        if _persisted_rdds() != persisted:
+            failures.append(f"kill before {seen[-1]} (k={k}): left cached data in the session")
         call(scratch)  # resume
         got = snapshot(scratch)
         failures += [

@@ -163,3 +163,127 @@ def test_old_layout_report_dir_is_refused(tmp_path, old_file):
     (root / old_file).write_text("{}")
     with pytest.raises(ValueError, match="delete the directory"):
         ReportStore(str(root))
+
+
+def test_update_counts_are_the_delta_row_count(spark, tmp_path):
+    """Every report's count is the number of pages in the delta, the
+    append report's included (it once counted its delta twice)."""
+    from crawlspark.plans.reports import REPORTS
+
+    full = pages_only(build_pages(spark, 240, n_hosts=8))
+    cut = dt.datetime(2024, 3, 1, 0, 7)
+    root = str(tmp_path / "reports")
+    update_reports(spark, full.where(F.col("warc_ts") <= F.lit(cut)), root)
+    counts = update_reports(spark, full, root)
+    n = full.where(F.col("warc_ts") > F.lit(cut)).count()
+    assert n > 0
+    assert counts == dict.fromkeys(REPORTS, n)
+
+
+def test_timestamp_ntz_pages_give_declared_types_and_o23_csv(spark, tmp_path):
+    """A pages log whose warc_ts is TIMESTAMP_NTZ (parquet written by
+    pyarrow reads that way) yields the same versions, Spark types and
+    CSV bytes as a TIMESTAMP one: rows are cast to the declared schema
+    and both kinds print in the round-trip format (O23)."""
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from crawlspark.plans.reports import REPORTS
+
+    full = pages_only(build_pages(spark, 200, n_hosts=6))
+    ntz = full.withColumn("warc_ts", F.col("warc_ts").cast("timestamp_ntz"))
+    assert dict(ntz.dtypes)["warc_ts"] == "timestamp_ntz"
+    roots = {kind: tmp_path / kind for kind in ("tz", "ntz")}
+    assert update_reports(spark, ntz, str(roots["ntz"])) == update_reports(spark, full, str(roots["tz"]))
+    for name in REPORTS:
+        csv = {kind: (root / f"{name}.csv").read_bytes() for kind, root in roots.items()}
+        assert csv["ntz"] == csv["tz"], name
+        got = ReportStore(str(roots["ntz"])).read(spark, name)
+        assert got.schema == ReportStore(str(roots["tz"])).read(spark, name).schema
+        assert T.TimestampType() in [f.dataType for f in got.schema]
+        assert sorted(got.collect()) == sorted(ReportStore(str(roots["tz"])).read(spark, name).collect())
+    raw = pq.read_table(str(roots["ntz"] / "deleted_pages.parquet"))
+    assert raw.schema.field("warc_ts").type == pa.timestamp("us", tz="UTC")
+    rows = (roots["ntz"] / "deleted_pages.csv").read_text().splitlines()[1:]
+    assert rows and all(
+        re.fullmatch(r"\d{4}-\d\d-\d\dT\d\d:\d\d:\d\d\.\d{7}Z", r.split(",")[0]) for r in rows
+    )
+
+
+def test_aggregate_commit_log_keeps_only_the_live_version(spark, tmp_path):
+    """An aggregate report's commit expires the older versions from its
+    log: after three updates the log names one version, whose meta
+    carries the latest cursor. The append report keeps all three."""
+    import json
+
+    full = pages_only(build_pages(spark, 240, n_hosts=8))
+    root = tmp_path / "reports"
+    for cut in (dt.datetime(2024, 3, 1, 0, 4), dt.datetime(2024, 3, 1, 0, 9), None):
+        pages = full if cut is None else full.where(F.col("warc_ts") <= F.lit(cut))
+        assert all(update_reports(spark, pages, str(root)).values())
+    head = full.agg(F.max("warc_ts")).first()[0]
+    store = ReportStore(str(root))
+    for name in ("page_count_by_day", "page_count_by_day_kind"):
+        log = json.loads((root / f"{name}.parquet" / "_commits.json").read_text())
+        assert log["epochs"] == [2] and list(log["meta"]) == ["2"], log
+        assert store.cursor(name) == head
+    assert json.loads((root / "deleted_pages.parquet" / "_commits.json").read_text())["epochs"] == [0, 1, 2]
+    got = {(r["day"], r["value"]) for r in store.read(spark, "page_count_by_day").collect()}
+    assert got == {(r["day"], r["value"]) for r in page_count_by_day(full).collect()}
+
+
+def test_update_of_all_reports_launches_few_spark_jobs(spark, tmp_path):
+    """All three reports share one cursor, so an update runs one
+    aggregate over the delta plus the append report's write: a handful
+    of Spark jobs, not a scan, sort and CSV write per report."""
+    full = pages_only(build_pages(spark, 240, n_hosts=8))
+    root = str(tmp_path / "reports")
+    update_reports(spark, full.where(F.col("warc_ts") <= F.lit(dt.datetime(2024, 3, 1, 0, 7))), root)
+    sc = spark.sparkContext
+    sc.setJobGroup("report-update-job-count", "update_reports job count")
+    try:
+        counts = update_reports(spark, full, root)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("report-update-job-count")
+    assert all(counts.values())
+    assert 0 < len(jobs) <= 6, len(jobs)
+
+
+def test_driver_csv_matches_spark_csv_writer(spark, tmp_path):
+    """The driver's CSV lines are byte-identical to Spark's CSV writer
+    (default options) after date_format(ISO_O_FMT) on both timestamp
+    kinds, for values that need quoting, escaping or trimming."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from crawlspark.plans.reports import ISO_O_FMT, csv_lines
+
+    texts = [
+        "plain", "a,b", 'say "hi"', "two\nlines", "cr\rlf\r\n", "naïve café 日本",
+        "back\\slash", 'back\\"quote', "  padded, ", "\ttab", "", None, " ",
+    ]
+    stamps = ["2024-03-01 00:00:00", "2024-03-01 12:34:56.123456", "1969-12-31 23:59:59.999999", None]
+    rows = [(i, t, stamps[i % len(stamps)]) for i, t in enumerate(texts)]
+    df = (
+        spark.createDataFrame(rows, "i long, s string, t string")
+        .select(
+            "i", "s",
+            F.col("t").cast("timestamp").alias("ts"),
+            F.col("t").cast("timestamp_ntz").alias("ntz"),
+        )
+        .coalesce(1)
+    )
+    df.write.parquet(str(tmp_path / "rows"))
+    df.select(
+        "i", "s", F.date_format("ts", ISO_O_FMT).alias("ts"), F.date_format("ntz", ISO_O_FMT).alias("ntz"),
+    ).write.csv(str(tmp_path / "spark_csv"))
+    (part,) = glob.glob(str(tmp_path / "spark_csv" / "part-*.csv"))
+    with open(part, "rb") as f:
+        want = f.read()
+    got = csv_lines(pq.read_table(str(tmp_path / "rows")).sort_by("i"))
+    assert got == want
