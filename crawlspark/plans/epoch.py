@@ -119,6 +119,27 @@ def _needed_python(stats: list[dict]) -> bool:
     return any(s.get("python_fallback_rows", 0) > 0 for s in stats)
 
 
+def _pin(df: DataFrame, pinned: list[DataFrame]) -> DataFrame:
+    """``df`` computed once and kept in the session (an eager
+    localCheckpoint), so the jobs that reuse it stop re-reading its
+    source. Appended to ``pinned``; ``_unpin`` releases it."""
+    df = df.localCheckpoint(eager=True)
+    pinned.append(df)
+    return df
+
+
+def _unpin(df: DataFrame) -> None:
+    # the checkpointed RDD sits under the frame's LogicalRDD, where
+    # DataFrame.unpersist (a cache-manager lookup) does not reach it
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _unpersist_all(frames: list[DataFrame]) -> None:
+    for df in frames:
+        df.unpersist()
+    frames.clear()
+
+
 def _dir_files(epoch_dir: str) -> list[str]:
     return sorted(_glob.glob(os.path.join(epoch_dir, "*.parquet")))
 
@@ -307,430 +328,440 @@ def web_crawl(
     # sticky: once an epoch needed the Python extraction, later ones start there
     python = _needed_python(prior)
 
-    # pin the tiny broadcast sides once per RUN: every epoch job
-    # broadcasts them, and without this each broadcast re-scans the
-    # user's source (parquet/CSV) from scratch — O(#epochs) re-reads
-    if robots is not None:
-        robots = robots.localCheckpoint(eager=True)
-    if (
-        cfg.respect_crawl_delay
-        and robots is not None
-        and "crawl_delay_s" in robots.columns
-    ):
-        delay_b = budgets_from_crawl_delay(robots, cfg.delay_epoch_seconds)
-        if host_budgets is None:
-            host_budgets = delay_b
-        else:
-            # a host present in both tables gets the stricter budget
-            a = host_budgets.select("host", F.col("tokens_per_epoch").alias("__a"))
-            b = delay_b.select("host", F.col("tokens_per_epoch").alias("__b"))
-            host_budgets = a.join(b, "host", "full").select(
-                "host",
-                F.least(
-                    F.coalesce("__a", "__b"), F.coalesce("__b", "__a")
-                ).alias("tokens_per_epoch"),
-            )
-    if host_budgets is not None:
-        host_budgets = host_budgets.localCheckpoint(eager=True)
-
-    backoff_df = None  # (host, consec_fails), carried across epochs
-    if cfg.adaptive_backoff:
-        prev_ep = state.next_epoch() - 1
-        if prev_ep >= 0 and os.path.isdir(state.backoff._epoch_dir(prev_ep)):
-            backoff_df = state.backoff.read(spark, epochs=[prev_ep]).drop("epoch")
-
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    has_avail = "available_from_attempt" in pages.columns
-    pages_cols = ["url", "warc_ts", "html", "lang"] + (
-        ["available_from_attempt"] if has_avail else []
-    )
-    pages_sel = pages.select(*pages_cols)
-
-    seen_bloom: IncrementalSeen | None = None
-    if cfg.use_bloom:
-        seen_bloom = IncrementalSeen(
-            spark, capacity=max(cfg.bloom_capacity, 2 * total_final), fpp=cfg.bloom_fpp,
-        )
-        # (no eager fold here: the per-epoch catch-up below folds the
-        # committed history once the seen set crosses bloom_min_seen —
-        # this also covers resume)
-
-    trace = os.environ.get("CRAWLSPARK_TRACE") == "1"
-    tmark = [time.time()]
-
-    def _t(label: str) -> None:
-        if trace:
-            now = time.time()
-            print(f"    [epoch trace] {label}: {now - tmark[0]:.2f}s", flush=True)
-            tmark[0] = now
-
-    seed_count: int | None = None
-
-    for epoch in range(start, cfg.max_epochs):
-        if cfg.max_total_urls is not None and total_final >= cfg.max_total_urls:
-            break
-        tmark[0] = time.time()
-        # tag every job this epoch submits — the Spark UI groups them,
-        # and event-log analysis (perfbench/tracing.py) tells the epoch
-        # loop's jobs from setup jobs by this prefix
-        spark.sparkContext.setLocalProperty(
-            "spark.job.description", f"crawl-epoch-{epoch}:{state_dir}"
-        )
-
-        # 1. pending frontier: previous epoch's remainder, or the seeds.
-        #    The frontier invariant guarantees pending ∩ seen = ∅, so no
-        #    seen-set filtering happens on this path at all.
-        if epoch == 0:
-            if seed_count is None:
-                seed_count = seeds.count()  # one tiny metadata-only job
-            pending = _normalize_seeds(seeds, cfg.normalize_urls)
-            if blocklist is not None:
-                # a blocked host is never fetched, even from the seed
-                # list; same suffix-match chain as link admission
-                pending = filter_blocked_hosts(pending, blocklist)
-            pending = pending.repartition(n_shuffle, "url")
-            est_dequeued = seed_count
-        else:
-            fdir = state.frontier._epoch_dir(epoch - 1)
-            pending_rows, pending_files = _dir_row_count(fdir)
-            if pending_rows == 0:
-                break
-            pending = state.frontier.read(spark, epochs=[epoch - 1]).drop("epoch")
-            # width-normalize: a small frontier read yields fewer input
-            # splits than cores, starving every pre-shuffle step. One
-            # cheap narrow-row shuffle fixes it; skipped when the source
-            # is already wide (the at-scale case).
-            if pending_files < max(2, n_shuffle // 2):
-                pending = pending.repartition(n_shuffle, "url")
-            est_dequeued = pending_rows
-        if cfg.global_budget_per_epoch is not None:
-            est_dequeued = min(est_dequeued, cfg.global_budget_per_epoch)
-
-        if priorities is not None:
-            # external visit-order signal (in-link counts / PageRank /
-            # sitemap priority — operators/prioritize.py): one url-keyed
-            # left join; unscored rows keep their inherited priority
-            pending = apply_priority_scores(pending, priorities)
-
-        # host re-derived AFTER the frontier read / width repartition —
-        # the stored frontier row and every pre-dequeue shuffle stay
-        # host-free (bandwidth), the regex is codegen'd compute (scales)
-        pending = pending.withColumn("host", host_of(F.col("url")))
-
-        # 2. robots + politeness dequeue (salted two-phase per-host top-K).
-        #    The split variant yields the selected set AND the remainder
-        #    from one cached phase-1 pass — no remainder anti-join.
-        allowed = apply_robots(pending, robots)
-        epoch_budgets = host_budgets
-        if cfg.adaptive_backoff and backoff_df is not None:
-            # exponential deration for currently-unhealthy hosts; tiny
-            # table, broadcast at the dequeue join like any budget table
-            epoch_budgets = derate_budgets(
-                host_budgets, backoff_df, cfg.default_budget
-            )
-        if cfg.global_budget_per_epoch is None:
-            dequeued, remaining, phase1 = topk_per_host_split(
-                allowed, epoch_budgets, cfg.default_budget, salt=cfg.salt,
-            )
-        else:
-            phase1 = allowed.cache()
-            dequeued = topk_per_host(phase1, epoch_budgets, cfg.default_budget, salt=cfg.salt)
-            dequeued = ordered_limit(dequeued, cfg.global_budget_per_epoch, list(ORDER_COLS))
-            remaining = None  # derived below from the final dequeued set
-        dequeued = dequeued.cache()
-        if remaining is None:
-            remaining = phase1.join(dequeued.select("url"), "url", "left_anti")
-
-        # 3. "fetch": equi-join against the pages snapshot. Small dequeues
-        #    broadcast (one pages scan with all columns + one url-only
-        #    columnar scan for the misses semi-join — the 100 TB table is
-        #    never shuffled); large dequeues use ONE right-outer
-        #    shuffle-hash join that yields hits and misses together —
-        #    building a multi-hundred-MB broadcast relation is
-        #    single-threaded driver work and anti-scales.
-        small = est_dequeued <= cfg.broadcast_threshold
-        if small:
-            found = pages_sel.join(F.broadcast(dequeued), "url", "inner")
-            found_urls = pages_sel.select("url").join(
-                F.broadcast(dequeued.select("url")), "url", "left_semi"
-            )
-            notfound = dequeued.join(found_urls, "url", "left_anti").select(
-                "url", "host", "priority", "discovery_ts", "attempts",
-                F.lit(None).cast("timestamp").alias("warc_ts"),
-                F.lit(None).cast("binary").alias("html"),
-                F.lit(None).cast("string").alias("lang"),
-                *([F.lit(None).cast("int").alias("available_from_attempt")] if has_avail else []),
-            )
-            joined = found.select(*notfound.columns).unionByName(notfound)
-        else:
-            joined = pages_sel.join(dequeued.hint("SHUFFLE_HASH"), "url", "right")
-
-        att1 = (F.col("attempts") + 1).cast("int")
-        avail = (
-            F.coalesce(F.col("available_from_attempt"), F.lit(1)) if has_avail else F.lit(1)
-        )
-        ok = F.col("html").isNotNull() & (att1 >= avail)
-        status = (
-            F.when(ok, F.lit("ok"))
-            .when(att1 >= F.lit(cfg.max_attempts), F.lit("failed"))
-            .otherwise(F.lit("retry"))
-        )
-        # cost-based seen-check: once the seen set outgrows a broadcast
-        # (bloom_min_seen), the bloom filter prefilters links BEFORE the
-        # groupBy shuffle and only the maybe-seen residue joins the seen
-        # table. Below the threshold, the exact anti-join runs AFTER the
-        # groupBy (reusing its url partitioning) against a broadcastable
-        # seen side — no per-epoch fold and no second pass over the links.
-        # Catch-up fold: first epoch above the threshold (or a resume)
-        # folds the committed history once; OR-ing is idempotent.
-        bloom_active = seen_bloom is not None and total_final >= cfg.bloom_min_seen
-        if bloom_active and seen_bloom.count < total_final:
-            seen_bloom.fold(state.seen_urls(spark), n_new=total_final - seen_bloom.count)
-            seen_bloom.rebuild_if_needed(state.seen_urls(spark))
-
-        # The extraction runs as expressions unless the state dir already
-        # met payloads they cannot read (``python``). The write's
-        # Observation counts such payloads; when there are any, the epoch
-        # is staged again on the Python UDF (staged dirs stay invisible
-        # until the commit below, and the re-write overwrites them), and
-        # ``python`` stays True for the epochs after it.
-        for python in (python, True):
-            base = joined.select(
-                "url", "host", "priority", "discovery_ts",
-                F.when(ok, F.col("warc_ts")).alias("warc_ts"),
-                extract_page(F.col("html"), python).alias("page"),
-                F.when(ok, F.col("lang")).alias("lang"),
-                status.alias("status"),
-                F.when(ok, F.length("html").cast("long")).otherwise(F.lit(0)).alias("content_bytes"),
-                att1.alias("attempts"),
-                ok.alias("__ok"),
-                (ok & needs_python(F.col("html"))).alias("__py"),
-            ).select(
-                "url", "host", "priority", "discovery_ts", "warc_ts",
-                F.when(F.col("__ok"), F.col("page.text")).alias("text"),
-                F.when(F.col("__ok"), F.col("page.links")).alias("links"),
-                "lang", "status", "attempts", "content_bytes", "__py",
-            )
-            # analysis in a second projection so the extraction column is
-            # referenced (and evaluated) exactly once
-            if cfg.analyze:
-                # simhash via the Arrow UDF, not the HOF expression: Catalyst
-                # re-evaluates HOF lambdas per element, and the 64-lane
-                # interpreted accumulate made analyze=True ~8x slower than
-                # off (textops.simhash64_udf docstring; bench analyze row)
-                from crawlspark.operators.textops import (
-                    quality_micro,
-                    simhash64_udf,
-                    token_count,
-                )
-
-                base = base.withColumns({
-                    "n_tokens": token_count(F.col("text")),
-                    "simhash": simhash64_udf(F.col("text")),
-                    "quality_micro": quality_micro(F.col("text")),
-                })
+    # what the run holds in the session, released however it ends:
+    # the pinned broadcast sides and the current epoch's caches
+    pinned: list[DataFrame] = []
+    cached: list[DataFrame] = []
+    try:
+        # pin the tiny broadcast sides once per RUN: every epoch job
+        # broadcasts them, and without this each broadcast re-scans the
+        # user's source (parquet/CSV) from scratch — O(#epochs) re-reads
+        if robots is not None:
+            robots = _pin(robots, pinned)
+        if (
+            cfg.respect_crawl_delay
+            and robots is not None
+            and "crawl_delay_s" in robots.columns
+        ):
+            delay_b = budgets_from_crawl_delay(robots, cfg.delay_epoch_seconds)
+            if host_budgets is None:
+                host_budgets = delay_b
             else:
-                base = base.withColumns({
-                    "n_tokens": F.lit(None).cast("long"),
-                    "simhash": F.lit(None).cast("long"),
-                    "quality_micro": F.lit(None).cast("long"),
-                })
-            # single pages scan + single html decode; html never cached
-            base = base.cache()
-            # ONE observation on the full dequeued-outcome relation: row
-            # counts, byte sum and cursor come out of the write job itself —
-            # no standalone count() actions (driver-latency lever). The
-            # observe node sits ABOVE the cache boundary and only
-            # on the branch feeding write A, so it fires exactly once.
-            obs = Observation(f"epoch_{epoch}_py" if python else f"epoch_{epoch}")
-            base_obs = base.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_dequeued"),
-                F.count(F.when(F.col("status") == "ok", 1)).alias("n_ok"),
-                F.count(F.when(F.col("status") == "failed", 1)).alias("n_failed"),
-                F.sum("content_bytes").alias("bytes"),
-                F.max("warc_ts").alias("max_warc"),
-                F.count(F.when(F.col("__py"), 1)).alias("n_python"),
-            )
-
-            # 4. stage the fetched table: FINAL outcomes only ('ok'/'failed');
-            #    'retry' rows go back to the frontier instead (O1 retry).
-            fetched_out = base_obs.where(F.col("status") != "retry").drop("links", "__py")
-
-            # 5. discover outlinks → next frontier.
-            #      next = dedupe(remaining ∪ retries ∪ (links ∖ seen)) ∖ finals
-            #    where dedupe keeps the min (discovery_ts, priority) entry —
-            #    an existing pending/retrying row always beats a fresh
-            #    re-discovery (its discovery_ts is older), matching the
-            #    sequential-reference semantics. Only the LINKS see the
-            #    seen-set (bloom prefilter + exact anti-join backstop on the
-            #    maybe-seen residue); remaining and retries are unseen by the
-            #    frontier invariant. finals excludes this epoch's outcomes.
-            # No host here: host_of is a regex per row and links are PRE-dedup
-            # (the same url can appear from thousands of pages) — deriving
-            # host after the groupBy shuffle computes it once per SURVIVOR
-            # and keeps the biggest shuffle of the epoch host-free.
-            raw_url = F.explode("links").alias("url")
-            links = base.where(F.col("status") == "ok").select(
-                raw_url, (F.col("priority") + 1).alias("priority")
-            )
-            if cfg.normalize_urls:
-                # canonicalize BEFORE validity/dedup/seen — alias forms of
-                # one URL must collapse to a single frontier row
-                links = links.withColumn("url", normalize_url(F.col("url")))
-            links = links.where(is_valid_http_url(F.col("url")))
-            if blocklist is not None:
-                # per-label-depth broadcast hash anti-joins — narrow, the
-                # blocklist broadcast is built once per run and reused
-                links = filter_blocked_hosts(links, blocklist)
-            if cfg.trap_guard:
-                # trap-shaped links never reach dedup/seen/frontier: the
-                # guard runs pre-shuffle on the raw link stream, so an
-                # unbounded URL family costs only its extraction bytes
-                links = filter_crawl_traps(links)
-            links = (
-                links.withColumn("discovery_ts", F.lit(_discovery_ts(epoch + 1)))
-                .withColumn("attempts", F.lit(0))
-            )
-            if bloom_active:
-                # seen_filter evaluates its input twice (definitely-new +
-                # maybe-seen residue branches), so it must run over a CHEAP
-                # plan — the link explode straight off the cached `base`,
-                # never a post-shuffle relation.
-                links = seen_filter(
-                    spark, links, state.seen_urls(spark),
-                    use_bloom=True,
-                    bloom=seen_bloom.serialized,
+                # a host present in both tables gets the stricter budget
+                a = host_budgets.select("host", F.col("tokens_per_epoch").alias("__a"))
+                b = delay_b.select("host", F.col("tokens_per_epoch").alias("__b"))
+                host_budgets = a.join(b, "host", "full").select(
+                    "host",
+                    F.least(
+                        F.coalesce("__a", "__b"), F.coalesce("__b", "__a")
+                    ).alias("tokens_per_epoch"),
                 )
-            frontier_cols = ["url", "priority", "discovery_ts", "attempts"]
-            next_frontier = (
-                remaining.select(*frontier_cols)
-                .unionByName(base.where(F.col("status") == "retry").select(*frontier_cols))
-                .unionByName(links.select(*frontier_cols))
-                .groupBy("url")
-                .agg(F.min(F.struct("discovery_ts", "priority", "attempts")).alias("s"))
-                .select(
-                    "url",
-                    F.col("s.priority").alias("priority"),
-                    F.col("s.discovery_ts").alias("discovery_ts"),
-                    F.col("s.attempts").alias("attempts"),
-                )
-                .join(
-                    base.where(F.col("status") != "retry").select("url").hint("SHUFFLE_HASH"),
-                    "url", "left_anti",
-                )
-            )
-            if not bloom_active and total_final > 0:
-                # exact path: remaining/retries are unseen by the frontier
-                # invariant, so this is a no-op for them; links to seen urls
-                # drop here. Runs on the deduped set, post-shuffle.
-                # SHUFFLE_HASH (here and on the finals anti-join above):
-                # catalyst would pick broadcast for a sub-threshold seen
-                # side, but building a 10^5-10^6-url hashed relation is
-                # SERIAL driver work — a per-epoch constant that anti-scales
-                # (same reason the large fetch join avoids broadcast). The
-                # left side is already url-partitioned by the groupBy, so
-                # only the small right side shuffles, fully parallel.
-                next_frontier = next_frontier.join(
-                    state.seen_urls(spark).hint("SHUFFLE_HASH"), "url", "left_anti"
-                )
+        if host_budgets is not None:
+            host_budgets = _pin(host_budgets, pinned)
 
-            # 6. ONE write action stages BOTH tables: fetched rows and next
-            #    frontier union under a discriminator column, partitionBy
-            #    splits them into each table's epoch dir. One pass over the
-            #    caches, one job's worth of scheduling per epoch.
-            combined = fetched_out.withColumn("__table", F.lit("fetched")).unionByName(
-                next_frontier.withColumn("__table", F.lit("frontier")),
-                allowMissingColumns=True,
-            )
-            state.fetched.write_epoch_split(state.frontier, combined, epoch)  # ACTION A
-            m = obs.get
-            if python or m["n_python"] == 0:
-                break
-            base.unpersist()
-        _t("write fetched+frontier")
-        n_dequeued = m["n_dequeued"]
-        n_ok, n_failed = m["n_ok"], m["n_failed"]
-        n_final = n_ok + n_failed
-        n_retry = n_dequeued - n_final
-        if n_dequeued == 0:
-            # nothing was pending beyond robots-blocked leftovers: the
-            # crawl is complete. The uncommitted epoch dirs are invisible
-            # to readers; remove them for tidiness.
-            import shutil
-            shutil.rmtree(state.fetched._epoch_dir(epoch), ignore_errors=True)
-            shutil.rmtree(state.frontier._epoch_dir(epoch), ignore_errors=True)
-            dequeued.unpersist()
-            phase1.unpersist()
-            base.unpersist()
-            break
-        n_frontier, _nf = _dir_row_count(state.frontier._epoch_dir(epoch))
-
-        # 7. per-partition lineage + fetch metrics (north_star checkpoint)
-        #    from the written files' FOOTERS — no extra action, O(#files).
-        lineage_rows = _lineage_from_footers(state.fetched._epoch_dir(epoch))
-        state.lineage.write_epoch_rows([("download", *r) for r in lineage_rows], epoch)
-
+        backoff_df = None  # (host, consec_fails), carried across epochs
         if cfg.adaptive_backoff:
-            # fold this epoch's per-host outcomes into the backoff state
-            # (ONE tiny aggregate over the cached outcomes) and persist
-            # it pre-commit like the other epoch tables; re-read from
-            # parquet so the carried relation outlives base.unpersist()
-            host_stats = base.groupBy("host").agg(
-                F.count(F.when(F.col("status") != "ok", 1)).alias("n_bad")
-            )
-            state.backoff.write_epoch(
-                update_backoff(backoff_df, host_stats), epoch
-            )
-            # read the STAGED dir directly (EpochTable.read only serves
-            # committed epochs, and the commit happens below); explicit
-            # schema so an all-healthy (0-row) epoch still reads
-            backoff_df = spark.read.schema(state.backoff.schema).parquet(
-                state.backoff._epoch_dir(epoch)
-            )
-            _t("backoff fold")
+            prev_ep = state.next_epoch() - 1
+            if prev_ep >= 0 and os.path.isdir(state.backoff._epoch_dir(prev_ep)):
+                backoff_df = state.backoff.read(spark, epochs=[prev_ep]).drop("epoch")
 
-        # 8. ONE atomic commit for all three tables.
-        max_warc = _utc_naive(m["max_warc"]) or EPOCH_MIN
-        cursor = max(state.cursor("download"), max_warc)
-        epoch_stats = {
-            "epoch": epoch,
-            "urls_dequeued": int(n_dequeued),
-            "urls_fetched": int(n_ok),
-            "urls_failed": int(n_failed),
-            "urls_retrying": int(n_retry),
-            "urls_pending_after": int(n_frontier),
-            "bytes": int(m["bytes"] or 0),
-            "python_fallback_rows": int(m["n_python"]),
-        }
-        state.commit_epoch(epoch, cursors={"download": cursor}, stats=epoch_stats)
-        stats_out.append(epoch_stats)
-        log.info("Epoch {}: committed", epoch)
-        with log.indent():
-            log.info("Fetched {} urls ({} failed, {} retrying)", n_ok, n_failed, n_retry)
-            log.debug("Frontier pending after: {}", int(n_frontier))
-            log.debug("Bytes fetched: {}", int(m["bytes"] or 0))
-        total_final += n_final
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        has_avail = "available_from_attempt" in pages.columns
+        pages_cols = ["url", "warc_ts", "html", "lang"] + (
+            ["available_from_attempt"] if has_avail else []
+        )
+        pages_sel = pages.select(*pages_cols)
 
-        # 9. fold this epoch's newly-final urls into the carried bloom
-        #    (ACTION C — small, O(delta)); grow-and-rebuild only when the
-        #    count outgrows capacity. Runs only while the bloom is
-        #    active (above bloom_min_seen) and a further epoch will
-        #    consume it — otherwise the catch-up fold at activation (or
-        #    on resume) rebuilds from the committed history.
-        if bloom_active and n_frontier > 0 and epoch + 1 < cfg.max_epochs:
-            seen_bloom.fold(
-                base.where(F.col("status") != "retry").select("url"), n_new=n_final
+        seen_bloom: IncrementalSeen | None = None
+        if cfg.use_bloom:
+            seen_bloom = IncrementalSeen(
+                spark, capacity=max(cfg.bloom_capacity, 2 * total_final), fpp=cfg.bloom_fpp,
             )
-            seen_bloom.rebuild_if_needed(state.seen_urls(spark))
-            _t("bloom fold")
+            # (no eager fold here: the per-epoch catch-up below folds the
+            # committed history once the seen set crosses bloom_min_seen —
+            # this also covers resume)
 
-        dequeued.unpersist()
-        base.unpersist()
-        phase1.unpersist()
-        if n_frontier == 0:
-            break
-    return stats_out
+        trace = os.environ.get("CRAWLSPARK_TRACE") == "1"
+        tmark = [time.time()]
+
+        def _t(label: str) -> None:
+            if trace:
+                now = time.time()
+                print(f"    [epoch trace] {label}: {now - tmark[0]:.2f}s", flush=True)
+                tmark[0] = now
+
+        seed_count: int | None = None
+
+        for epoch in range(start, cfg.max_epochs):
+            if cfg.max_total_urls is not None and total_final >= cfg.max_total_urls:
+                break
+            tmark[0] = time.time()
+            # tag every job this epoch submits — the Spark UI groups them,
+            # and event-log analysis (perfbench/tracing.py) tells the epoch
+            # loop's jobs from setup jobs by this prefix
+            spark.sparkContext.setLocalProperty(
+                "spark.job.description", f"crawl-epoch-{epoch}:{state_dir}"
+            )
+
+            # 1. pending frontier: previous epoch's remainder, or the seeds.
+            #    The frontier invariant guarantees pending ∩ seen = ∅, so no
+            #    seen-set filtering happens on this path at all.
+            if epoch == 0:
+                if seed_count is None:
+                    seed_count = seeds.count()  # one tiny metadata-only job
+                pending = _normalize_seeds(seeds, cfg.normalize_urls)
+                if blocklist is not None:
+                    # a blocked host is never fetched, even from the seed
+                    # list; same suffix-match chain as link admission
+                    pending = filter_blocked_hosts(pending, blocklist)
+                pending = pending.repartition(n_shuffle, "url")
+                est_dequeued = seed_count
+            else:
+                fdir = state.frontier._epoch_dir(epoch - 1)
+                pending_rows, pending_files = _dir_row_count(fdir)
+                if pending_rows == 0:
+                    break
+                pending = state.frontier.read(spark, epochs=[epoch - 1]).drop("epoch")
+                # width-normalize: a small frontier read yields fewer input
+                # splits than cores, starving every pre-shuffle step. One
+                # cheap narrow-row shuffle fixes it; skipped when the source
+                # is already wide (the at-scale case).
+                if pending_files < max(2, n_shuffle // 2):
+                    pending = pending.repartition(n_shuffle, "url")
+                est_dequeued = pending_rows
+            if cfg.global_budget_per_epoch is not None:
+                est_dequeued = min(est_dequeued, cfg.global_budget_per_epoch)
+
+            if priorities is not None:
+                # external visit-order signal (in-link counts / PageRank /
+                # sitemap priority — operators/prioritize.py): one url-keyed
+                # left join; unscored rows keep their inherited priority
+                pending = apply_priority_scores(pending, priorities)
+
+            # host re-derived AFTER the frontier read / width repartition —
+            # the stored frontier row and every pre-dequeue shuffle stay
+            # host-free (bandwidth), the regex is codegen'd compute (scales)
+            pending = pending.withColumn("host", host_of(F.col("url")))
+
+            # 2. robots + politeness dequeue (salted two-phase per-host top-K).
+            #    The split variant yields the selected set AND the remainder
+            #    from one cached phase-1 pass — no remainder anti-join.
+            allowed = apply_robots(pending, robots)
+            epoch_budgets = host_budgets
+            if cfg.adaptive_backoff and backoff_df is not None:
+                # exponential deration for currently-unhealthy hosts; tiny
+                # table, broadcast at the dequeue join like any budget table
+                epoch_budgets = derate_budgets(
+                    host_budgets, backoff_df, cfg.default_budget
+                )
+            if cfg.global_budget_per_epoch is None:
+                dequeued, remaining, phase1 = topk_per_host_split(
+                    allowed, epoch_budgets, cfg.default_budget, salt=cfg.salt,
+                )
+            else:
+                phase1 = allowed.cache()
+                dequeued = topk_per_host(phase1, epoch_budgets, cfg.default_budget, salt=cfg.salt)
+                dequeued = ordered_limit(dequeued, cfg.global_budget_per_epoch, list(ORDER_COLS))
+                remaining = None  # derived below from the final dequeued set
+            dequeued = dequeued.cache()
+            cached += [phase1, dequeued]
+            if remaining is None:
+                remaining = phase1.join(dequeued.select("url"), "url", "left_anti")
+
+            # 3. "fetch": equi-join against the pages snapshot. Small dequeues
+            #    broadcast (one pages scan with all columns + one url-only
+            #    columnar scan for the misses semi-join — the 100 TB table is
+            #    never shuffled); large dequeues use ONE right-outer
+            #    shuffle-hash join that yields hits and misses together —
+            #    building a multi-hundred-MB broadcast relation is
+            #    single-threaded driver work and anti-scales.
+            small = est_dequeued <= cfg.broadcast_threshold
+            if small:
+                found = pages_sel.join(F.broadcast(dequeued), "url", "inner")
+                found_urls = pages_sel.select("url").join(
+                    F.broadcast(dequeued.select("url")), "url", "left_semi"
+                )
+                notfound = dequeued.join(found_urls, "url", "left_anti").select(
+                    "url", "host", "priority", "discovery_ts", "attempts",
+                    F.lit(None).cast("timestamp").alias("warc_ts"),
+                    F.lit(None).cast("binary").alias("html"),
+                    F.lit(None).cast("string").alias("lang"),
+                    *(
+                        [F.lit(None).cast("int").alias("available_from_attempt")]
+                        if has_avail else []
+                    ),
+                )
+                joined = found.select(*notfound.columns).unionByName(notfound)
+            else:
+                joined = pages_sel.join(dequeued.hint("SHUFFLE_HASH"), "url", "right")
+
+            att1 = (F.col("attempts") + 1).cast("int")
+            avail = (
+                F.coalesce(F.col("available_from_attempt"), F.lit(1)) if has_avail else F.lit(1)
+            )
+            ok = F.col("html").isNotNull() & (att1 >= avail)
+            status = (
+                F.when(ok, F.lit("ok"))
+                .when(att1 >= F.lit(cfg.max_attempts), F.lit("failed"))
+                .otherwise(F.lit("retry"))
+            )
+            # cost-based seen-check: once the seen set outgrows a broadcast
+            # (bloom_min_seen), the bloom filter prefilters links BEFORE the
+            # groupBy shuffle and only the maybe-seen residue joins the seen
+            # table. Below the threshold, the exact anti-join runs AFTER the
+            # groupBy (reusing its url partitioning) against a broadcastable
+            # seen side — no per-epoch fold and no second pass over the links.
+            # Catch-up fold: first epoch above the threshold (or a resume)
+            # folds the committed history once; OR-ing is idempotent.
+            bloom_active = seen_bloom is not None and total_final >= cfg.bloom_min_seen
+            if bloom_active and seen_bloom.count < total_final:
+                seen_bloom.fold(state.seen_urls(spark), n_new=total_final - seen_bloom.count)
+                seen_bloom.rebuild_if_needed(state.seen_urls(spark))
+
+            # The extraction runs as expressions unless the state dir already
+            # met payloads they cannot read (``python``). The write's
+            # Observation counts such payloads; when there are any, the epoch
+            # is staged again on the Python UDF (staged dirs stay invisible
+            # until the commit below, and the re-write overwrites them), and
+            # ``python`` stays True for the epochs after it.
+            for python in (python, True):
+                base = joined.select(
+                    "url", "host", "priority", "discovery_ts",
+                    F.when(ok, F.col("warc_ts")).alias("warc_ts"),
+                    extract_page(F.col("html"), python).alias("page"),
+                    F.when(ok, F.col("lang")).alias("lang"),
+                    status.alias("status"),
+                    F.when(ok, F.length("html").cast("long"))
+                    .otherwise(F.lit(0)).alias("content_bytes"),
+                    att1.alias("attempts"),
+                    ok.alias("__ok"),
+                    (ok & needs_python(F.col("html"))).alias("__py"),
+                ).select(
+                    "url", "host", "priority", "discovery_ts", "warc_ts",
+                    F.when(F.col("__ok"), F.col("page.text")).alias("text"),
+                    F.when(F.col("__ok"), F.col("page.links")).alias("links"),
+                    "lang", "status", "attempts", "content_bytes", "__py",
+                )
+                # analysis in a second projection so the extraction column is
+                # referenced (and evaluated) exactly once
+                if cfg.analyze:
+                    # simhash via the Arrow UDF, not the HOF expression: Catalyst
+                    # re-evaluates HOF lambdas per element, and the 64-lane
+                    # interpreted accumulate made analyze=True ~8x slower than
+                    # off (textops.simhash64_udf docstring; bench analyze row)
+                    from crawlspark.operators.textops import (
+                        quality_micro,
+                        simhash64_udf,
+                        token_count,
+                    )
+
+                    base = base.withColumns({
+                        "n_tokens": token_count(F.col("text")),
+                        "simhash": simhash64_udf(F.col("text")),
+                        "quality_micro": quality_micro(F.col("text")),
+                    })
+                else:
+                    base = base.withColumns({
+                        "n_tokens": F.lit(None).cast("long"),
+                        "simhash": F.lit(None).cast("long"),
+                        "quality_micro": F.lit(None).cast("long"),
+                    })
+                # single pages scan + single html decode; html never cached
+                base = base.cache()
+                cached.append(base)
+                # ONE observation on the full dequeued-outcome relation: row
+                # counts, byte sum and cursor come out of the write job itself —
+                # no standalone count() actions (driver-latency lever). The
+                # observe node sits ABOVE the cache boundary and only
+                # on the branch feeding write A, so it fires exactly once.
+                obs = Observation(f"epoch_{epoch}_py" if python else f"epoch_{epoch}")
+                base_obs = base.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n_dequeued"),
+                    F.count(F.when(F.col("status") == "ok", 1)).alias("n_ok"),
+                    F.count(F.when(F.col("status") == "failed", 1)).alias("n_failed"),
+                    F.sum("content_bytes").alias("bytes"),
+                    F.max("warc_ts").alias("max_warc"),
+                    F.count(F.when(F.col("__py"), 1)).alias("n_python"),
+                )
+
+                # 4. stage the fetched table: FINAL outcomes only ('ok'/'failed');
+                #    'retry' rows go back to the frontier instead (O1 retry).
+                fetched_out = base_obs.where(F.col("status") != "retry").drop("links", "__py")
+
+                # 5. discover outlinks → next frontier.
+                #      next = dedupe(remaining ∪ retries ∪ (links ∖ seen)) ∖ finals
+                #    where dedupe keeps the min (discovery_ts, priority) entry —
+                #    an existing pending/retrying row always beats a fresh
+                #    re-discovery (its discovery_ts is older), matching the
+                #    sequential-reference semantics. Only the LINKS see the
+                #    seen-set (bloom prefilter + exact anti-join backstop on the
+                #    maybe-seen residue); remaining and retries are unseen by the
+                #    frontier invariant. finals excludes this epoch's outcomes.
+                # No host here: host_of is a regex per row and links are PRE-dedup
+                # (the same url can appear from thousands of pages) — deriving
+                # host after the groupBy shuffle computes it once per SURVIVOR
+                # and keeps the biggest shuffle of the epoch host-free.
+                raw_url = F.explode("links").alias("url")
+                links = base.where(F.col("status") == "ok").select(
+                    raw_url, (F.col("priority") + 1).alias("priority")
+                )
+                if cfg.normalize_urls:
+                    # canonicalize BEFORE validity/dedup/seen — alias forms of
+                    # one URL must collapse to a single frontier row
+                    links = links.withColumn("url", normalize_url(F.col("url")))
+                links = links.where(is_valid_http_url(F.col("url")))
+                if blocklist is not None:
+                    # per-label-depth broadcast hash anti-joins — narrow, the
+                    # blocklist broadcast is built once per run and reused
+                    links = filter_blocked_hosts(links, blocklist)
+                if cfg.trap_guard:
+                    # trap-shaped links never reach dedup/seen/frontier: the
+                    # guard runs pre-shuffle on the raw link stream, so an
+                    # unbounded URL family costs only its extraction bytes
+                    links = filter_crawl_traps(links)
+                links = (
+                    links.withColumn("discovery_ts", F.lit(_discovery_ts(epoch + 1)))
+                    .withColumn("attempts", F.lit(0))
+                )
+                if bloom_active:
+                    # seen_filter evaluates its input twice (definitely-new +
+                    # maybe-seen residue branches), so it must run over a CHEAP
+                    # plan — the link explode straight off the cached `base`,
+                    # never a post-shuffle relation.
+                    links = seen_filter(
+                        spark, links, state.seen_urls(spark),
+                        use_bloom=True,
+                        bloom=seen_bloom.serialized,
+                    )
+                frontier_cols = ["url", "priority", "discovery_ts", "attempts"]
+                next_frontier = (
+                    remaining.select(*frontier_cols)
+                    .unionByName(base.where(F.col("status") == "retry").select(*frontier_cols))
+                    .unionByName(links.select(*frontier_cols))
+                    .groupBy("url")
+                    .agg(F.min(F.struct("discovery_ts", "priority", "attempts")).alias("s"))
+                    .select(
+                        "url",
+                        F.col("s.priority").alias("priority"),
+                        F.col("s.discovery_ts").alias("discovery_ts"),
+                        F.col("s.attempts").alias("attempts"),
+                    )
+                    .join(
+                        base.where(F.col("status") != "retry").select("url").hint("SHUFFLE_HASH"),
+                        "url", "left_anti",
+                    )
+                )
+                if not bloom_active and total_final > 0:
+                    # exact path: remaining/retries are unseen by the frontier
+                    # invariant, so this is a no-op for them; links to seen urls
+                    # drop here. Runs on the deduped set, post-shuffle.
+                    # SHUFFLE_HASH (here and on the finals anti-join above):
+                    # catalyst would pick broadcast for a sub-threshold seen
+                    # side, but building a 10^5-10^6-url hashed relation is
+                    # SERIAL driver work — a per-epoch constant that anti-scales
+                    # (same reason the large fetch join avoids broadcast). The
+                    # left side is already url-partitioned by the groupBy, so
+                    # only the small right side shuffles, fully parallel.
+                    next_frontier = next_frontier.join(
+                        state.seen_urls(spark).hint("SHUFFLE_HASH"), "url", "left_anti"
+                    )
+
+                # 6. ONE write action stages BOTH tables: fetched rows and next
+                #    frontier union under a discriminator column, partitionBy
+                #    splits them into each table's epoch dir. One pass over the
+                #    caches, one job's worth of scheduling per epoch.
+                combined = fetched_out.withColumn("__table", F.lit("fetched")).unionByName(
+                    next_frontier.withColumn("__table", F.lit("frontier")),
+                    allowMissingColumns=True,
+                )
+                state.fetched.write_epoch_split(state.frontier, combined, epoch)  # ACTION A
+                m = obs.get
+                if python or m["n_python"] == 0:
+                    break
+                base.unpersist()
+            _t("write fetched+frontier")
+            n_dequeued = m["n_dequeued"]
+            n_ok, n_failed = m["n_ok"], m["n_failed"]
+            n_final = n_ok + n_failed
+            n_retry = n_dequeued - n_final
+            if n_dequeued == 0:
+                # nothing was pending beyond robots-blocked leftovers: the
+                # crawl is complete. The uncommitted epoch dirs are invisible
+                # to readers; remove them for tidiness.
+                import shutil
+                shutil.rmtree(state.fetched._epoch_dir(epoch), ignore_errors=True)
+                shutil.rmtree(state.frontier._epoch_dir(epoch), ignore_errors=True)
+                break
+            n_frontier, _nf = _dir_row_count(state.frontier._epoch_dir(epoch))
+
+            # 7. per-partition lineage + fetch metrics (north_star checkpoint)
+            #    from the written files' FOOTERS — no extra action, O(#files).
+            lineage_rows = _lineage_from_footers(state.fetched._epoch_dir(epoch))
+            state.lineage.write_epoch_rows([("download", *r) for r in lineage_rows], epoch)
+
+            if cfg.adaptive_backoff:
+                # fold this epoch's per-host outcomes into the backoff state
+                # (ONE tiny aggregate over the cached outcomes) and persist
+                # it pre-commit like the other epoch tables; re-read from
+                # parquet so the carried relation outlives base.unpersist()
+                host_stats = base.groupBy("host").agg(
+                    F.count(F.when(F.col("status") != "ok", 1)).alias("n_bad")
+                )
+                state.backoff.write_epoch(
+                    update_backoff(backoff_df, host_stats), epoch
+                )
+                # read the STAGED dir directly (EpochTable.read only serves
+                # committed epochs, and the commit happens below); explicit
+                # schema so an all-healthy (0-row) epoch still reads
+                backoff_df = spark.read.schema(state.backoff.schema).parquet(
+                    state.backoff._epoch_dir(epoch)
+                )
+                _t("backoff fold")
+
+            # 8. ONE atomic commit for all three tables.
+            max_warc = _utc_naive(m["max_warc"]) or EPOCH_MIN
+            cursor = max(state.cursor("download"), max_warc)
+            epoch_stats = {
+                "epoch": epoch,
+                "urls_dequeued": int(n_dequeued),
+                "urls_fetched": int(n_ok),
+                "urls_failed": int(n_failed),
+                "urls_retrying": int(n_retry),
+                "urls_pending_after": int(n_frontier),
+                "bytes": int(m["bytes"] or 0),
+                "python_fallback_rows": int(m["n_python"]),
+            }
+            state.commit_epoch(epoch, cursors={"download": cursor}, stats=epoch_stats)
+            stats_out.append(epoch_stats)
+            log.info("Epoch {}: committed", epoch)
+            with log.indent():
+                log.info("Fetched {} urls ({} failed, {} retrying)", n_ok, n_failed, n_retry)
+                log.debug("Frontier pending after: {}", int(n_frontier))
+                log.debug("Bytes fetched: {}", int(m["bytes"] or 0))
+            total_final += n_final
+
+            # 9. fold this epoch's newly-final urls into the carried bloom
+            #    (ACTION C — small, O(delta)); grow-and-rebuild only when the
+            #    count outgrows capacity. Runs only while the bloom is
+            #    active (above bloom_min_seen) and a further epoch will
+            #    consume it — otherwise the catch-up fold at activation (or
+            #    on resume) rebuilds from the committed history.
+            if bloom_active and n_frontier > 0 and epoch + 1 < cfg.max_epochs:
+                seen_bloom.fold(
+                    base.where(F.col("status") != "retry").select("url"), n_new=n_final
+                )
+                seen_bloom.rebuild_if_needed(state.seen_urls(spark))
+                _t("bloom fold")
+
+            _unpersist_all(cached)
+            if n_frontier == 0:
+                break
+        return stats_out
+    finally:
+        _unpersist_all(cached)
+        for df in pinned:
+            _unpin(df)
 
 
 def visited_trace(spark: SparkSession, state_dir: str) -> DataFrame:

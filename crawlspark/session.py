@@ -84,7 +84,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "snappy")
         # zstd shuffle/broadcast blocks: shuffle bytes cross the network
         # on a real cluster and the memory bus in local mode — trading
         # (perfectly parallel) compression cycles for fewer transported
@@ -102,6 +101,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # generated-class cache (default 100 entries): a 2-epoch polite
+        # crawl uses about 160 distinct classes, so with the default every
+        # epoch recompiles 50-100 of them through Janino and the JIT; with
+        # room for a long crawl's working set, later epochs compile ~4
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

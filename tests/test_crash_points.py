@@ -7,8 +7,9 @@ row (the reference's "re-crawl, never skip" contract).
 (``os.rename``, ``os.replace``, ``shutil.rmtree``, Spark's parquet and
 CSV writes, the driver's pyarrow parquet writes) and raises in place of
 the k-th, so mutation k and all after it never happen. Each test sweeps
-k over every mutation of one call, and checks that the killed call left
-no cached data in the session.
+k over every mutation of one call (an update, a catalog increment, a
+``web_crawl`` epoch), and checks that the killed call left no cached
+data in the session.
 """
 
 import contextlib
@@ -23,7 +24,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
-from crawlspark.plans.epoch import catalog_crawl
+from crawlspark.plans.epoch import CrawlConfig, catalog_crawl, visited_trace, web_crawl
 from crawlspark.plans.reports import REPORTS, ReportStore, update_reports
 from crawlspark.plans.state import CrawlState
 from crawlspark.testdata import build_pages, pages_only
@@ -162,5 +163,40 @@ def test_catalog_crawl_resumes_after_a_kill_at_every_mutation(spark, corpus_dir,
         snapshot,
     )
     assert n >= 2  # the fetched write and the commit
+    assert not failures, "\n".join(failures)
+    assert snapshot(str(tmp_path / "state"))["duplicates"] == 0
+
+
+def test_web_crawl_resumes_after_a_kill_at_every_mutation(spark, corpus_dir, tmp_path):
+    """Second epoch of a small crawl, killed before each of its mutations
+    in turn: the visit trace, the committed epochs and the last frontier
+    match an uninterrupted run, with no URL fetched twice."""
+    def read(name):
+        return spark.read.parquet(os.path.join(corpus_dir, f"{name}.parquet"))
+
+    pages, seeds, robots, budgets = map(read, ("pages", "seeds", "robots", "host_budgets"))
+
+    def crawl(state_dir, max_epochs):
+        web_crawl(
+            spark, pages, state_dir, seeds, robots=robots, host_budgets=budgets,
+            config=CrawlConfig(default_budget=8, max_epochs=max_epochs),
+        )
+
+    def snapshot(state_dir):
+        state = CrawlState(state_dir)
+        trace = [(r["epoch"], r["url"]) for r in visited_trace(spark, state_dir).collect()]
+        last = state.log.last_epoch()
+        frontier = state.frontier.read(spark, epochs=[last]).drop("epoch").collect()
+        return {
+            "trace": trace, "duplicates": len(trace) - len({url for _, url in trace}),
+            "epochs": state.log.committed_epochs(), "frontier": sorted(map(tuple, frontier)),
+        }
+
+    prepared = str(tmp_path / "prepared")
+    crawl(prepared, 1)
+    n, failures = _sweep_kills(
+        prepared, str(tmp_path / "state"), lambda sd: crawl(sd, 2), snapshot,
+    )
+    assert n >= 4  # the fetched+frontier write, its renames, the lineage write, the commit
     assert not failures, "\n".join(failures)
     assert snapshot(str(tmp_path / "state"))["duplicates"] == 0
