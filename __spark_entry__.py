@@ -22,7 +22,6 @@ training-data ops: dedup_exact, dedup_minhash_lsh, dedup_simhash,
 ngram_jaccard, embedding_topk (+ rows-only LSH/IVF/multimodal
 variants), lang_id, quality_score, token_count, fingerprint,
 winnow_fingerprint + winnow_overlap (rolling-hash local overlap),
-hash_split_assign + stratified_sample (deterministic splits),
 sessionize; TPC-H-ish pricing_summary and region_revenue_join.
 """
 
@@ -194,14 +193,12 @@ def _q_group_count_by_commit(spark, sf_dir):
     ).agg(F.count("*").alias("pending"))
 
 
-# demoted to the tail in round 5 (window rotation): its group-count
-# core is re-exercised by commit_budget_cutoff's windowed oracle, and
-# the exact twin still runs in the pytest parity gate
-_register("group_count_by_commit", _q_group_count_by_commit, None)
-_TAIL_ORACLES["group_count_by_commit"] = (
+_register(
+    "group_count_by_commit",
+    _q_group_count_by_commit,
     f"""SELECT strftime(date_trunc('hour', ts), '{TS_FMT_DUCK}') AS commit_str,
                count(*) AS pending
-        FROM events GROUP BY 1"""
+        FROM events GROUP BY 1""",
 )
 
 
@@ -912,12 +909,11 @@ def _q_json_roundtrip(spark, sf_dir):
     )
 
 
-# demoted to the tail in round 5 (window rotation): json_rewrite's
-# windowed oracle covers the O3 parse/serialize surface end-to-end
-_register("json_roundtrip", _q_json_roundtrip, None)
-_TAIL_ORACLES["json_roundtrip"] = (
+_register(
+    "json_roundtrip",
+    _q_json_roundtrip,
     """SELECT doc_id, source AS source_rt, lang AS lang_rt, source AS source_path
-       FROM documents"""
+       FROM documents""",
 )
 
 
@@ -1033,10 +1029,10 @@ def _q_quality_score(spark, sf_dir):
     from crawlspark.operators.textops import STOPWORDS, occurrences, token_count
 
     docs = _t(spark, sf_dir, "documents")
-    # stopword-hit and token counts STAGED once (r6): stop_ratio_micro
+    # stopword-hit and token counts STAGED once (r6): the stopword ratio
     # and quality_micro each re-ran the 8-replace occurrence battery
     # (and the token count) when built as independent expressions; the
-    # formulas below are textops.stop_ratio_micro / quality_micro
+    # formulas below are floor(hits·10^6 / tokens) and textops.quality_micro
     # verbatim over the staged columns — identical integers
     staged = docs.select(
         "doc_id",
@@ -1109,65 +1105,6 @@ _register(
           AND ({_lang_case}) = 'en'
           AND {_quality_sql} >= {_Q_THRESH}""",
 )
-
-
-_SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
-_STRAT_RATES = {"de": 1.0, "en": 0.5}
-_STRAT_DEFAULT = 0.25
-
-
-def _q_hash_split_assign(spark, sf_dir):
-    """Deterministic train/val/test assignment (operators/sampling.py):
-    membership is a pure function of md5(seed ':' doc_id) — stable
-    under repartitioning, re-runs, and engine choice. One codegen'd
-    CASE ladder of fixed-width hex string compares; no shuffle."""
-    from crawlspark.operators.sampling import hash_split
-
-    docs = _t(spark, sf_dir, "documents")
-    return hash_split(docs, "doc_id", _SPLITS, seed="42").select("doc_id", "split")
-
-
-_register(
-    "hash_split_assign",
-    _q_hash_split_assign,
-    None,  # filled below from the shared SQL builder
-)
-
-
-def _q_stratified_sample(spark, sf_dir):
-    """Per-language quota sampling: keep all de, half of en, a quarter
-    of the rest — the standard language-rebalancing step before
-    training. Single filter, key-hash membership, no shuffle."""
-    from crawlspark.operators.sampling import stratified_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    return stratified_sample(
-        docs, "doc_id", "lang", _STRAT_RATES, default_rate=_STRAT_DEFAULT, seed="q"
-    ).select("doc_id", "lang")
-
-
-def _sampling_oracles() -> None:
-    from crawlspark.operators.sampling import (
-        _threshold_hex,
-        hash_draw_sql,
-        hash_split_sql,
-    )
-
-    _ORACLES["hash_split_assign"] = (
-        f"SELECT doc_id, {hash_split_sql('doc_id', _SPLITS, seed='42')} AS split "
-        "FROM documents"
-    )
-    draw = hash_draw_sql("doc_id", seed="q")
-    cases = " ".join(
-        f"WHEN '{v}' THEN '{_threshold_hex(r)}'" for v, r in _STRAT_RATES.items()
-    )
-    _ORACLES["stratified_sample"] = (
-        f"SELECT doc_id, lang FROM documents "
-        f"WHERE {draw} < CASE lang {cases} ELSE '{_threshold_hex(_STRAT_DEFAULT)}' END"
-    )
-
-
-_register("stratified_sample", _q_stratified_sample, None)
 
 
 def _q_repetition_profile(spark, sf_dir):
@@ -1251,15 +1188,14 @@ def _q_surt_key(spark, sf_dir):
     return docs.select("doc_id", surt_key(F.expr(_MESSY_URL_SPARK)).alias("surt"))
 
 
-def _surt_tail_oracle() -> str:
+def _surt_oracle() -> str:
     from crawlspark.functions.urls import surt_key_sql
 
     messy = _MESSY_URL_SPARK.replace("CAST(doc_id % 5 AS INT)", "CAST(doc_id % 5 AS INTEGER)")
     return f"SELECT doc_id, {surt_key_sql(f'({messy})')} AS surt FROM documents"
 
 
-_register("surt_key", _q_surt_key, None)
-_TAIL_ORACLES["surt_key"] = _surt_tail_oracle()
+_register("surt_key", _q_surt_key, _surt_oracle())
 
 
 # deterministic PII planting: the synthetic corpus has no real PII, so
@@ -1796,7 +1732,6 @@ _register(
         SELECT start AS doc_id, CAST(min(node) AS BIGINT) AS component
         FROM reach GROUP BY start""",
 )
-_sampling_oracles()
 
 
 def _q_fingerprint(spark, sf_dir):
@@ -2186,165 +2121,6 @@ _ORACLES["strip_duplicate_spans"] = f"""
     """
 
 
-# -- sitemap parsing (crawl seed discovery) ----------------------------------
-# synthetic bodies keyed by doc_id % 6, the robots_parse pattern: every
-# template exercises a parser branch (namespaced urlset, whitespace loc,
-# sitemapindex, CDATA, empty document, uppercase+CRLF tags+junk priority)
-_SITEMAP_BODIES = [
-    '<?xml version="1.0"?>\n'
-    '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">\n'
-    "<url><loc>https://s0.example/p1</loc><lastmod>2024-01-02</lastmod>"
-    "<changefreq>daily</changefreq><priority>0.8</priority></url>\n"
-    "<url><loc> https://s0.example/p2 </loc><priority>0.55</priority></url>\n"
-    "</urlset>",
-    "<sitemapindex><sitemap><loc>https://s1.example/a.xml</loc>"
-    "<lastmod>2024-02-03T04:05:06+00:00</lastmod></sitemap>"
-    "<sitemap><loc>https://s1.example/b.xml</loc></sitemap></sitemapindex>",
-    "<urlset><url><loc><![CDATA[https://s2.example/x?a=1&b=2]]></loc>"
-    "<priority>1.0</priority></url></urlset>",
-    "<urlset></urlset>",
-    "<URLSET>\r\n<URL><LOC>https://s4.example/up</LOC>"
-    "<PRIORITY>junk</PRIORITY><CHANGEFREQ>weekly</CHANGEFREQ></URL>\r\n</URLSET>",
-    "<urlset><url><lastmod>2024-05-06</lastmod></url>"  # no loc → dropped
-    "<url><loc>https://s5.example/only</loc></url></urlset>",
-]
-
-
-def _q_sitemap_parse(spark, sf_dir):
-    """Sitemap XML parsing (sitemaps.parse_sitemaps): expression-only
-    urlset / sitemapindex block parse → one seed row per <loc>."""
-    from crawlspark.operators.sitemaps import parse_sitemaps
-
-    n = len(_SITEMAP_BODIES)
-    docs = _t(spark, sf_dir, "documents").select(
-        F.concat(F.lit("h"), F.col("doc_id").cast("string"), F.lit(".example")).alias("host"),
-        F.element_at(
-            F.array(*[F.lit(b) for b in _SITEMAP_BODIES]),
-            (F.col("doc_id") % n + 1).cast("int"),
-        ).alias("sitemap_xml"),
-    )
-    return parse_sitemaps(docs)
-
-
-_register("sitemap_parse", _q_sitemap_parse, None)
-_SITEMAP_LITS = ", ".join("'" + b.replace("'", "''") + "'" for b in _SITEMAP_BODIES)
-# independent derivation: per-block LATERAL unnest over string_split_regex
-# vs Spark's transform-array + explode_outer
-_ORACLES["sitemap_parse"] = f"""
-  WITH hosts AS (
-    SELECT 'h' || CAST(doc_id AS VARCHAR) || '.example' AS host,
-           list_value({_SITEMAP_LITS})[CAST(doc_id % {len(_SITEMAP_BODIES)} AS INT) + 1] AS body
-    FROM documents),
-  blocks AS (
-    SELECT host,
-           CASE WHEN regexp_matches(body, '(?is)<\\s*sitemapindex')
-                THEN 'sitemapindex' ELSE 'urlset' END AS kind,
-           unnest(string_split_regex(body, '(?i)</url\\s*>|</sitemap\\s*>')) AS bl
-    FROM hosts),
-  fields AS (
-    SELECT host, kind,
-           regexp_replace(trim(regexp_extract(bl, '(?is)<loc\\s*>(.*?)</loc\\s*>', 1)),
-                          '(?s)^<!\\[CDATA\\[(.*)\\]\\]>$', '\\1') AS loc,
-           nullif(regexp_extract(bl, '(?is)<lastmod\\s*>\\s*([^<]*?)\\s*</lastmod\\s*>', 1), '') AS lastmod,
-           nullif(regexp_extract(bl, '(?is)<changefreq\\s*>\\s*([^<]*?)\\s*</changefreq\\s*>', 1), '') AS changefreq,
-           CAST(CASE WHEN TRY_CAST(
-             nullif(regexp_extract(bl, '(?is)<priority\\s*>\\s*([^<]*?)\\s*</priority\\s*>', 1), '')
-             AS DOUBLE) BETWEEN 0 AND 1 THEN round(TRY_CAST(
-             nullif(regexp_extract(bl, '(?is)<priority\\s*>\\s*([^<]*?)\\s*</priority\\s*>', 1), '')
-             AS DOUBLE) * 1000) END AS INT) AS priority_milli
-    FROM blocks)
-  SELECT host, kind, trim(loc) AS loc, lastmod, changefreq, priority_milli
-  FROM fields WHERE trim(loc) <> ''
-"""
-
-
-# -- LM quality filtering (CCNet-style, integer backbone) --------------------
-
-
-def _q_oov_bigram_share(spark, sf_dir):
-    """Out-of-vocabulary bigram share vs a reference LM trained on the
-    even-doc_id half of the corpus (lm.bigram_counts +
-    lm.oov_bigram_share) — the exact-integer backbone of perplexity
-    filtering."""
-    from crawlspark.operators.lm import doc_bigrams, oov_bigram_share
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # ONE corpus bigram explode shared by the reference fit and the
-    # scoring pass (r6; the separate bigram_counts call re-ran it);
-    # the even-doc_id restriction moves to a filter over the shared
-    # relation — identical counts
-    grams = doc_bigrams(d).localCheckpoint(eager=True)
-    ref = (
-        grams.where((F.col("id") % 2 == 0) & F.col("bigram").isNotNull())
-        .groupBy("bigram").agg(F.count("*").alias("n"))
-    )
-    return oov_bigram_share(d, ref, grams=grams)
-
-
-_register("oov_bigram_share", _q_oov_bigram_share, None)
-# independent derivation: LATERAL generate_series over the token array
-# instead of a transform/slice bigram array
-_ORACLES["oov_bigram_share"] = """
-  WITH toks AS (
-    SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-  grams AS (
-    SELECT doc_id, w[i] || ' ' || w[i + 1] AS bigram
-    FROM toks, LATERAL unnest(generate_series(1, len(w) - 1)) AS u(i)
-    WHERE len(w) >= 2),
-  ref AS (
-    SELECT DISTINCT bigram FROM grams WHERE doc_id % 2 = 0),
-  scored AS (
-    SELECT g.doc_id,
-           count(*) AS n_bigrams,
-           sum(CASE WHEN r.bigram IS NULL THEN 1 ELSE 0 END) AS n_oov
-    FROM grams g LEFT JOIN ref r ON g.bigram = r.bigram
-    GROUP BY g.doc_id)
-  SELECT d.doc_id,
-         CAST(coalesce(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-         CAST(coalesce(s.n_oov, 0) AS BIGINT) AS n_oov,
-         CAST(CASE WHEN s.n_bigrams > 0
-                   THEN (s.n_oov * 1000000) // s.n_bigrams END AS BIGINT)
-           AS oov_micro
-  FROM documents d LEFT JOIN scored s ON s.doc_id = d.doc_id
-"""
-
-
-def _q_ccnet_buckets(spark, sf_dir):
-    """CCNet head/middle/tail stratification (lm.ccnet_buckets): the
-    per-language exact-thirds cut on the OOV-bigram quality score from
-    `oov_bigram_share` (reference LM = even-doc_id half). The standard
-    corpus-quality stratification CCNet publishes and trains on."""
-    from crawlspark.operators.lm import ccnet_buckets, doc_bigrams, oov_bigram_share
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    # shared checkpointed gram relation: reference fit + scoring were
-    # two full corpus explodes (r6); identical counts either way
-    grams = doc_bigrams(d.select("doc_id", "text")).localCheckpoint(eager=True)
-    ref = (
-        grams.where((F.col("id") % 2 == 0) & F.col("bigram").isNotNull())
-        .groupBy("bigram").agg(F.count("*").alias("n"))
-    )
-    scored = oov_bigram_share(d.select("doc_id", "text"), ref, grams=grams).join(
-        d.select("doc_id", "lang"), "doc_id"
-    )
-    return ccnet_buckets(scored)
-
-
-def _ccnet_tail_oracle() -> str:
-    from crawlspark.operators.lm import ccnet_buckets_sql
-
-    scored_cte = (
-        "SELECT o.doc_id, d.lang, o.oov_micro FROM ("
-        + _ORACLES["oov_bigram_share"]
-        + ") o JOIN documents d ON d.doc_id = o.doc_id"
-    )
-    return ccnet_buckets_sql(scored_cte)
-
-
-_register("ccnet_bucket", _q_ccnet_buckets, None)
-_TAIL_ORACLES["ccnet_bucket"] = _ccnet_tail_oracle()
-
-
 # -- mirror-path formatting (O25/O26 + --format-paths) -----------------------
 # URL → disk-mirror destination with the reference's directory-fanout
 # sharding (PathFormatter.cs:30-60, Downloader.cs:246-279). The synthetic
@@ -2514,145 +2290,10 @@ _register("gopher_quality", _q_gopher_quality, None)
 _TAIL_ORACLES["gopher_quality"] = _gopher_tail_oracle()
 
 
-# -- jusText boilerplate removal ----------------------------------------------
-# Block-level main-content extraction (operators/boilerplate.py). The
-# documents table is plain text, so the registered query synthesizes
-# HTML deterministically IN BOTH ENGINES: block tags every 12 words
-# (the lineify pattern with '</p><p>' instead of newline) and anchors
-# wrapped around three vocabulary words — then classifies with
-# corpus-aware thresholds (12-word blocks quantize stopword density in
-# 1/12 steps, so the paper's 0.30/0.32 band is unreachable; the paper
-# defaults are pinned by tests/test_boilerplate.py's planted pages).
-# Label mix at sf0.01: cf bad/short/near_good/good = 1419/190/646/222,
-# 153 context promotions — every rule and both passes exercised.
-_BP = dict(length_low=40, length_high=60,
-           stopwords_low_micro=160_000, stopwords_high_micro=250_000)
-
-
-def _q_boilerplate_blocks(spark, sf_dir):
-    from crawlspark.operators.boilerplate import classify_blocks
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    blocked = F.regexp_replace(
-        F.col("text"), r"((?:\S+ ){11})(\S+) ", "$1$2</p><p>"
-    )
-    anchored = F.regexp_replace(
-        blocked, r"\b(customer|query|stream)\b", "<a href=x>$1</a>"
-    )
-    html = F.concat(F.lit("<p>"), anchored, F.lit("</p>"))
-    return classify_blocks(
-        d.select("doc_id", html.alias("html")), **_BP
-    ).select(
-        "doc_id", "block_idx", "block_text",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.col("n_words").cast("long").alias("n_words"),
-        "link_density_micro", "stop_density_micro", "label_cf", "label",
-    )
-
-
-def _boilerplate_tail_oracle() -> str:
-    from crawlspark.operators.boilerplate import classify_blocks_sql
-
-    inner = r"""(SELECT doc_id,
-      '<p>' || regexp_replace(
-          regexp_replace(text, '((?:\S+ ){11})(\S+) ', '\1\2</p><p>', 'g'),
-          '\b(customer|query|stream)\b', '<a href=x>\1</a>', 'g') || '</p>' AS html
-      FROM documents) h"""
-    return classify_blocks_sql(inner, **_BP)
-
-
-_register("boilerplate_blocks", _q_boilerplate_blocks, None)
-_TAIL_ORACLES["boilerplate_blocks"] = _boilerplate_tail_oracle()
-
-
-# -- change-rate recrawl scheduling --------------------------------------------
-# Cho & Garcia-Molina revisit policy (operators/recrawl.py) over a visit
-# log synthesized deterministically from events: url = user bucket, fp
-# changes when the visit crosses a url-specific day-bucket (1/3/5/7/9
-# days), every 7th url is static. Exercises: per-url change counting
-# via lag, ratio micro-units, interval clamp both ways, future-dated
-# last visits (negative staleness), never-changed max-interval hold.
-def _q_recrawl_schedule(spark, sf_dir):
-    from crawlspark.operators.recrawl import (
-        change_history_stats, schedule_recrawl_by_change_rate,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    k = F.col("user_id") % 120
-    url = F.concat(F.lit("u"), k.cast("string"))
-    bucket_days = (F.lit(1) + (k % 5) * 2).cast("long")
-    bucket = F.floor(
-        F.unix_timestamp("ts") / (bucket_days * 86400)
-    ).cast("long")
-    fp = F.when(k % 7 == 0, F.lit("static")).otherwise(
-        F.md5(F.concat(url, F.lit("#"), bucket.cast("string")))
-    )
-    # distinct over the NARROW derivation key first: url and content_fp
-    # are injective functions of (k, ts), so distinct (k, ts) == distinct
-    # (url, ts, fp) — the dedup exchange carries two ints instead of
-    # url + 32-char fp strings, and the md5 runs only on survivors
-    # (guide §2.3). The synthesized columns are built post-distinct.
-    kd = ev.select(k.alias("__k"), F.col("ts").alias("fetch_ts")).distinct()
-    k = F.col("__k")
-    url = F.concat(F.lit("u"), k.cast("string"))
-    bucket_days = (F.lit(1) + (k % 5) * 2).cast("long")
-    bucket = F.floor(
-        F.unix_timestamp("fetch_ts") / (bucket_days * 86400)
-    ).cast("long")
-    fp = F.when(k % 7 == 0, F.lit("static")).otherwise(
-        F.md5(F.concat(url, F.lit("#"), bucket.cast("string")))
-    )
-    visits = kd.select(url.alias("url"), "fetch_ts", fp.alias("content_fp"))
-    stats = change_history_stats(visits)
-    # carry= instead of re-joining onto stats: the url self-join
-    # recomputed the whole visit-log aggregation on both branches
-    return schedule_recrawl_by_change_rate(
-        stats, now="2024-02-05 00:00:00",
-        min_interval_s=21_600, max_interval_s=1_209_600,
-        carry=("first_ts", "last_ts", "last_fp", "span_s",
-               "change_ratio_micro"),
-    )
-
-
-def _recrawl_tail_oracle() -> str:
-    from crawlspark.operators.recrawl import change_history_sql
-
-    visits = """(SELECT DISTINCT
-        'u' || CAST(user_id % 120 AS VARCHAR) AS url,
-        ts AS fetch_ts,
-        CASE WHEN (user_id % 120) % 7 = 0 THEN 'static'
-             ELSE md5('u' || CAST(user_id % 120 AS VARCHAR) || '#' ||
-                      CAST(CAST(floor((epoch_us(ts) // 1000000)
-                           / ((1 + ((user_id % 120) % 5) * 2) * 86400))
-                        AS BIGINT) AS VARCHAR))
-        END AS content_fp
-      FROM events) base"""
-    return f"""
-      WITH stats AS ({change_history_sql(visits)}),
-      sched AS (
-        SELECT *,
-          CAST(CASE WHEN n_changes = 0 THEN 1209600
-               ELSE greatest(21600, least(1209600, span_s // (2 * n_changes)))
-               END AS BIGINT) AS interval_s,
-          CAST((epoch_us(TIMESTAMP '2024-02-05 00:00:00') // 1000000)
-               - (epoch_us(last_ts) // 1000000) AS BIGINT) AS elapsed_s
-        FROM stats)
-      SELECT url, n_visits, n_changes, interval_s, elapsed_s,
-             CAST(floor(elapsed_s * 1000000.0 / interval_s) AS BIGINT)
-               AS staleness_micro,
-             elapsed_s >= interval_s AS due,
-             first_ts, last_ts, last_fp, span_s, change_ratio_micro
-      FROM sched"""
-
-
-_register("recrawl_schedule", _q_recrawl_schedule, None)
-_TAIL_ORACLES["recrawl_schedule"] = _recrawl_tail_oracle()
-
-
 # -- robots.txt Sitemap directive capture -------------------------------------
 # Host-global Sitemap: lines (sitemaps.org protocol) captured by the
-# same expression-only line fold as the disallow rules — the discovery
-# link robots → parse_sitemaps → seeds. The oracle re-derives them
+# same expression-only line fold as the disallow rules
+# (politeness.sitemaps_from_robots lists them). The oracle re-derives them
 # independently as a per-line regexp scan (group membership is
 # irrelevant for sitemaps, so the twin needs no fold).
 _ROBOTS_SM_BODIES = [
@@ -2908,70 +2549,27 @@ _TAIL_ORACLES["backoff_derate"] = """
   FROM j ORDER BY host"""
 
 
-# -- DSIR importance-weighted data selection --------------------------------------
-# Xie et al. 2023 hashed-bigram importance resampling, integer-exact:
-# fit target (lang='en' docs) and raw (all docs) hashed-bigram
-# distributions, score every doc by the summed Laplace micro-ratio of
-# its buckets, select top-100 per-gram. operators/dsir.py.
-def _q_dsir_select(spark, sf_dir):
-    from crawlspark.operators.dsir import dsir_pair_weights, dsir_select
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    # one bucketed-gram pass feeds BOTH the pair fit and the per-doc
-    # weights (r6: the fit_pair + dsir_weights composition exploded and
-    # hashed the corpus bigrams twice); values are bit-identical
-    w = dsir_pair_weights(d, F.col("lang") == "en")
-    return dsir_select(w, k=100)
-
-
-from crawlspark.operators.dsir import dsir_sql  # noqa: E402
-
-_register("dsir_select", _q_dsir_select, None)
-_TAIL_ORACLES["dsir_select"] = dsir_sql(target_predicate="lang = 'en'", k=100)
-
-
 # ---------------------------------------------------------------------------
-# Round-5 window rotation (continuing the r4-verdict plan: every exact
-# oracle gets a green DRIVER CORRECTNESS row in some round). The
-# demoted names below each carry a green row from CORRECTNESS_r04; the
-# promoted ones have never been driver-checked. Demoted queries
-# stay exact-checked via tail_oracle_sql() + the pytest parity gate,
-# which runs the identical compare over windowed AND tail oracles.
+# Window rotation: the correctness window holds exactly 50 oracled
+# queries. The demoted names below each carry a green row from
+# CORRECTNESS_r04 and their machinery stays exercised by windowed
+# siblings (simhash_pairs subsumes the per-doc simhash agg it builds on);
+# the promoted ones were registered as tail oracles above. Demoted
+# queries stay exact-checked via tail_oracle_sql() + the pytest parity
+# gate, which runs the identical compare over windowed AND tail oracles.
 # ---------------------------------------------------------------------------
-# max_cursor, json_rewrite and (below) distinct_commits are not demoted,
-# so that the window keeps 50 oracled queries.
-_R5_DEMOTE = [
-    "ngram_jaccard", "embedding_near_dups_exact",
-    "top_token_frac", "paragraph_dedup", "sequence_pack", "hash_split_assign",
-    "url_normalize",
+_DEMOTE = [
+    "ngram_jaccard", "embedding_near_dups_exact", "top_token_frac",
+    "paragraph_dedup", "sequence_pack", "repetition_profile", "dedup_simhash",
 ]
-_R5_PROMOTE = [
+_PROMOTE = [
     "c4_line_filter", "gopher_quality", "robots_sitemaps",
     "mirror_path", "url_trap_filter", "blocklist_filter",
-    "prioritized_dequeue",
+    "prioritized_dequeue", "backoff_derate",
 ]
-for _n in _R5_DEMOTE:
+for _n in _DEMOTE:
     _TAIL_ORACLES[_n] = _ORACLES.pop(_n)
-for _n in _R5_PROMOTE:
-    _ORACLES[_n] = _TAIL_ORACLES.pop(_n)
-
-# r5c (same session, later work): more exact oracles landed after
-# the r5b rotation and have never been driver-checked — promote them;
-# the demoted names are all green in CORRECTNESS_r04 and their
-# machinery stays exercised by windowed siblings (host_parse keeps the url
-# function family; gopher_quality/lang_id keep textops; simhash_pairs
-# subsumes the per-doc simhash agg it builds on).
-_R5C_DEMOTE = [
-    "hash_prefix_bin", "quality_score",
-    "repetition_profile", "dedup_simhash",
-]
-_R5C_PROMOTE = [
-    "backoff_derate", "dsir_select",
-    "boilerplate_blocks", "recrawl_schedule",
-]
-for _n in _R5C_DEMOTE:
-    _TAIL_ORACLES[_n] = _ORACLES.pop(_n)
-for _n in _R5C_PROMOTE:
+for _n in _PROMOTE:
     _ORACLES[_n] = _TAIL_ORACLES.pop(_n)
 assert len(_ORACLES) == 50, f"driver window must stay exactly 50, got {len(_ORACLES)}"
 

@@ -27,30 +27,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crawlspark.operators.dedup import shingles_of, word_shingles
-
-
-def shingle_hashes(text, k: int) -> "F.Column":
-    """Distinct k-word shingles of ``text`` as 60-bit int hashes (first
-    15 hex chars of md5 — fits signed BIGINT in any engine, so the
-    DuckDB twin ``CAST(('0x' || substr(md5(s),1,15)) AS BIGINT)``
-    matches Spark's ``conv(_, 16, 10)`` exactly with no unsigned
-    wraparound at either end). Single-expression convenience form —
-    bulk consumers must stage the token array and use
-    :func:`shingle_hashes_of` (word_shingles' O(words²) inlined-split
-    caveat)."""
-    return F.array_distinct(
-        F.transform(
-            word_shingles(text, k),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"),
-        )
-    )
+from crawlspark.operators.dedup import shingles_of
 
 
 def shingle_hashes_of(w: "F.Column", k: int) -> "F.Column":
-    """:func:`shingle_hashes` over a PRE-STAGED token-array column —
-    the split() runs once per row instead of once per shingle (see
-    dedup.shingles_of)."""
+    """Distinct k-word shingles of a PRE-STAGED token-array column as
+    60-bit int hashes (first 15 hex chars of md5 — fits signed BIGINT in
+    any engine, so the DuckDB twin :func:`shingle_hash_sql` matches
+    Spark's ``conv(_, 16, 10)`` exactly with no unsigned wraparound at
+    either end). The split() runs once per row instead of once per
+    shingle (see dedup.shingles_of)."""
     return F.array_distinct(
         F.transform(
             shingles_of(w, k),
@@ -108,7 +94,7 @@ def decontaminate(
 
 
 def shingle_hash_sql(text_expr: str, k: int) -> str:
-    """DuckDB list expression mirroring :func:`shingle_hashes` over a
+    """DuckDB list expression mirroring :func:`shingle_hashes_of` over a
     space-tokenized text column (word_shingles' exact semantics: docs
     shorter than k words yield the whole text as one shingle)."""
     toks = f"string_split({text_expr}, ' ')"

@@ -34,7 +34,7 @@ def shingles_of(w: Column, k: int = 3) -> Column:
     its own column first: the slice lambda references ``w`` per
     element, so an inlined split() subtree re-splits the text once per
     shingle — O(words²) string work per doc (the repo's HOF gotcha,
-    see lm._bigrams_of / textops.winnow_fingerprints). A staged
+    see textops.winnow_fingerprints). A staged
     reference used >= 2 times survives CollapseProject and splits
     once per row."""
     return F.when(
@@ -67,29 +67,14 @@ def word_shingles(text: Column | str, k: int = 3) -> Column:
     )
 
 
-def minhash_signature(text: Column | str, num_hashes: int = 8, k: int = 3) -> list[Column]:
-    """MinHash signature: for seed i, min over shingles of
-    md5('{i}|' || shingle) — string-min, dialect-portable."""
-    sh = word_shingles(text, k)
-
-    def seeded_md5(i: int):
-        # factory, not a default-arg lambda: Spark would bind a second
-        # lambda param to the array index
-        return lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))
-
-    return [
-        F.array_min(F.transform(sh, seeded_md5(i))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-
-
 def minhash_signature_agg(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                           num_hashes: int = 8, k: int = 3,
                           hash_fn: str = "md5") -> DataFrame:
     """Signature via explode + min-aggregate: the shingle array is built
     ONCE per doc (vs once per signature column), the per-shingle hash
     work distributes across cores after the explode, and the groupBy
-    mins are map-side partial. Same result as ``minhash_signature``.
+    mins are map-side partial: for seed i, the min over shingles of
+    md5('{i}|' || shingle).
 
     ``hash_fn``: ``"md5"`` (default) keeps 32-char hex strings — the
     dialect-portable choice the DuckDB oracle can replay exactly.
@@ -108,8 +93,8 @@ def minhash_signature_agg(df: DataFrame, id_col: str = "doc_id", text_col: str =
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
     # explode_OUTER + null filter: plain explode triggers
     # InferFiltersFromGenerate, cloning the whole shingle battery into
-    # a size()>0 pre-filter — one extra array build per row (lm.py's
-    # pattern); the arrays carry no null elements, so this is identical
+    # a size()>0 pre-filter — one extra array build per row; the
+    # arrays carry no null elements, so this is identical
     sh = (
         df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__w"))
         .select(F.col(id_col), F.explode_outer(shingles_of(F.col("__w"), k)).alias("sh"))

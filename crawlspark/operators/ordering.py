@@ -7,20 +7,16 @@ single shuffle on their partition keys).
 
 Reference parity citations:
   cursor_filter         — Downloader.cs:232-244 (O5): half-open (cursor, max]
-  crawl_order           — Downloader.cs:241-242 (O6): ORDER BY commit_ts, url
   ordered_limit         — Downloader.cs:101-110 (O7): MaxPages take-K
   distinct_commits      — Downloader.cs:129-135 (O8)
   commit_budget_cutoff  — Downloader.cs:137-146 (O9): whole commits only
-  pending_per_commit    — Downloader.cs:160-164 (O10)
-  max_cursor            — Downloader.cs:197-205 (O13)
-  min_watermark         — Downloader.cs:207-230 (O12)
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 EPOCH_MIN = dt.datetime(1, 1, 1)  # DateTimeOffset.MinValue analog (Cursor.cs:28)
@@ -42,13 +38,6 @@ def cursor_filter(
         bound = max_ts if isinstance(max_ts, Column) else F.lit(max_ts)
         out = out.where(F.col(ts_col) <= bound)
     return out
-
-
-def crawl_order(df: DataFrame, ts_col: str = "commit_ts", url_col: str = "url") -> DataFrame:
-    """The reproducible total crawl order: (commit_ts, url). At scale
-    order is a *property of the data* recovered by this sort at
-    verification/emission time — never by execution timing."""
-    return df.orderBy(ts_col, url_col)
 
 
 def ordered_limit(df: DataFrame, k: int | None, order_cols: list[str]) -> DataFrame:
@@ -78,20 +67,3 @@ def commit_budget_cutoff(df: DataFrame, remaining: int, ts_col: str = "commit_ts
     commits = df.select(ts_col).distinct().orderBy(ts_col).limit(max(remaining, 0))
     return df.join(F.broadcast(commits), ts_col, "left_semi")
 
-
-def pending_per_commit(df: DataFrame, ts_col: str = "commit_ts") -> DataFrame:
-    return df.groupBy(ts_col).agg(F.count("*").alias("pending"))
-
-
-def max_cursor(df: DataFrame, ts_col: str = "commit_ts") -> dt.datetime | None:
-    row = df.agg(F.max(ts_col).alias("m")).first()
-    return row["m"] if row else None
-
-
-def min_watermark(pending: DataFrame, ts_col: str = "commit_ts") -> dt.datetime | None:
-    """Min still-pending commit: the cursor may advance to just before
-    it. In the epoch model the whole epoch commits atomically, so this
-    degenerates to 'min of commits not in this epoch's completed set' —
-    kept as an operator for parity tests (Downloader.cs:222-224)."""
-    row = pending.agg(F.min(ts_col).alias("m")).first()
-    return row["m"] if row else None

@@ -55,10 +55,10 @@ def parse_robots_txt(
     :func:`budgets_from_crawl_delay` for per-host token budgets — and
     ``Sitemap:`` directives (sitemaps.org protocol: host-global, NOT
     scoped to any user-agent group, so they accumulate whether or not a
-    group applies to us) as ``sitemap_urls`` in file order — feed them
-    to :func:`sitemaps.parse_sitemaps` for seed discovery. A Sitemap
-    line is a regular directive line: like any non-UA record it ends a
-    stacked user-agent run."""
+    group applies to us) as ``sitemap_urls`` in file order
+    (:func:`sitemaps_from_robots` lists them). A Sitemap line is a
+    regular directive line: like any non-UA record it ends a stacked
+    user-agent run."""
     body = F.col(body_col)
     lines = F.split(body, "\r?\n")
     init = F.struct(
@@ -114,9 +114,8 @@ def parse_robots_txt(
 
 def sitemaps_from_robots(robots: DataFrame) -> DataFrame:
     """(host, sitemap_url) rows from :func:`parse_robots_txt` output —
-    the fetch list for sitemap-based seed discovery (feed the fetched
-    bodies to ``sitemaps.parse_sitemaps`` / ``seeds_from_sitemaps``).
-    Hosts without Sitemap directives drop out."""
+    the fetch list for sitemap-based seed discovery. Hosts without
+    Sitemap directives drop out."""
     return robots.select(
         "host", F.explode("sitemap_urls").alias("sitemap_url")
     )
@@ -221,12 +220,19 @@ def topk_per_host_split(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Politeness dequeue returning (dequeued, remainder, phase1_cache).
 
-    Same semantics as ``topk_per_host``, but the rows NOT selected are
-    produced from the same cached phase-1 relation instead of a later
-    anti-join — one fewer shuffle per epoch, and the remainder is exact:
-    phase-1 dropped rows (rank within (host, salt) beyond budget) are by
-    construction outside the per-host top-K, and phase-2 ranks the
-    pruned survivors exactly. Caller unpersists phase1_cache when done.
+    ``dequeued`` is the top-``budget`` urls per host in deterministic
+    (priority, discovery_ts, url) order. Budget comes from the broadcast
+    host_budgets(host, tokens_per_epoch) table, defaulting to
+    ``default_budget`` for unlisted hosts. Salted two-phase top-K (see
+    module docstring): both windows shuffle by their partition keys
+    only, and phase 2's input is ≤ salt × max_budget rows per host.
+
+    ``remainder`` (the rows NOT selected) comes from the same cached
+    phase-1 relation instead of a later anti-join — one fewer shuffle
+    per epoch, and it is exact: phase-1 dropped rows (rank within (host,
+    salt) beyond budget) are by construction outside the per-host top-K,
+    and phase-2 ranks the pruned survivors exactly. Caller unpersists
+    phase1_cache when done.
     """
     df = candidates
     if host_budgets is not None:
@@ -253,50 +259,6 @@ def topk_per_host_split(
         .unionByName(ranked.where(F.col("__rn2") > F.col("__budget")).select(*out_cols))
     )
     return dequeued, remainder, phase1
-
-
-def topk_per_host(
-    candidates: DataFrame,
-    host_budgets: DataFrame | None,
-    default_budget: int,
-    salt: int = 8,
-) -> DataFrame:
-    """Dequeue the top-``budget`` urls per host in deterministic
-    (priority, discovery_ts, url) order. Budget comes from the broadcast
-    host_budgets(host, tokens_per_epoch) table, defaulting to
-    ``default_budget`` for unlisted hosts.
-
-    Implementation: salted two-phase top-K (see module docstring). Both
-    windows shuffle by their partition keys only; phase 2's input is
-    ≤ salt × max_budget rows per host.
-    """
-    df = candidates
-    if host_budgets is not None:
-        df = df.join(F.broadcast(host_budgets), "host", "left")
-        df = df.withColumn(
-            "__budget", F.coalesce(F.col("tokens_per_epoch"), F.lit(default_budget))
-        ).drop("tokens_per_epoch")
-    else:
-        df = df.withColumn("__budget", F.lit(default_budget))
-
-    order = [F.col(c) for c in ORDER_COLS]
-
-    # Phase 1: local top-K within (host, salt) pseudo-partitions.
-    df = df.withColumn("__salt", F.pmod(F.xxhash64("url"), F.lit(salt)).cast("int"))
-    w1 = Window.partitionBy("host", "__salt").orderBy(*order)
-    df = (
-        df.withColumn("__rn1", F.row_number().over(w1))
-        .where(F.col("__rn1") <= F.col("__budget"))
-        .drop("__rn1", "__salt")
-    )
-
-    # Phase 2: exact per-host top-K on the pruned (skew-free) relation.
-    w2 = Window.partitionBy("host").orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w2))
-        .where(F.col("__rn") <= F.col("__budget"))
-        .drop("__rn", "__budget")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -69,37 +69,9 @@ def occurrences(text: Column | str, token: str) -> Column:
     ).cast("long")
 
 
-def stopword_ratio(text: Column | str) -> Column:
-    total = token_count(text)
-    hits = sum((occurrences(text, w) for w in STOPWORDS), F.lit(0))
-    return F.round(hits / total, 6)
-
-
-def quality_score(text: Column | str) -> Column:
-    """Length / mean-word-length / stopword-ratio composite in [0, ~1]."""
-    c = F.col(text) if isinstance(text, str) else text
-    n_tok = token_count(c)
-    mean_len = (F.length(c) - (n_tok - 1)) / n_tok  # chars sans separators
-    ratio = stopword_ratio(c)
-    return F.round(
-        F.least(n_tok / 400.0, F.lit(1.0)) * 0.5
-        + F.least(mean_len / 8.0, F.lit(1.0)) * 0.3
-        + F.least(ratio * 5.0, F.lit(1.0)) * 0.2,
-        6,
-    )
-
-
-def stop_ratio_micro(text: Column | str) -> Column:
-    """Stopword ratio in integer micro-units: floor(hits·10^6 / tokens).
-    Pure integer arithmetic — exact and engine-portable (float rounding
-    at half boundaries differs between engines)."""
-    total = token_count(text)
-    hits = sum((occurrences(text, w) for w in STOPWORDS), F.lit(0))
-    return F.floor(hits * 1_000_000 / total).cast("long")
-
-
 def quality_micro(text: Column | str) -> Column:
-    """quality_score in integer micro-units (0..10^6), exact arithmetic:
+    """Length / mean-word-length / stopword-ratio quality composite in
+    integer micro-units (0..10^6), exact arithmetic:
       0.5·min(n_tok/400,1) + 0.3·min(mean_word_len/8,1) + 0.2·min(5·stop_ratio,1)
     with every term as floor-divided integers."""
     c = F.col(text) if isinstance(text, str) else text
@@ -392,20 +364,6 @@ def simhash_band_keys(sh: Column, n_bands: int) -> list[Column]:
             shifted = shifted.bitwiseAND(F.lit((1 << width) - 1))
         keys.append(shifted)
     return keys
-
-
-def text_profile(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """One-pass text-analysis projection over a documents table."""
-    return df.select(
-        F.col(id_col),
-        token_count(text_col).alias("n_tokens"),
-        F.length(text_col).cast("long").alias("n_chars"),
-        stopword_ratio(text_col).alias("stop_ratio"),
-        quality_score(text_col).alias("quality"),
-        lang_id(text_col).alias("lang_pred"),
-        fingerprint(text_col).alias("fp"),
-        simhash64(text_col).alias("simhash"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -94,7 +94,6 @@ from crawlspark.operators.politeness import (
     budgets_from_crawl_delay,
     derate_budgets,
     update_backoff,
-    topk_per_host,
     topk_per_host_split,
 )
 from crawlspark.plans.state import CrawlState
@@ -445,7 +444,8 @@ def web_crawl(
 
             # 2. robots + politeness dequeue (salted two-phase per-host top-K).
             #    The split variant yields the selected set AND the remainder
-            #    from one cached phase-1 pass — no remainder anti-join.
+            #    from one cached phase-1 pass — no remainder anti-join over
+            #    the frontier.
             allowed = apply_robots(pending, robots)
             epoch_budgets = host_budgets
             if cfg.adaptive_backoff and backoff_df is not None:
@@ -454,19 +454,25 @@ def web_crawl(
                 epoch_budgets = derate_budgets(
                     host_budgets, backoff_df, cfg.default_budget
                 )
-            if cfg.global_budget_per_epoch is None:
-                dequeued, remaining, phase1 = topk_per_host_split(
-                    allowed, epoch_budgets, cfg.default_budget, salt=cfg.salt,
+            dequeued, remaining, phase1 = topk_per_host_split(
+                allowed, epoch_budgets, cfg.default_budget, salt=cfg.salt,
+            )
+            cached.append(phase1)
+            if cfg.global_budget_per_epoch is not None:
+                # the first global_budget rows of the per-host top-K in
+                # visit order; the rows past the limit stay pending (an
+                # anti-join over the small cached top-K, not the frontier)
+                per_host = dequeued.cache()
+                cached.append(per_host)
+                dequeued = ordered_limit(
+                    per_host, cfg.global_budget_per_epoch, list(ORDER_COLS)
+                ).cache()
+                remaining = remaining.unionByName(
+                    per_host.join(dequeued.select("url"), "url", "left_anti")
                 )
             else:
-                phase1 = allowed.cache()
-                dequeued = topk_per_host(phase1, epoch_budgets, cfg.default_budget, salt=cfg.salt)
-                dequeued = ordered_limit(dequeued, cfg.global_budget_per_epoch, list(ORDER_COLS))
-                remaining = None  # derived below from the final dequeued set
-            dequeued = dequeued.cache()
-            cached += [phase1, dequeued]
-            if remaining is None:
-                remaining = phase1.join(dequeued.select("url"), "url", "left_anti")
+                dequeued = dequeued.cache()
+            cached.append(dequeued)
 
             # 3. "fetch": equi-join against the pages snapshot. Small dequeues
             #    broadcast (one pages scan with all columns + one url-only

@@ -14,7 +14,7 @@ from crawlspark.operators.ordering import (
     cursor_filter,
     ordered_limit,
 )
-from crawlspark.operators.politeness import apply_robots, topk_per_host
+from crawlspark.operators.politeness import apply_robots, topk_per_host_split
 
 TS = dt.datetime(2024, 3, 1)
 
@@ -75,10 +75,9 @@ def test_salted_topk_equals_unsalted_window(spark, salt):
         for i in range(300)
     ]
     df = spark.createDataFrame(rows)
-    got = {
-        r["url"]
-        for r in topk_per_host(df, None, default_budget=7, salt=salt).collect()
-    }
+    dequeued, _, phase1 = topk_per_host_split(df, None, default_budget=7, salt=salt)
+    got = {r["url"] for r in dequeued.collect()}
+    phase1.unpersist()
     w = Window.partitionBy("host").orderBy("priority", "discovery_ts", "url")
     exp = {
         r["url"]
@@ -95,7 +94,9 @@ def test_topk_respects_per_host_budget_table(spark):
     ]
     df = spark.createDataFrame(rows)
     budgets = spark.createDataFrame([Row(host="h0.example", tokens_per_epoch=3)])
-    out = topk_per_host(df, budgets, default_budget=5).groupBy("host").count().collect()
+    dequeued, _, phase1 = topk_per_host_split(df, budgets, default_budget=5)
+    out = dequeued.groupBy("host").count().collect()
+    phase1.unpersist()
     got = {r["host"]: r["count"] for r in out}
     assert got == {"h0.example": 3, "h1.example": 5}
 

@@ -97,3 +97,60 @@ def test_query_registry_imports_existing_modules():
     assert modules, "the walk found no crawlspark import in __spark_entry__.py"
     missing = sorted(m for m in modules if _module_file(m) is None)
     assert not missing, f"__spark_entry__.py imports missing modules: {missing}"
+
+
+USE_ROOTS = ("crawlspark", "perfbench", "tests")
+
+
+def _py_files(*roots: str) -> list[str]:
+    out = [QUERY_REGISTRY]
+    for r in roots:
+        for root, _dirs, files in os.walk(os.path.join(ROOT, r)):
+            out.extend(os.path.join(root, f) for f in files if f.endswith(".py"))
+    return sorted(out)
+
+
+def _names_used(node: ast.AST, aliases: dict[str, str]) -> set[str]:
+    """Every name ``node`` refers to a definition by: identifiers and
+    attributes (through ``import … as`` aliases), and string constants
+    written beside a ``crawlspark.`` module path — ``perfbench/tracing.py``
+    wraps engine functions as (label, module, "Class.method"). An import
+    alone names nothing: a re-export nobody uses is not a use."""
+    names = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            names.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            names.add(n.attr)
+        elif isinstance(n, (ast.Tuple, ast.List, ast.Call)):
+            items = n.args if isinstance(n, ast.Call) else n.elts
+            strs = [i.value for i in items
+                    if isinstance(i, ast.Constant) and isinstance(i.value, str)]
+            if any(v.startswith("crawlspark.") for v in strs):
+                names.update(p for v in strs for p in v.split(".") if p.isidentifier())
+    return names | {aliases[n] for n in names if n in aliases}
+
+
+def test_every_package_definition_is_named_outside_itself():
+    """A top-level ``def``/``class`` of the package that nothing names —
+    in the package, the query registry, ``perfbench/`` or the tests —
+    is dead code; its own body does not count (a recursive function
+    names itself)."""
+    package = os.path.join(ROOT, "crawlspark") + os.sep
+    defined: dict[str, str] = {}
+    used: set[str] = set()
+    for path in _py_files(*USE_ROOTS):
+        tree = ast.parse(open(path).read(), path)
+        aliases = {
+            a.asname: a.name for n in ast.walk(tree)
+            if isinstance(n, (ast.Import, ast.ImportFrom)) for a in n.names if a.asname
+        }
+        for stmt in tree.body:
+            names = _names_used(stmt, aliases)
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names.discard(stmt.name)
+                if path.startswith(package):
+                    defined[stmt.name] = os.path.relpath(path, ROOT)
+            used |= names
+    dead = sorted(f"{path}:{name}" for name, path in defined.items() if name not in used)
+    assert not dead, f"top-level definitions nothing names: {dead}"

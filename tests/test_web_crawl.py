@@ -245,6 +245,40 @@ def test_global_budget_caps_epoch(spark, tmp_path):
     assert all(r["count"] <= 10 for r in per_epoch)
 
 
+def test_global_budget_matches_simulator(spark, tmp_path):
+    """Under global_budget_per_epoch the epoch fetches the first N rows
+    of the per-host top-K in visit order, and the rows past the limit
+    stay pending: engine == simulator epoch by epoch, so no url is lost
+    to, or doubled in, the remainder."""
+    from crawlspark.testdata import write_corpus
+
+    d = str(tmp_path / "c")
+    paths = write_corpus(spark, d, n_pages=120, n_hosts=6)
+    pages = spark.read.parquet(paths["pages"])
+    seeds = spark.read.parquet(paths["seeds"])
+    robots = spark.read.parquet(paths["robots"])
+    budgets = spark.read.parquet(paths["host_budgets"])
+    sd = str(tmp_path / "s")
+    web_crawl(
+        spark, pages, sd, seeds, robots=robots, host_budgets=budgets,
+        config=CrawlConfig(default_budget=8, max_epochs=8, global_budget_per_epoch=10),
+    )
+    sim = simulate_web_crawl(
+        {r["url"]: {"html": bytes(r["html"])} for r in pages.collect()},
+        [(r["url"], r["priority"]) for r in seeds.collect()],
+        robots={r["host"]: list(r["disallow_prefixes"]) for r in robots.collect()},
+        budgets={r["host"]: r["tokens_per_epoch"] for r in budgets.collect()},
+        default_budget=8, global_budget=10, max_epochs=8,
+    )
+    eng = _engine_trace(spark, sd)
+    assert len(CrawlState(sd).log.committed_epochs()) == len(sim.epochs) == 8
+    for e, sim_urls in enumerate(sim.epochs):
+        assert [r["url"] for r in eng.get(e, [])] == sim_urls, f"visit order differs at epoch {e}"
+    assert all(len(urls) == 10 for urls in sim.epochs)
+    fetched = CrawlState(sd).fetched.read(spark)
+    assert fetched.count() == fetched.select("url").distinct().count()
+
+
 def test_normalize_urls_collapses_aliases(spark, tmp_path):
     """With normalize_urls=True, alias forms of one URL (case, default
     port, fragment) collapse to a single canonical frontier row — one
