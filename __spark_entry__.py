@@ -2290,6 +2290,57 @@ _register("gopher_quality", _q_gopher_quality, None)
 _TAIL_ORACLES["gopher_quality"] = _gopher_tail_oracle()
 
 
+# -- jusText boilerplate removal ----------------------------------------------
+# Block-level main-content extraction (operators/boilerplate.py). The
+# documents table is plain text, so the registered query synthesizes
+# HTML deterministically IN BOTH ENGINES: block tags every 12 words
+# (the lineify pattern with '</p><p>' instead of newline) and anchors
+# wrapped around three vocabulary words — then classifies with
+# corpus-aware thresholds (12-word blocks quantize stopword density in
+# 1/12 steps, so the paper's 0.30/0.32 band is unreachable; the paper
+# defaults are pinned by tests/test_boilerplate.py's planted pages).
+# Label mix at sf0.01: cf bad/short/near_good/good = 1419/190/646/222,
+# 153 context promotions — every rule and both passes exercised.
+_BP = dict(length_low=40, length_high=60,
+           stopwords_low_micro=160_000, stopwords_high_micro=250_000)
+
+
+def _q_boilerplate_blocks(spark, sf_dir):
+    from crawlspark.operators.boilerplate import classify_blocks
+
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    blocked = F.regexp_replace(
+        F.col("text"), r"((?:\S+ ){11})(\S+) ", "$1$2</p><p>"
+    )
+    anchored = F.regexp_replace(
+        blocked, r"\b(customer|query|stream)\b", "<a href=x>$1</a>"
+    )
+    html = F.concat(F.lit("<p>"), anchored, F.lit("</p>"))
+    return classify_blocks(
+        d.select("doc_id", html.alias("html")), **_BP
+    ).select(
+        "doc_id", "block_idx", "block_text",
+        F.col("n_chars").cast("long").alias("n_chars"),
+        F.col("n_words").cast("long").alias("n_words"),
+        "link_density_micro", "stop_density_micro", "label_cf", "label",
+    )
+
+
+def _boilerplate_tail_oracle() -> str:
+    from crawlspark.operators.boilerplate import classify_blocks_sql
+
+    inner = r"""(SELECT doc_id,
+      '<p>' || regexp_replace(
+          regexp_replace(text, '((?:\S+ ){11})(\S+) ', '\1\2</p><p>', 'g'),
+          '\b(customer|query|stream)\b', '<a href=x>\1</a>', 'g') || '</p>' AS html
+      FROM documents) h"""
+    return classify_blocks_sql(inner, **_BP)
+
+
+_register("boilerplate_blocks", _q_boilerplate_blocks, None)
+_TAIL_ORACLES["boilerplate_blocks"] = _boilerplate_tail_oracle()
+
+
 # -- robots.txt Sitemap directive capture -------------------------------------
 # Host-global Sitemap: lines (sitemaps.org protocol) captured by the
 # same expression-only line fold as the disallow rules
