@@ -143,10 +143,14 @@ def _cmd_update_reports(args) -> dict:
 def _parse_cursor(value: str | None):
     """--default-cursor-value (UpdateReportsCommandHandler.cs:38-40):
     ISO timestamp seeding brand-new cursors; None keeps the
-    DateTimeOffset.MinValue default."""
+    DateTimeOffset.MinValue default. Cursors are naive UTC, so an offset
+    in ``value`` is applied and dropped."""
     import datetime as dt
 
-    return dt.datetime.fromisoformat(value) if value else None
+    if not value:
+        return None
+    v = dt.datetime.fromisoformat(value)
+    return v if v.tzinfo is None else v.astimezone(dt.timezone.utc).replace(tzinfo=None)
 
 
 def build_parser() -> argparse.ArgumentParser:

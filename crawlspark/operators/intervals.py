@@ -1,6 +1,11 @@
 """Bucketed interval join — the at-scale form of "assign each row to the
 time interval containing its timestamp".
 
+Not on the crawl path: ``catalog_crawl`` no longer joins leaves to
+pages, because the leaves of a prefix of the catalog's pages are one
+``warc_ts`` range (plans/epoch.py). The join stays for the query
+catalogue's ``interval_bucket_join`` query and its tests.
+
 The reference resolves catalog leaf→page membership by scanning page
 bounds per leaf (Downloader.cs:120-131: each item compared against the
 page's commit-timestamp range). The naive Spark translation is a theta
@@ -38,17 +43,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from crawlspark.operators.ordering import unix_micros
+
 _HELPERS = ("_dom_lo", "_w", "_nb")
 
 
 def _clamp(bucket: Column, nb: Column) -> Column:
     return F.greatest(F.lit(0).cast("long"), F.least(nb - F.lit(1), bucket))
-
-
-def _micros(ts: Column) -> Column:
-    # unix_micros rejects TIMESTAMP_NTZ; the cast is a no-op for
-    # TIMESTAMP and deterministic for NTZ (session TZ pinned UTC)
-    return F.unix_micros(ts.cast("timestamp"))
 
 
 def _bucket_of(ts_micros: Column) -> Column:
@@ -74,8 +75,8 @@ def bucketed_interval_join(
     ``rows`` then all of ``bounds``.
     """
     stats = bounds.agg(
-        _micros(F.min(hi_col)).alias("_dom_lo"),
-        _micros(F.max(hi_col)).alias("_dom_hi"),
+        unix_micros(F.min(hi_col)).alias("_dom_lo"),
+        unix_micros(F.max(hi_col)).alias("_dom_hi"),
         F.count(F.lit(1)).alias("_n"),
     ).select(
         "_dom_lo",
@@ -92,8 +93,8 @@ def bucketed_interval_join(
     )
 
     b = bounds.crossJoin(F.broadcast(stats))
-    b_start = _clamp(_bucket_of(_micros(F.col(lo_col)) + F.lit(1)), F.col("_nb"))
-    b_end = _clamp(_bucket_of(_micros(F.col(hi_col))), F.col("_nb"))
+    b_start = _clamp(_bucket_of(unix_micros(F.col(lo_col)) + F.lit(1)), F.col("_nb"))
+    b_end = _clamp(_bucket_of(unix_micros(F.col(hi_col))), F.col("_nb"))
     # bounds-side columns carry an internal prefix through the join:
     # rows and bounds share lineage via the stats subtree, so qualified
     # dataframe references would be ambiguous to the analyzer
@@ -104,7 +105,7 @@ def bucketed_interval_join(
 
     r = rows.crossJoin(F.broadcast(stats))
     r = r.withColumn(
-        "_rb", _clamp(_bucket_of(_micros(F.col(ts_col))), F.col("_nb"))
+        "_rb", _clamp(_bucket_of(unix_micros(F.col(ts_col))), F.col("_nb"))
     ).drop(*_HELPERS)
 
     joined = r.join(

@@ -10,6 +10,13 @@ Reference parity citations:
   ordered_limit         — Downloader.cs:101-110 (O7): MaxPages take-K
   distinct_commits      — Downloader.cs:129-135 (O8)
   commit_budget_cutoff  — Downloader.cs:137-146 (O9): whole commits only
+
+Driver-side timestamps (cursors, page heads, discovery stamps) are naive
+datetimes in UTC. They cross into Spark only through ``utc_lit`` and come
+back only through ``unix_micros`` + ``from_micros``: ``F.lit`` of a naive
+datetime reads it as local time (``time.mktime``), and a collected
+TIMESTAMP comes back as local naive time, so either would shift every
+bound by the process time zone's offset.
 """
 
 from __future__ import annotations
@@ -20,6 +27,28 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 EPOCH_MIN = dt.datetime(1, 1, 1)  # DateTimeOffset.MinValue analog (Cursor.cs:28)
+_UNIX = dt.datetime(1970, 1, 1)
+
+
+def utc_lit(v: dt.datetime) -> Column:
+    """The naive UTC datetime ``v`` as a TIMESTAMP literal, whatever the
+    process time zone. Against a TIMESTAMP_NTZ column the literal is cast
+    to NTZ in the UTC session time zone, and comparisons with it still
+    push down to the parquet scan."""
+    return F.timestamp_micros(F.lit((v - _UNIX) // dt.timedelta(microseconds=1)))
+
+
+def unix_micros(ts: Column) -> Column:
+    """Microseconds since the Unix epoch of a TIMESTAMP or TIMESTAMP_NTZ
+    column: the form a timestamp is collected in. ``F.unix_micros``
+    rejects NTZ; the cast is a no-op for TIMESTAMP and reads NTZ as UTC,
+    the session time zone."""
+    return F.unix_micros(ts.cast("timestamp"))
+
+
+def from_micros(us: int | None) -> dt.datetime | None:
+    """The naive UTC datetime of a collected ``unix_micros`` value."""
+    return None if us is None else _UNIX + dt.timedelta(microseconds=us)
 
 
 def cursor_filter(
@@ -32,10 +61,10 @@ def cursor_filter(
     may be None/open. Plain comparison predicates → parquet pushdown and
     partition pruning do the incremental-scan skipping."""
     out = df
-    if cursor is not None and cursor > EPOCH_MIN:
-        out = out.where(F.col(ts_col) > F.lit(cursor))
+    if cursor is not None:
+        out = out.where(F.col(ts_col) > utc_lit(cursor))
     if max_ts is not None:
-        bound = max_ts if isinstance(max_ts, Column) else F.lit(max_ts)
+        bound = max_ts if isinstance(max_ts, Column) else utc_lit(max_ts)
         out = out.where(F.col(ts_col) <= bound)
     return out
 

@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from crawlspark.operators.ordering import EPOCH_MIN
+from crawlspark.operators.ordering import EPOCH_MIN, from_micros, unix_micros, utc_lit
 from crawlspark.sources.tables import CommitLog, EpochTable
 
 ISO_O_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSSXXX"  # DateTimeOffset "O" analog (O23)
@@ -115,13 +115,12 @@ def _day_counts(delta: DataFrame) -> DataFrame:
 
 # -- driver-side CSV formatting -------------------------------------------------
 
-_UNIX = dt.datetime(1970, 1, 1)
 _TRIMMED = "".join(map(chr, range(33)))  # what the CSV writer strips from each end
 
 
 def _iso_o(micros: int) -> str:
     """``date_format(ts, ISO_O_FMT)`` in the UTC session time zone."""
-    t = _UNIX + dt.timedelta(microseconds=micros)
+    t = from_micros(micros)
     return f"{t.year:04d}-{t:%m-%dT%H:%M:%S}.{t.microsecond:06d}0Z"
 
 
@@ -354,17 +353,17 @@ def update_reports(
     for cursor, group in by_cursor.items():
         delta = pages.where(F.col("warc_ts").isNotNull())
         if cursor > EPOCH_MIN:
-            delta = delta.where(F.col("warc_ts") > F.lit(cursor))
+            delta = delta.where(F.col("warc_ts") > utc_lit(cursor))
         # the ONE aggregate job of these reports: O(days) rows
         days = _day_counts(delta).select(
-            F.unix_micros(F.col("day").cast("timestamp")), "details", "deletes", "head",
+            unix_micros(F.col("day")), "details", "deletes", unix_micros(F.col("head")),
         ).collect()
         if not days:
             continue  # nothing after the cursor: the skip needs no other job
-        head = max(r[3] for r in days)
+        head = from_micros(max(r[3] for r in days))
         day_rows = [tuple(r[:3]) for r in days]
         # pin the append report's scan to what the aggregate saw
-        delta = delta.where(F.col("warc_ts") <= F.lit(head))
+        delta = delta.where(F.col("warc_ts") <= utc_lit(head))
         for name in group:
             store.update(name, delta, day_rows, head)
             updated[name] = sum(details + deletes for _, details, deletes in day_rows)

@@ -6,6 +6,7 @@ Step1→Step4, MaxPages split, MaxCommits split with partial-page
 re-processing, exact cursor values, depth variants.
 """
 
+import datetime as dt
 import os
 
 import pytest
@@ -291,3 +292,116 @@ def test_json_formatting_on_download_path(spark, tmp_path):
     for i, d in enumerate(docs):
         exp = _json.dumps(_json.loads(d), separators=(",", ":"), ensure_ascii=False)
         assert got[f"https://cat.example/leaf/{i}"] == exp
+
+
+# -- range selection vs the sequential simulator ------------------------------
+
+BASE = dt.datetime(2024, 5, 1)
+
+
+def _minute_catalog(spark, tmp_path, n_commits, index_rows, leaves_per_commit=3):
+    """Commit c (1..n_commits) stamped BASE + c minutes, with
+    ``leaves_per_commit`` leaves; ``index_rows`` is (page_no, minute) per
+    page. Pages are written by pyarrow with naive timestamps, so
+    ``warc_ts`` reads back as TIMESTAMP_NTZ, as on the benchmark."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    leaves = [
+        (f"https://h{(c + j) % 3}.example/c{c}/l{j}", BASE + dt.timedelta(minutes=c))
+        for c in range(1, n_commits + 1) for j in range(leaves_per_commit)
+    ]
+    path = str(tmp_path / "pages.parquet")
+    pq.write_table(pa.table({
+        "url": [u for u, _ in leaves],
+        "warc_ts": pa.array([t for _, t in leaves], pa.timestamp("us")),
+        "html": [f"<p>{u}</p>".encode() for u, _ in leaves],
+        "lang": ["en"] * len(leaves),
+    }), path)
+    index = spark.createDataFrame(
+        [(no, BASE + dt.timedelta(minutes=m)) for no, m in index_rows],
+        "page_no long, page_ts timestamp",
+    )
+    return spark.read.parquet(path), index
+
+
+# (n_commits, index (page_no, minute), max_pages, max_commits)
+_SELECTION_CASES = {
+    "duplicate_page_ts": (12, [(0, 3), (1, 3), (2, 6), (3, 6), (4, 9), (5, 12)], 1, None),
+    "page_no_order_differs": (12, [(7, 3), (2, 6), (9, 9), (0, 12)], 2, None),
+    "index_lags_newest_commit": (12, [(0, 4), (1, 8)], None, None),
+    "cursor_mid_page": (12, [(0, 3), (1, 6), (2, 9), (3, 12)], None, 2),
+    "max_pages_and_max_commits": (15, [(0, 3), (1, 6), (2, 9), (3, 12), (4, 15)], 2, 4),
+    "max_commits_zero": (6, [(0, 3), (1, 6)], None, 0),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_SELECTION_CASES))
+def test_range_selection_matches_simulator(spark, tmp_path, case):
+    """Every increment's fetched leaves, in visit order, and its cursor
+    equal the sequential reference loop's, until a run fetches nothing."""
+    n_commits, index_rows, max_pages, max_commits = _SELECTION_CASES[case]
+    pages, index = _minute_catalog(spark, tmp_path, n_commits, index_rows)
+    sim_pages, sim_index = _sim_inputs(pages, index)
+    sd = str(tmp_path / "state")
+    cursor = EPOCH_MIN
+    for _ in range(20):
+        res = catalog_crawl(
+            spark, pages, index, sd, depth="leaf", max_pages=max_pages, max_commits=max_commits,
+        )
+        sim_visited, cursor = simulate_catalog_run(
+            sim_pages, sim_index, cursor, max_pages=max_pages, max_commits=max_commits,
+        )
+        assert res["leaves"] == len(sim_visited)
+        assert res["cursor"] == cursor
+        if not sim_visited:
+            break
+        assert _visited(spark, sd, res["run"]) == sim_visited
+    else:
+        pytest.fail("the catalog never drained")
+
+
+def _pushed_filters(df) -> str:
+    """The PushedFilters of every scan in ``df``'s physical plan, read
+    from the nodes' metadata (the plan string abbreviates them)."""
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.length()):
+        md = leaves.apply(i).metadata()
+        if md.contains("PushedFilters"):
+            out.append(md.apply("PushedFilters"))
+    return " ".join(out)
+
+
+def test_leaf_increment_runs_few_jobs_and_pushes_both_bounds(spark, tmp_path, monkeypatch):
+    """A leaf-depth max_commits increment is an index head, a commit
+    cutoff and the write: a handful of Spark jobs, not one per step of
+    a leaf-to-page join. Its leaf selection is one warc_ts range whose
+    bounds both reach the parquet scan."""
+    from crawlspark.plans import epoch
+
+    pages, index = _minute_catalog(spark, tmp_path, 12, [(0, 3), (1, 6), (2, 9), (3, 12)])
+    sd = str(tmp_path / "state")
+    catalog_crawl(spark, pages, index, sd, depth="leaf", max_commits=2)
+
+    ranges = []
+
+    def spy(df, cursor, max_ts=None, ts_col="commit_ts"):
+        out = epoch_cursor_filter(df, cursor, max_ts, ts_col)
+        if ts_col == "warc_ts":
+            ranges.append(out)
+        return out
+
+    epoch_cursor_filter = epoch.cursor_filter
+    monkeypatch.setattr(epoch, "cursor_filter", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-increment-job-count", "catalog_crawl job count")
+    try:
+        res = catalog_crawl(spark, pages, index, sd, depth="leaf", max_commits=2)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("catalog-increment-job-count")
+    assert res["leaves"] == 6
+    assert 0 < len(jobs) <= 5, len(jobs)
+    pushed = _pushed_filters(ranges[-1])
+    assert "GreaterThan(warc_ts," in pushed and "LessThanOrEqual(warc_ts," in pushed, pushed

@@ -78,3 +78,19 @@ def test_crawl_rollback_flag(spark, tmp_path, capsys):
     assert CrawlState(state).log.committed_epochs() == epochs  # converged back
     fetched = CrawlState(state).fetched.read(spark)
     assert fetched.count() == fetched.select("url").distinct().count()
+
+
+def test_default_cursor_value_with_an_offset_is_read_as_utc(spark, tmp_path, capsys):
+    """Cursors are naive UTC: a --default-cursor-value with a UTC offset
+    seeds the same cursor as the naive UTC value of the same instant."""
+    from crawlspark.testdata import write_staged_corpus
+
+    steps = write_staged_corpus(spark, str(tmp_path / "staged"), n_hosts=4)
+    outs = []
+    for i, value in enumerate(["2024-03-01T00:02:00", "2024-03-01T05:32:00+05:30"]):
+        assert main(["download", "--corpus", steps["step4"], "--state", str(tmp_path / f"s{i}"),
+                     "--depth", "leaf", "--default-cursor-value", value]) == 0
+        out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        outs.append((out["leaves"], out["cursor"]))
+    assert outs[0][0] > 0
+    assert outs[1] == outs[0]
