@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from crawlspark.functions.urls import path_of
+from crawlspark.session import pin
 
 ORDER_COLS = ("priority", "discovery_ts", "url")
 
@@ -218,7 +219,7 @@ def topk_per_host_split(
     default_budget: int,
     salt: int = 8,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Politeness dequeue returning (dequeued, remainder, phase1_cache).
+    """Politeness dequeue returning (dequeued, remainder, phase1).
 
     ``dequeued`` is the top-``budget`` urls per host in deterministic
     (priority, discovery_ts, url) order. Budget comes from the broadcast
@@ -227,12 +228,13 @@ def topk_per_host_split(
     module docstring): both windows shuffle by their partition keys
     only, and phase 2's input is ≤ salt × max_budget rows per host.
 
-    ``remainder`` (the rows NOT selected) comes from the same cached
+    ``remainder`` (the rows NOT selected) comes from the same pinned
     phase-1 relation instead of a later anti-join — one fewer shuffle
     per epoch, and it is exact: phase-1 dropped rows (rank within (host,
     salt) beyond budget) are by construction outside the per-host top-K,
-    and phase-2 ranks the pruned survivors exactly. Caller unpersists
-    phase1_cache when done.
+    and phase-2 ranks the pruned survivors exactly. ``phase1`` is
+    materialized here, once (``session.pin``); the caller unpins it
+    when done.
     """
     df = candidates
     if host_budgets is not None:
@@ -246,8 +248,7 @@ def topk_per_host_split(
     order = [F.col(c) for c in ORDER_COLS]
     df = df.withColumn("__salt", F.pmod(F.xxhash64("url"), F.lit(salt)).cast("int"))
     w1 = Window.partitionBy("host", "__salt").orderBy(*order)
-    phase1 = df.withColumn("__rn1", F.row_number().over(w1))
-    phase1 = phase1.cache()
+    phase1 = pin(df.withColumn("__rn1", F.row_number().over(w1)))
 
     out_cols = [c for c in candidates.columns]
     kept = phase1.where(F.col("__rn1") <= F.col("__budget"))

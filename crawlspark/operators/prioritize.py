@@ -42,16 +42,3 @@ def apply_priority_scores(
         .drop("__score_pri")
     )
 
-
-def inlink_priority_scores(
-    edges: DataFrame,
-    dst_col: str = "dst",
-    url_col: str = "url",
-) -> DataFrame:
-    """The classic signal: priority = −indegree, so the most-linked-to
-    urls dequeue first. One hash aggregation over the edge relation
-    (map-side partial counts; the shuffle carries (url, count) pairs,
-    never edge payloads)."""
-    return edges.groupBy(F.col(dst_col).alias(url_col)).agg(
-        (-F.count(F.lit(1))).cast("int").alias("priority")
-    )

@@ -29,9 +29,17 @@ small runs, so the loop runs a FIXED, small number of actions per epoch):
     seen (finally-fetched) url, so the dequeue path needs NO seen-set
     work at all; the seen filter runs once, on newly-discovered links,
     inside the frontier-build job.
-  * **ONE write action per epoch** stages both the fetched table and
-    the next frontier (union + partitionBy discriminator, split into
-    each table's epoch dir), plus an O(delta) bloom fold only while the
+  * **Three pins and ONE write action per epoch.** The relations the
+    epoch reads more than once (the top-K's ``phase1``, ``dequeued`` and
+    the fetched-outcome ``base``) are each materialized once, eagerly,
+    by ``session.pin`` (a local checkpoint), so the write reads flat
+    ``Scan ExistingRDD`` leaves. They are pins and not caches because
+    AQE plans every reference to a cached relation as a query stage of
+    its own, and stages that start before the cache is filled each run
+    a job over it (a polite-benchmark epoch ran 24 jobs over caches,
+    17.5 over pins). The write stages both the fetched table and the
+    next frontier (union + partitionBy discriminator, split into each
+    table's epoch dir), plus an O(delta) bloom fold only while the
     bloom is active. Everything else the driver needs (row counts,
     per-partition lineage, cursor, break conditions) comes from one
     Observation attached to the write plan and from parquet FOOTER
@@ -109,6 +117,7 @@ from crawlspark.operators.politeness import (
     topk_per_host_split,
 )
 from crawlspark.plans.state import CrawlState
+from crawlspark.session import pin, unpin, unpin_all
 
 DISCOVERY_BASE = dt.datetime(2024, 1, 1)
 
@@ -128,27 +137,6 @@ def _needed_python(stats: list[dict]) -> bool:
     """Whether a committed epoch or increment met payloads only the
     Python extraction reads byte-identically (functions/extract.py)."""
     return any(s.get("python_fallback_rows", 0) > 0 for s in stats)
-
-
-def _pin(df: DataFrame, pinned: list[DataFrame]) -> DataFrame:
-    """``df`` computed once and kept in the session (an eager
-    localCheckpoint), so the jobs that reuse it stop re-reading its
-    source. Appended to ``pinned``; ``_unpin`` releases it."""
-    df = df.localCheckpoint(eager=True)
-    pinned.append(df)
-    return df
-
-
-def _unpin(df: DataFrame) -> None:
-    # the checkpointed RDD sits under the frame's LogicalRDD, where
-    # DataFrame.unpersist (a cache-manager lookup) does not reach it
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
-
-
-def _unpersist_all(frames: list[DataFrame]) -> None:
-    for df in frames:
-        df.unpersist()
-    frames.clear()
 
 
 def _dir_files(epoch_dir: str) -> list[str]:
@@ -246,7 +234,7 @@ class CrawlConfig:
     # (max(1, budget >> consec_fails)) and restored the first clean
     # epoch. State is the tiny per-host `backoff` table (only unhealthy
     # hosts carry rows), written per epoch and read back on resume.
-    # Costs one extra per-host aggregate over the cached epoch outcomes
+    # Costs one extra per-host aggregate over the pinned epoch outcomes
     # plus one small write per epoch — opt-in.
     adaptive_backoff: bool = False
     # Inline text analysis on fetch (tokens/simhash/quality). COST NOTE:
@@ -340,15 +328,15 @@ def web_crawl(
     python = _needed_python(prior)
 
     # what the run holds in the session, released however it ends:
-    # the pinned broadcast sides and the current epoch's caches
+    # the pinned broadcast sides and the current epoch's pins
     pinned: list[DataFrame] = []
-    cached: list[DataFrame] = []
+    epoch_pins: list[DataFrame] = []
     try:
         # pin the tiny broadcast sides once per RUN: every epoch job
         # broadcasts them, and without this each broadcast re-scans the
         # user's source (parquet/CSV) from scratch — O(#epochs) re-reads
         if robots is not None:
-            robots = _pin(robots, pinned)
+            robots = pin(robots, pinned)
         if (
             cfg.respect_crawl_delay
             and robots is not None
@@ -368,7 +356,7 @@ def web_crawl(
                     ).alias("tokens_per_epoch"),
                 )
         if host_budgets is not None:
-            host_budgets = _pin(host_budgets, pinned)
+            host_budgets = pin(host_budgets, pinned)
 
         backoff_df = None  # (host, consec_fails), carried across epochs
         if cfg.adaptive_backoff:
@@ -456,7 +444,7 @@ def web_crawl(
 
             # 2. robots + politeness dequeue (salted two-phase per-host top-K).
             #    The split variant yields the selected set AND the remainder
-            #    from one cached phase-1 pass — no remainder anti-join over
+            #    from one pinned phase-1 pass — no remainder anti-join over
             #    the frontier.
             allowed = apply_robots(pending, robots)
             epoch_budgets = host_budgets
@@ -469,22 +457,21 @@ def web_crawl(
             dequeued, remaining, phase1 = topk_per_host_split(
                 allowed, epoch_budgets, cfg.default_budget, salt=cfg.salt,
             )
-            cached.append(phase1)
+            epoch_pins.append(phase1)
             if cfg.global_budget_per_epoch is not None:
                 # the first global_budget rows of the per-host top-K in
                 # visit order; the rows past the limit stay pending (an
-                # anti-join over the small cached top-K, not the frontier)
-                per_host = dequeued.cache()
-                cached.append(per_host)
-                dequeued = ordered_limit(
-                    per_host, cfg.global_budget_per_epoch, list(ORDER_COLS)
-                ).cache()
+                # anti-join over the small pinned top-K, not the frontier)
+                per_host = pin(dequeued, epoch_pins)
+                dequeued = pin(
+                    ordered_limit(per_host, cfg.global_budget_per_epoch, list(ORDER_COLS)),
+                    epoch_pins,
+                )
                 remaining = remaining.unionByName(
                     per_host.join(dequeued.select("url"), "url", "left_anti")
                 )
             else:
-                dequeued = dequeued.cache()
-            cached.append(dequeued)
+                dequeued = pin(dequeued, epoch_pins)
 
             # 3. "fetch": equi-join against the pages snapshot. Small dequeues
             #    broadcast (one pages scan with all columns + one url-only
@@ -584,14 +571,13 @@ def web_crawl(
                         "simhash": F.lit(None).cast("long"),
                         "quality_micro": F.lit(None).cast("long"),
                     })
-                # single pages scan + single html decode; html never cached
-                base = base.cache()
-                cached.append(base)
+                # single pages scan + single html decode; html never pinned
+                base = pin(base, epoch_pins)
                 # ONE observation on the full dequeued-outcome relation: row
                 # counts, byte sum and cursor come out of the write job itself —
                 # no standalone count() actions (driver-latency lever). The
-                # observe node sits ABOVE the cache boundary and only
-                # on the branch feeding write A, so it fires exactly once.
+                # observe node sits ABOVE the pin and only on the branch
+                # feeding write A, so it fires exactly once.
                 obs = Observation(f"epoch_{epoch}_py" if python else f"epoch_{epoch}")
                 base_obs = base.observe(
                     obs,
@@ -642,10 +628,12 @@ def web_crawl(
                     links.withColumn("discovery_ts", utc_lit(_discovery_ts(epoch + 1)))
                     .withColumn("attempts", F.lit(0))
                 )
-                if bloom_active:
+                if bloom_active and total_final > 0:
+                    # (before the first commit the seen set is empty, and
+                    # seen_filter would run a count job to filter nothing)
                     # seen_filter evaluates its input twice (definitely-new +
                     # maybe-seen residue branches), so it must run over a CHEAP
-                    # plan — the link explode straight off the cached `base`,
+                    # plan — the link explode straight off the pinned `base`,
                     # never a post-shuffle relation.
                     links = seen_filter(
                         spark, links, state.seen_urls(spark),
@@ -688,7 +676,7 @@ def web_crawl(
                 # 6. ONE write action stages BOTH tables: fetched rows and next
                 #    frontier union under a discriminator column, partitionBy
                 #    splits them into each table's epoch dir. One pass over the
-                #    caches, one job's worth of scheduling per epoch.
+                #    pins, one job's worth of scheduling per epoch.
                 combined = fetched_out.withColumn("__table", F.lit("fetched")).unionByName(
                     next_frontier.withColumn("__table", F.lit("frontier")),
                     allowMissingColumns=True,
@@ -697,7 +685,8 @@ def web_crawl(
                 m = obs.get
                 if python or m["n_python"] == 0:
                     break
-                base.unpersist()
+                epoch_pins.remove(base)
+                unpin(base)
             _t("write fetched+frontier")
             n_dequeued = m["n_dequeued"]
             n_ok, n_failed = m["n_ok"], m["n_failed"]
@@ -720,9 +709,9 @@ def web_crawl(
 
             if cfg.adaptive_backoff:
                 # fold this epoch's per-host outcomes into the backoff state
-                # (ONE tiny aggregate over the cached outcomes) and persist
+                # (ONE tiny aggregate over the pinned outcomes) and persist
                 # it pre-commit like the other epoch tables; re-read from
-                # parquet so the carried relation outlives base.unpersist()
+                # parquet so the carried relation outlives unpin(base)
                 host_stats = base.groupBy("host").agg(
                     F.count(F.when(F.col("status") != "ok", 1)).alias("n_bad")
                 )
@@ -772,14 +761,13 @@ def web_crawl(
                 seen_bloom.rebuild_if_needed(state.seen_urls(spark))
                 _t("bloom fold")
 
-            _unpersist_all(cached)
+            unpin_all(epoch_pins)
             if n_frontier == 0:
                 break
         return stats_out
     finally:
-        _unpersist_all(cached)
-        for df in pinned:
-            _unpin(df)
+        unpin_all(epoch_pins)
+        unpin_all(pinned)
 
 
 def visited_trace(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -932,12 +920,11 @@ def catalog_crawl(
 
     # one range predicate on the pages scan; both bounds push down
     leaves = cursor_filter(pages, cursor, hi, ts_col="warc_ts")
-    cached: list[DataFrame] = []
+    pinned: list[DataFrame] = []
     try:
         if mirror_dir is not None:
             # the mirror and the fetched write both read the leaves
-            leaves = leaves.cache()
-            cached.append(leaves)
+            leaves = pin(leaves, pinned)
 
         if json_formatting != "unchanged":
             # --format-paths-style mirroring (DownloadCommandHandler.cs:49-52,
@@ -1019,5 +1006,5 @@ def catalog_crawl(
         )
         return {"run": run, "pages": n_pages, "leaves": n_leaves, "cursor": new_cursor}
     finally:
-        # a failed increment must not leave its cache in the session
-        _unpersist_all(cached)
+        # a failed increment must not leave its pin in the session
+        unpin_all(pinned)

@@ -6,6 +6,9 @@ re-planning (skew joins, partition coalescing), shuffle partitions sized
 to cores (not the 200 default), UTC session timezone (so results match a
 UTC-naive DuckDB oracle byte-for-byte), and Arrow enabled for the
 vectorized pandas-UDF path mandated by BASELINE.json input_hint.
+
+``pin``/``unpin`` are the engine's one way to keep a relation it reuses
+materialized in the session.
 """
 
 from __future__ import annotations
@@ -14,7 +17,40 @@ import os
 import re
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def pin(df: DataFrame, pinned: list[DataFrame] | None = None) -> DataFrame:
+    """``df`` computed once, now, and kept in the session: an eager
+    localCheckpoint. The returned frame reads the stored blocks as a flat
+    ``Scan ExistingRDD`` leaf, so every later plan that reuses it costs
+    no job of its own. A lazy ``.cache()`` does not give that: AQE plans
+    each reference to a cached relation as its own query stage, and
+    stages that start before the cache is filled each submit a job over
+    it. Appended to ``pinned`` when given; ``unpin`` releases it.
+
+    Local checkpoints are not fault-tolerant: their blocks live on the
+    executors and their lineage is cut. If an executor is lost, the job
+    that reads the pin fails; a crawl epoch then fails as a whole, and
+    the next call resumes from the last commit (the kill-and-resume
+    contract of ``plans/epoch.py``)."""
+    df = df.localCheckpoint(eager=True)
+    if pinned is not None:
+        pinned.append(df)
+    return df
+
+
+def unpin(df: DataFrame) -> None:
+    """Release a frame ``pin`` returned."""
+    # the checkpointed RDD sits under the frame's LogicalRDD, where
+    # DataFrame.unpersist (a cache-manager lookup) does not reach it
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def unpin_all(pinned: list[DataFrame]) -> None:
+    for df in pinned:
+        unpin(df)
+    pinned.clear()
 
 
 def package_pyfiles(out_path: str | None = None) -> str:

@@ -54,6 +54,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from crawlspark.operators.ordering import EPOCH_MIN
 
@@ -253,5 +254,9 @@ class EpochTable:
         dirs = [self._epoch_dir(e) for e in committed if os.path.exists(self._epoch_dir(e))]
         full_schema = T.StructType(list(self.schema.fields) + [T.StructField("epoch", T.IntegerType())])
         if not dirs:
-            return spark.createDataFrame([], full_schema)
+            # from an empty Arrow table: a LocalRelation. An empty Python
+            # list would become a Python RDD, whose first job forks
+            # Python workers.
+            empty = to_arrow_schema(full_schema).empty_table()
+            return spark.createDataFrame(empty, full_schema)
         return spark.read.schema(full_schema).option("basePath", self.dir).parquet(*dirs)

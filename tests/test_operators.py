@@ -15,8 +15,13 @@ from crawlspark.operators.ordering import (
     ordered_limit,
 )
 from crawlspark.operators.politeness import apply_robots, topk_per_host_split
+from crawlspark.session import unpin
 
 TS = dt.datetime(2024, 3, 1)
+
+
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def _events(spark, n=100):
@@ -75,9 +80,11 @@ def test_salted_topk_equals_unsalted_window(spark, salt):
         for i in range(300)
     ]
     df = spark.createDataFrame(rows)
+    held = _persisted_rdds(spark)
     dequeued, _, phase1 = topk_per_host_split(df, None, default_budget=7, salt=salt)
     got = {r["url"] for r in dequeued.collect()}
-    phase1.unpersist()
+    unpin(phase1)
+    assert _persisted_rdds(spark) == held
     w = Window.partitionBy("host").orderBy("priority", "discovery_ts", "url")
     exp = {
         r["url"]
@@ -94,9 +101,11 @@ def test_topk_respects_per_host_budget_table(spark):
     ]
     df = spark.createDataFrame(rows)
     budgets = spark.createDataFrame([Row(host="h0.example", tokens_per_epoch=3)])
+    held = _persisted_rdds(spark)
     dequeued, _, phase1 = topk_per_host_split(df, budgets, default_budget=5)
     out = dequeued.groupBy("host").count().collect()
-    phase1.unpersist()
+    unpin(phase1)
+    assert _persisted_rdds(spark) == held
     got = {r["host"]: r["count"] for r in out}
     assert got == {"h0.example": 3, "h1.example": 5}
 

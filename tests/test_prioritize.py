@@ -4,10 +4,7 @@ visit-order flip through the real dequeue."""
 from pyspark.sql import functions as F
 
 from crawlspark.functions.urls import host_of
-from crawlspark.operators.prioritize import (
-    apply_priority_scores,
-    inlink_priority_scores,
-)
+from crawlspark.operators.prioritize import apply_priority_scores
 
 
 def test_apply_priority_scores_merge(spark):
@@ -23,14 +20,6 @@ def test_apply_priority_scores_merge(spark):
     )
     # u2 takes the MIN score; u1/u3 keep inherited; u9 never joins in
     assert got == [("u1", 3), ("u2", -5), ("u3", 7)]
-
-
-def test_inlink_priority_scores(spark):
-    edges = spark.createDataFrame(
-        [("a", "t1"), ("b", "t1"), ("c", "t1"), ("a", "t2")], "src string, dst string"
-    )
-    got = sorted((r.url, r.priority) for r in inlink_priority_scores(edges).collect())
-    assert got == [("t1", -3), ("t2", -1)]
 
 
 def test_crawl_priority_flips_visit_order(spark, tmp_path):

@@ -113,6 +113,21 @@ def test_table_read_launches_no_spark_job(spark, crawl_run):
     assert list(sc.statusTracker().getJobIdsForGroup("table-read")) == []
 
 
+def test_empty_table_read_is_a_local_relation(spark, tmp_path):
+    """A table with no committed epoch reads as a LocalRelation of the
+    declared schema. A Python RDD in its plan would fork Python workers
+    at the first job over it (the epoch-0 seen check, say)."""
+    state = CrawlState(str(tmp_path / "state"))
+    for table in (state.fetched, state.frontier, state.lineage):
+        df = table.read(spark)
+        plan = df._jdf.queryExecution().logical().toString()
+        assert "LogicalRDD" not in plan and "LocalRelation" in plan, plan
+        assert df.schema == T.StructType(
+            list(table.schema.fields) + [T.StructField("epoch", T.IntegerType())]
+        )
+        assert df.count() == 0
+
+
 def _lineage(spark, state_dir: str) -> tuple[T.DataType, list[tuple]]:
     df = CrawlState(state_dir).lineage.read(spark)
     rows = sorted(tuple(r) for r in df.drop("bytes").collect())

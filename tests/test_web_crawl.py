@@ -353,3 +353,39 @@ def test_respect_crawl_delay_budgets(spark, tmp_path):
     # the delay-capped hosts did fetch (budget floor, not a block)
     fetched_hosts = {r.host for r in per_epoch}
     assert h_delay in fetched_hosts and h_both in fetched_hosts
+
+
+def test_polite_epoch_runs_few_jobs_over_pinned_relations(spark, corpus_dir, tmp_path, monkeypatch):
+    """Epoch 1 of a polite crawl (robots, budgets, bloom from the
+    start) runs at most 20 jobs; over lazy caches it ran 26. A cached
+    relation runs a job per reference to it, and shows in the write's
+    plan as an InMemoryRelation; a pinned one is a Scan ExistingRDD."""
+    from crawlspark.sources.tables import EpochTable
+
+    pages, seeds, robots, budgets = _load_inputs(spark, corpus_dir)
+    sd = str(tmp_path / "state")
+    cfg = CrawlConfig(default_budget=4, bloom_min_seen=0, max_epochs=1)
+    web_crawl(spark, pages, sd, seeds, robots=robots, host_budgets=budgets, config=cfg)
+
+    plans = []
+    split = EpochTable.write_epoch_split
+
+    def spy(self, other, df, epoch):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return split(self, other, df, epoch)
+
+    monkeypatch.setattr(EpochTable, "write_epoch_split", spy)
+    cfg.max_epochs = 2
+    sc = spark.sparkContext
+    sc.setJobGroup("polite-epoch-job-count", "web_crawl epoch 1")
+    try:
+        stats = web_crawl(
+            spark, pages, sd, seeds, robots=robots, host_budgets=budgets, config=cfg
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("polite-epoch-job-count")
+    assert [s["epoch"] for s in stats] == [1] and stats[0]["urls_dequeued"] > 0
+    assert 0 < len(jobs) <= 20, len(jobs)
+    assert len(plans) == 1
+    assert "InMemoryRelation" not in plans[0] and "Scan ExistingRDD" in plans[0], plans[0]
