@@ -307,14 +307,12 @@ def derate_budgets(
     table keep the caller-side default via topk's coalesce. The shift is
     capped at 30 so a long-failing host can't overflow into the sign
     bit; it bottoms out at min_tokens long before that."""
+    j = backoff.select("host", "consec_fails")
     if host_budgets is None:
-        host_budgets = backoff.sparkSession.createDataFrame(
-            [], "host string, tokens_per_epoch int"
-        )
-    a = host_budgets.select("host", "tokens_per_epoch")
-    b = backoff.select("host", "consec_fails")
-    j = a.join(b, "host", "full")
-    base = F.coalesce(F.col("tokens_per_epoch"), F.lit(default_budget))
+        base = F.lit(default_budget)
+    else:
+        j = host_budgets.select("host", "tokens_per_epoch").join(j, "host", "full")
+        base = F.coalesce(F.col("tokens_per_epoch"), F.lit(default_budget))
     consec = F.least(F.coalesce(F.col("consec_fails"), F.lit(0)), F.lit(30))
     # base / 2^consec: dividing by a power of two only shifts the double
     # exponent, so the quotient is exact and the int cast is a true floor

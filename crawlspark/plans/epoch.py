@@ -224,9 +224,10 @@ class CrawlConfig:
     # cost-based activation: below this seen-set size the exact
     # anti-join after the link dedup is cheaper than a per-epoch filter
     # fold plus a probe and a second pass over the links (the seen urls
-    # fit in a broadcast); above it the broadcast is impossible and the
-    # bloom prefilter carries the check. Set 0 to force bloom from the
-    # first epoch (tests do).
+    # are its shuffle-hash build side, hinted SHUFFLE_HASH at that join,
+    # and only they shuffle); above it, shuffling the whole seen set every
+    # epoch costs more and the bloom prefilter carries the check. Set 0 to
+    # force bloom from the first epoch (tests do).
     bloom_min_seen: int = 2_000_000
     # Exponential per-host budget backoff on fetch failures: a host
     # whose attempts keep failing (5xx storm, dead site) gets its
@@ -510,11 +511,11 @@ def web_crawl(
                 .when(att1 >= F.lit(cfg.max_attempts), F.lit("failed"))
                 .otherwise(F.lit("retry"))
             )
-            # cost-based seen-check: once the seen set outgrows a broadcast
-            # (bloom_min_seen), the bloom filter prefilters links BEFORE the
+            # cost-based seen-check: once the seen set reaches
+            # bloom_min_seen, the bloom filter prefilters links BEFORE the
             # groupBy shuffle and only the maybe-seen residue joins the seen
             # table. Below the threshold, the exact anti-join runs AFTER the
-            # groupBy (reusing its url partitioning) against a broadcastable
+            # groupBy (reusing its url partitioning) against the shuffled
             # seen side — no per-epoch fold and no second pass over the links.
             # Catch-up fold: first epoch above the threshold (or a resume)
             # folds the committed history once; OR-ing is idempotent.

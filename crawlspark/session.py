@@ -9,14 +9,26 @@ vectorized pandas-UDF path mandated by BASELINE.json input_hint.
 
 ``pin``/``unpin`` are the engine's one way to keep a relation it reuses
 materialized in the session.
+
+``ClassCache`` starts the driver JVM from a static class-data-sharing
+(AppCDS) archive of the classes an earlier session loaded, which halves
+the JVM's start-up: every CLI call is a fresh process.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
 import re
+import shutil
+import subprocess
 import zipfile
 
+from py4j.java_gateway import JavaGateway
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -92,6 +104,220 @@ def master_cores(master: str) -> int:
     return os.cpu_count() or 8
 
 
+JAVA_OPTS = "spark.driver.extraJavaOptions"
+# flags with which a user manages class sharing themselves
+_SHARING_FLAGS = ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit")
+# environment variables whose flags reach the driver JVM
+_JAVA_ENV = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS")
+# arguments of the recording JVM that the dump leaves out: the archive
+# does not depend on them
+_NOT_DUMPED = ("-XX:DumpLoadedClassList", "-Xmx", "-Djava.io.tmpdir")
+_JVM_EXIT_S = 60  # a JVM whose stdin closed ends within this, or is killed
+_DUMP_S = 300  # an archive dump running longer is killed
+
+
+class ClassCache:
+    """One static class-data-sharing (AppCDS) archive per JDK and Spark
+    jar set, kept in ``$XDG_CACHE_HOME/crawlspark/`` (default
+    ``~/.cache/crawlspark/``) and never in a state or report dir.
+
+    A JVM launched while the archive exists maps it, and starts in about
+    half the time. A JVM launched without it records the classes it
+    loads; at interpreter exit, once that JVM has ended, ``_dump`` writes
+    them into the archive (about 25 s, once per JDK and jar set). The
+    dump uses the exact class path and arguments of the recording JVM:
+    the JVM maps an archive only under the class path and module flags it
+    was dumped with. When it refuses one anyway it also gives up the
+    JDK's default sharing, so ``launch`` deletes it and starts a
+    recording JVM instead.
+
+    The JVM also refuses a non-empty directory on the class path, which
+    Spark's conf dir is: while that dir holds only ``*.template`` files,
+    the JVM is launched with ``SPARK_CONF_DIR`` pointing at an empty dir
+    in the cache. ``create`` gives no cache, and the JVM launches as it
+    would without one, when the conf dir holds a real file, when the user
+    passes their own sharing flags, or when the cache dir is not
+    writable."""
+
+    def __init__(self, root: str, key: str):
+        self.root, self.key = root, key
+        self.archive = os.path.join(root, f"{key}.jsa")
+        self.class_list = os.path.join(root, f"{key}.{os.getpid()}.lst")
+        self.empty_conf = os.path.join(root, "conf")
+
+    @classmethod
+    def create(cls, java_opts: str) -> ClassCache | None:
+        """The cache for a driver JVM launched with ``java_opts``, or None
+        when it must launch without one."""
+        opts = " ".join([java_opts] + [os.environ.get(v, "") for v in _JAVA_ENV])
+        if any(flag in opts for flag in _SHARING_FLAGS):
+            return None
+        spark_home = _find_spark_home()
+        conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        if os.path.isdir(conf_dir) and any(
+            not f.endswith(".template") for f in os.listdir(conf_dir)
+        ):
+            return None
+        jars = os.path.join(spark_home, "jars")
+        # the java that bin/spark-class runs
+        java_home = os.environ.get("JAVA_HOME")
+        java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+        if not java or not os.path.isdir(jars):
+            return None
+        cache_home = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+        root = os.path.join(cache_home, "crawlspark")
+        try:
+            os.makedirs(os.path.join(root, "conf"), exist_ok=True)
+        except OSError:
+            return None
+        if not os.access(root, os.W_OK):
+            return None
+        java = os.path.realpath(java)
+        key = hashlib.sha256(java.encode())
+        release = os.path.join(os.path.dirname(os.path.dirname(java)), "release")
+        if os.path.isfile(release):
+            with open(release, "rb") as f:
+                key.update(f.read())
+        for name in sorted(os.listdir(jars)):
+            st = os.stat(os.path.join(jars, name))
+            key.update(f"\0{name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+        return cls(root, key.hexdigest()[:16])
+
+    def prune(self) -> None:
+        """Delete the archives of other keys, and the class lists and
+        unfinished dumps of processes that have ended."""
+        for name in os.listdir(self.root):
+            path = os.path.join(self.root, name)
+            parts = name.split(".")
+            if name.endswith(".jsa"):
+                stale = path != self.archive
+            elif len(parts) == 3 and parts[2] in ("lst", "tmp") and parts[1].isdigit():
+                stale = not _alive(int(parts[1]))
+            else:
+                continue
+            if stale:
+                _remove(path)
+
+    def launch(self, builder: SparkSession.Builder, java_opts: str) -> SparkSession:
+        """``builder.getOrCreate()`` with the cache's JVM flags merged
+        into the caller's ``java_opts``."""
+        mapped = os.path.isfile(self.archive)
+        spark = self._get_or_create(builder, java_opts, mapped)
+        # a JVM that refuses the archive shares nothing at all
+        if mapped and "sharing" not in spark._jvm.java.lang.System.getProperty("java.vm.info"):
+            _remove(self.archive)
+            gateway = spark.sparkContext._gateway
+            spark.stop()
+            _end_jvm(gateway)
+            mapped = False
+            spark = self._get_or_create(builder, java_opts, mapped)
+        if not mapped:
+            self._dump_at_exit(spark)
+        return spark
+
+    def _get_or_create(
+        self, builder: SparkSession.Builder, java_opts: str, mapped: bool
+    ) -> SparkSession:
+        if mapped:
+            flags = f"-XX:SharedArchiveFile={self.archive} -Xlog:cds=off"
+        else:
+            flags = f"-XX:DumpLoadedClassList={self.class_list}"
+        builder.config(JAVA_OPTS, f"{java_opts} {flags}".strip())
+        old = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = self.empty_conf
+        try:
+            return builder.getOrCreate()
+        finally:
+            if old is None:
+                del os.environ["SPARK_CONF_DIR"]
+            else:
+                os.environ["SPARK_CONF_DIR"] = old
+
+    def _dump_at_exit(self, spark: SparkSession) -> None:
+        """Register the exit dump, with the recording JVM's class path and
+        arguments read while it runs."""
+        jvm = spark._jvm
+        system, mxf = jvm.java.lang.System, jvm.java.lang.management.ManagementFactory
+        args = [
+            a for a in mxf.getRuntimeMXBean().getInputArguments() if not a.startswith(_NOT_DUMPED)
+        ]
+        # an ergonomic choice that is not among the arguments: above a
+        # 32 GiB heap the JVM turns compressed oops off, and refuses an
+        # archive dumped with them on
+        hotspot = mxf.getPlatformMXBean(
+            jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+        )
+        oops = "+" if hotspot.getVMOption("UseCompressedOops").getValue() == "true" else "-"
+        tmp = os.path.join(self.root, f"{self.key}.{os.getpid()}.tmp")
+        cmd = [
+            os.path.join(system.getProperty("java.home"), "bin", "java"),
+            "-Xshare:dump",
+            f"-XX:SharedClassListFile={self.class_list}",
+            f"-XX:SharedArchiveFile={tmp}",
+            f"-XX:{oops}UseCompressedOops", "-cp", system.getProperty("java.class.path"), *args,
+        ]
+        atexit.register(self._dump, spark.sparkContext._gateway, cmd, tmp)
+
+    def _dump(self, gateway: JavaGateway, cmd: list[str], tmp: str) -> None:
+        """Exit hook: end the recording JVM, which completes its class
+        list, then run the dump ``cmd`` into ``tmp`` and rename that onto
+        the archive. Raises nothing and leaves no process running: a dump
+        that is killed leaves no file under the archive's name."""
+        dump = None
+        try:
+            if not _end_jvm(gateway) or os.path.exists(self.archive):
+                return  # a cut class list, or another session dumped it
+            quiet = subprocess.DEVNULL
+            dump = subprocess.Popen(cmd, stdin=quiet, stdout=quiet, stderr=quiet)
+            if dump.wait(_DUMP_S) == 0:
+                os.replace(tmp, self.archive)
+        except (OSError, subprocess.SubprocessError, Py4JError):
+            pass
+        finally:
+            if dump is not None and dump.poll() is None:
+                dump.kill()
+                dump.wait()
+            _remove(tmp)
+            _remove(self.class_list)
+
+
+def _end_jvm(gateway: JavaGateway) -> bool:
+    """Stop the running SparkContext, shut the Py4J gateway and end its
+    JVM, which exits when its stdin closes; False when the JVM failed or
+    had to be killed. The next ``getOrCreate`` launches a new JVM."""
+    try:
+        if SparkContext._active_spark_context is not None:
+            SparkContext._active_spark_context.stop()
+        gateway.shutdown()
+    finally:
+        with SparkContext._lock:
+            SparkContext._gateway = SparkContext._jvm = None
+        gateway.proc.stdin.close()
+        try:
+            gateway.proc.wait(_JVM_EXIT_S)
+        except subprocess.TimeoutExpired:
+            gateway.proc.kill()
+            gateway.proc.wait()
+    return gateway.proc.returncode == 0
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _remove(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
+
+
 def get_spark(
     app_name: str = "crawlspark",
     master: str | None = None,
@@ -103,7 +329,8 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (fallback
     ``local[*]``). ``shuffle_partitions`` defaults to the core count —
     on a real cluster you would size this to 2-3× total executor cores
-    and rely on AQE coalescing.
+    and rely on AQE coalescing. The driver JVM starts from the
+    ``ClassCache`` archive when it can.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -145,7 +372,15 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    java_opts = (extra_conf or {}).get(JAVA_OPTS, "")
+    cache = None
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        cache = ClassCache.create(java_opts)  # getOrCreate launches the JVM
+    if cache is None:
+        spark = builder.getOrCreate()
+    else:
+        cache.prune()
+        spark = cache.launch(builder, java_opts)
     spark.sparkContext.setLogLevel("WARN")
     # ship the package UNCONDITIONALLY (local mode too): python workers
     # resolve module-level UDF functions by import, and a driver running

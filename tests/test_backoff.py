@@ -99,6 +99,33 @@ def test_crawl_backoff_shrinks_failing_host_budget(spark, tmp_path):
     assert off[(0, "a.example")] == 4 and off[(1, "a.example")] == 3
 
 
+def test_derated_default_budgets_start_no_python_worker(spark, tmp_path, monkeypatch):
+    """With no budget table, every epoch's derated budgets come from the
+    backoff state alone: no Python RDD in their plan (it would fork
+    Python workers every epoch), and the same budgets as the full join
+    with an empty table gave."""
+    import crawlspark.plans.epoch as epoch_mod
+    from crawlspark.plans.epoch import CrawlConfig, web_crawl
+
+    plans = []
+
+    def derate(host_budgets, backoff, default_budget):
+        out = derate_budgets(host_budgets, backoff, default_budget)
+        plans.append(out._jdf.queryExecution().logical().toString())
+        return out
+
+    monkeypatch.setattr(epoch_mod, "derate_budgets", derate)
+    pages, seeds = _mini_corpus(spark)
+    sd = str(tmp_path / "s")
+    cfg = CrawlConfig(default_budget=4, max_attempts=1, max_epochs=3, adaptive_backoff=True)
+    web_crawl(spark, pages, sd, seeds, config=cfg)
+    assert len(plans) == 2  # epochs 1 and 2 carry backoff rows
+    assert not any("LogicalRDD" in p for p in plans), plans
+    got = _per_epoch_host_counts(spark, sd)
+    assert [got[(e, "a.example")] for e in range(3)] == [4, 2, 1]
+    assert [got[(e, "b.example")] for e in range(3)] == [4, 4, 4]
+
+
 def test_crawl_backoff_survives_resume(spark, tmp_path):
     from crawlspark.plans.epoch import CrawlConfig, web_crawl
 

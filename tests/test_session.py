@@ -1,9 +1,19 @@
 """Session defaults that depend on the machine or the master string,
 and the ones a crawl's CPU cost depends on."""
 
+import glob
+import json
 import os
+import shutil
+import signal
+import subprocess
+import sys
+import time
 
-from crawlspark.session import default_driver_memory, master_cores
+import pytest
+from pyspark.find_spark_home import _find_spark_home
+
+from crawlspark.session import ClassCache, default_driver_memory, master_cores
 
 GIB = 2**30
 
@@ -55,3 +65,181 @@ def test_a_repeated_crawl_compiles_almost_no_generated_class(spark, corpus_dir, 
     before = metrics.METRIC_COMPILATION_TIME().getCount()
     crawl(str(tmp_path / "second"))
     assert metrics.METRIC_COMPILATION_TIME().getCount() - before <= 5
+
+
+# -- the class-data-sharing archive ------------------------------------------
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# one session in a fresh process; prints what its JVM reports
+SESSION = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from crawlspark.session import get_spark
+spark = get_spark("cds", master="local[1]", extra_conf=json.loads(sys.argv[2]))
+jvm = spark._jvm
+print(json.dumps({
+    "info": jvm.java.lang.System.getProperty("java.vm.info"),
+    "tmpdir": jvm.java.lang.System.getProperty("java.io.tmpdir"),
+    "args": list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()),
+    "probe": spark.conf.get("spark.crawlspark.probe", None),
+}), flush=True)
+"""
+
+
+def _session_cmd(extra_conf=None):
+    return [sys.executable, "-c", SESSION, REPO, json.dumps(extra_conf or {})]
+
+
+def _session_env(cache_home, **env):
+    return dict(os.environ, XDG_CACHE_HOME=str(cache_home), **env)
+
+
+def run_session(cache_home, extra_conf=None, **env):
+    """Run SESSION to its exit (and so through its exit dump); its report."""
+    out = subprocess.run(
+        _session_cmd(extra_conf), env=_session_env(cache_home, **env),
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    return json.loads([ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1])
+
+
+def _cache(monkeypatch, cache_home):
+    monkeypatch.setenv("XDG_CACHE_HOME", str(cache_home))
+    cache = ClassCache.create("")
+    assert cache is not None
+    return cache
+
+
+def _dead_pid():
+    p = subprocess.Popen([sys.executable, "-c", ""])
+    p.wait()
+    return p.pid
+
+
+def _java():
+    home = os.environ.get("JAVA_HOME")
+    return os.path.join(home, "bin", "java") if home else shutil.which("java")
+
+
+@pytest.fixture(scope="module")
+def cache_life(tmp_path_factory):
+    """One cache dir through its life. It starts with a stale archive
+    under the current key (dumped with another class path), another key's
+    archive and a dead process's class list. The first session finds the
+    stale archive refused, records and dumps at exit; the second maps the
+    new archive. Both pass their own ``-Djava.io.tmpdir``."""
+    home = tmp_path_factory.mktemp("xdg")
+    with pytest.MonkeyPatch.context() as mp:
+        cache = _cache(mp, home)
+    jar = sorted(glob.glob(os.path.join(_find_spark_home(), "jars", "slf4j-api-*.jar")))[0]
+    lst = home / "stale.lst"
+    lst.write_text("java/lang/Object\njava/lang/String\norg/slf4j/Logger\n")
+    subprocess.run(
+        [_java(), "-Xshare:dump", f"-XX:SharedClassListFile={lst}",
+         f"-XX:SharedArchiveFile={cache.archive}", "-cp", jar],
+        check=True, capture_output=True, timeout=120,
+    )
+    stale_size = os.path.getsize(cache.archive)
+    other_key = os.path.join(cache.root, "0123456789abcdef.jsa")
+    dead_list = os.path.join(cache.root, f"{cache.key}.{_dead_pid()}.lst")
+    for path in (other_key, dead_list):
+        open(path, "w").close()
+    tmpdir = str(tmp_path_factory.mktemp("jvm-tmp"))
+    opts = {"spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmpdir}"}
+    first = run_session(home, opts)
+    built = os.path.getsize(cache.archive) if os.path.exists(cache.archive) else None
+    left = sorted(os.listdir(cache.root))
+    second = run_session(home, opts)
+    return dict(cache=cache, tmpdir=tmpdir, first=first, second=second, stale_size=stale_size,
+                built=built, left=left, other_key=other_key, dead_list=dead_list)
+
+
+def test_a_caller_java_option_survives_next_to_the_cache_flags(cache_life):
+    first, second = cache_life["first"], cache_life["second"]
+    assert first["tmpdir"] == second["tmpdir"] == cache_life["tmpdir"]
+    assert any(a.startswith("-XX:DumpLoadedClassList=") for a in first["args"])
+    assert f"-XX:SharedArchiveFile={cache_life['cache'].archive}" in second["args"]
+
+
+def test_a_second_session_maps_the_archive_the_first_one_dumped(cache_life):
+    assert "sharing" in cache_life["second"]["info"]
+    # the exit dump renamed its file onto the archive and removed the list
+    assert cache_life["left"] == sorted(["conf", os.path.basename(cache_life["cache"].archive)])
+
+
+def test_a_stale_archive_is_replaced_without_leaving_a_jvm_that_shares_nothing(cache_life):
+    first = cache_life["first"]
+    # the JVM that refused the stale archive was ended; its replacement
+    # shares the JDK's default archive and records for the new one
+    assert "sharing" in first["info"]
+    assert not any("SharedArchiveFile" in a for a in first["args"])
+    assert cache_life["built"] > 10 * cache_life["stale_size"]
+    # the other key's archive and the dead process's class list are pruned
+    assert not os.path.exists(cache_life["other_key"])
+    assert not os.path.exists(cache_life["dead_list"])
+
+
+def test_a_real_spark_conf_file_disables_the_archive(tmp_path):
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.crawlspark.probe  applied\n")
+    home = tmp_path / "xdg"
+    out = run_session(home, SPARK_CONF_DIR=str(conf))
+    assert out["probe"] == "applied"
+    assert not any("SharedArchiveFile" in a or "DumpLoadedClassList" in a for a in out["args"])
+    assert not os.path.exists(home / "crawlspark")
+
+
+def test_user_sharing_flags_or_an_unwritable_cache_disable_the_archive(monkeypatch, tmp_path):
+    templates = tmp_path / "conf"
+    templates.mkdir()
+    (templates / "spark-defaults.conf.template").write_text("")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(templates))
+    assert _cache(monkeypatch, tmp_path / "xdg") is not None  # templates alone do not count
+    assert ClassCache.create("-Djava.io.tmpdir=/x -Xshare:off") is None
+    assert ClassCache.create("-XX:ArchiveClassesAtExit=a.jsa") is None
+    monkeypatch.setenv("JAVA_TOOL_OPTIONS", "-XX:SharedArchiveFile=a.jsa")
+    assert ClassCache.create("") is None
+    monkeypatch.delenv("JAVA_TOOL_OPTIONS")
+    blocked = tmp_path / "file"
+    blocked.write_text("")
+    monkeypatch.setenv("XDG_CACHE_HOME", str(blocked))  # a file, not a dir
+    assert ClassCache.create("") is None
+
+
+def test_a_killed_dump_leaves_no_file_under_the_archive_name(monkeypatch, tmp_path):
+    home = tmp_path / "xdg"
+    cache = _cache(monkeypatch, home)
+    proc = subprocess.Popen(
+        _session_cmd(), env=_session_env(home), start_new_session=True,
+        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+    )
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline and not _dumping(cache.root):
+            assert proc.poll() is None, "the session ended before its dump started"
+            time.sleep(0.05)
+        assert _dumping(cache.root)
+    finally:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait(timeout=60)
+    time.sleep(1)
+    assert not os.path.exists(cache.archive)
+    # what the killed processes left is pruned by the next session
+    cache.prune()
+    assert os.listdir(cache.root) == ["conf"]
+
+
+def _dumping(root):
+    """Whether a process is dumping an archive into ``root``."""
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                cmd = f.read()
+        except OSError:
+            continue
+        if b"-Xshare:dump" in cmd and str(root).encode() in cmd:
+            return True
+    return False
