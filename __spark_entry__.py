@@ -10,19 +10,28 @@ Conventions that keep the driver's order-insensitive value-hash stable:
   * hashes are md5/sha256 hex strings (identical across engines);
   * fractional aggregates are exact-decimal or deterministically rounded.
 
-Operator coverage index (SURVEY.md §2): O5 cursor_range_filter,
-O6/O7 ordered_scan_limit + topk_per_key, O8 distinct_commits,
-O9 commit_budget_cutoff, O10 group_count_by_commit, O13 max_cursor,
-O16 filter_project_deletes, O18 count_by_day, O19/O20 count_by_day_type,
-O21 merge_aggregate, O22 sorted_report, O24 host_parse,
-O25/O26 time_bucket_shard, O27 hash_prefix_bin, politeness/frontier
-dequeue (north_star) frontier_dequeue, bloom seen-set bloom_seen_filter;
-O3 json_roundtrip + json_rewrite (RewriteJson modes);
-training-data ops: dedup_exact, dedup_minhash_lsh, dedup_simhash,
-ngram_jaccard, embedding_topk (+ rows-only LSH/IVF/multimodal
-variants), lang_id, quality_score, token_count, fingerprint,
-winnow_fingerprint + winnow_overlap (rolling-hash local overlap),
-sessionize; TPC-H-ish pricing_summary and region_revenue_join.
+Operator coverage index (SURVEY.md §2, COVERAGE.md): O5
+cursor_range_filter, O6/O7 ordered_scan_limit + topk_per_key, O8
+distinct_commits, O9 commit_budget_cutoff, O10 group_count_by_commit,
+O13 max_cursor, O16 filter_project_deletes, O19/O20 count_by_day_type,
+O21 merge_aggregate, O24 host_parse + url_normalize + surt_key,
+O25/O26 time_bucket_shard + mirror_path, O27 hash_prefix_bin, O3
+json_roundtrip + json_rewrite; leaf→page interval_bucket_join;
+politeness/frontier: frontier_dequeue, prioritized_dequeue,
+backoff_derate, robots_parse, robots_sitemaps, url_trap_filter,
+blocklist_filter, crawl_mini_epoch (rows-only); bloom seen-set
+bloom_seen_filter; training-data ops: dedup_exact, the MinHash-LSH
+family (dedup_minhash_lsh_capped, dedup_minhash_lsh_xx,
+dedup_lsh_verify, lsh_bucket_keepers, dedup_clusters), dedup_simhash +
+simhash_pairs, ngram_jaccard, paragraph_dedup, duplicate_spans +
+strip_duplicate_spans, fingerprint + winnow_overlap, embedding_topk +
+embedding_near_dups_exact (+ rows-only embedding_lsh_topk,
+embedding_ivf_topk, embedding_near_dups_lsh, semdedup),
+multimodal_decode + image_phash_dedup (rows-only), lang_id,
+token_count, quality_score, corpus_stats, repetition_profile,
+top_token_frac, redact_pii, c4_line_filter, gopher_quality,
+training_corpus_select; sessionize; TPC-H-ish pricing_summary and
+region_revenue_join.
 """
 
 from __future__ import annotations
@@ -1391,218 +1400,6 @@ _register(
 )
 
 
-# -- fixed-iteration integer PageRank over a deterministic link graph -------
-def _pagerank_edges_spark(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    n = d.groupBy().count().withColumnRenamed("count", "n")
-    a = d.crossJoin(F.broadcast(n))
-    # three pseudo-random outlinks + one Zipf-ish hub edge (doc_id % 97):
-    # hubs give the rank distribution real skew, like the web. ONE scan:
-    # the four edge families explode from an array per row instead of a
-    # 4-branch union re-scanning documents per branch (r6); the distinct
-    # sees the same rows either way
-    dsts = F.array(
-        *[((F.col("doc_id") * mult + off) % F.col("n"))
-          for mult, off in ((7, 1), (31, 2), (101, 3))],
-        F.col("doc_id") % 97,
-    )
-    return a.select(
-        F.col("doc_id").alias("src"), F.explode(dsts).alias("dst")
-    ).distinct()
-
-
-_PAGERANK_EDGES_SQL = """
-    SELECT DISTINCT src, dst FROM (
-      SELECT a.doc_id AS src, (a.doc_id * 7 + 1) % nn.n AS dst FROM documents a, nn
-      UNION ALL
-      SELECT a.doc_id, (a.doc_id * 31 + 2) % nn.n FROM documents a, nn
-      UNION ALL
-      SELECT a.doc_id, (a.doc_id * 101 + 3) % nn.n FROM documents a, nn
-      UNION ALL
-      SELECT a.doc_id, a.doc_id % 97 FROM documents a
-    )
-"""
-
-
-def _q_pagerank(spark, sf_dir):
-    """5-iteration integer-micro-unit PageRank (graph.pagerank_micro)
-    over the deterministic link graph — the frontier-priority /
-    corpus-weighting signal. Integer floor arithmetic end-to-end, so
-    the DuckDB unrolled-CTE twin matches bit-exactly."""
-    from crawlspark.operators.graph import pagerank_micro
-
-    return pagerank_micro(
-        _pagerank_edges_spark(spark, sf_dir), iterations=5,
-        redistribute_dangling=True,
-    )
-
-
-def _pagerank_oracle() -> None:
-    from crawlspark.operators.graph import pagerank_sql
-
-    edges_cte = (
-        "WITH nn AS (SELECT count(*) AS n FROM documents) " + _PAGERANK_EDGES_SQL
-    )
-    # pagerank_sql wraps edges in its own WITH — inline the nn CTE instead
-    inner = _PAGERANK_EDGES_SQL.replace(
-        ", nn", ", (SELECT count(*) AS n FROM documents) nn"
-    )
-    _ORACLES["pagerank"] = pagerank_sql(
-        inner, iterations=5, redistribute_dangling=True
-    )
-
-
-def _q_opic(spark, sf_dir):
-    """5-round synchronous OPIC (graph.opic_micro) over the same
-    deterministic link graph as `pagerank` — the importance estimate a
-    crawler maintains WHILE crawling (no convergence wait), banked
-    history + circulating cash in exact integer micro-units."""
-    from crawlspark.operators.graph import opic_micro
-
-    return opic_micro(_pagerank_edges_spark(spark, sf_dir), iterations=5)
-
-
-def _opic_oracle() -> str:
-    from crawlspark.operators.graph import opic_sql
-
-    inner = _PAGERANK_EDGES_SQL.replace(
-        ", nn", ", (SELECT count(*) AS n FROM documents) nn"
-    )
-    return opic_sql(inner, iterations=5)
-
-
-_register("pagerank", _q_pagerank, None)
-_pagerank_oracle()
-
-_register("opic", _q_opic, None)
-_TAIL_ORACLES["opic"] = _opic_oracle()
-
-
-# -- sequence packing (GPT-style fixed-token training examples) -------------
-def _q_sequence_pack(spark, sf_dir):
-    """Deterministic sharded packing assignment: which fixed-512-token
-    training example each document's first token lands in
-    (packing.sequence_pack over the whitespace token count)."""
-    from crawlspark.operators.packing import sequence_pack
-    from crawlspark.operators.textops import token_count
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", token_count("text").alias("n_tok")
-    )
-    return sequence_pack(docs, max_tokens=512, tok_col="n_tok")
-
-
-def _sequence_pack_oracle() -> None:
-    from crawlspark.operators.packing import sequence_pack_sql
-
-    _ORACLES["sequence_pack"] = sequence_pack_sql(max_tokens=512)
-
-
-_register("sequence_pack", _q_sequence_pack, None)
-_sequence_pack_oracle()
-
-
-# -- benchmark decontamination (eval-set n-gram overlap) --------------------
-# the "benchmark" is a deterministic subset of the corpus itself (every
-# 37th doc), so contamination is guaranteed non-vacuous: benchmark docs
-# hit themselves, and the small shared vocabulary makes cross-doc
-# k-gram collisions real without being universal (k=4 at sf0.01: 14
-# benchmark self-hits + 13 cross-doc contaminations; k=3 flags 64% of
-# the corpus, k=5 only one cross hit)
-_DECON_K = 4
-_DECON_PRED = "doc_id % 37 = 0"
-
-
-def _q_decontaminate(spark, sf_dir):
-    """Eval-set decontamination (decontam.decontaminate): flag docs
-    sharing any k-word shingle with the benchmark set — broadcast
-    semi-join on 60-bit shingle hashes, the GPT-3/Lee-et-al corpus
-    hygiene step."""
-    from crawlspark.operators.decontam import decontaminate
-
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.where(F.expr(_DECON_PRED))
-    return decontaminate(docs, bench, k=_DECON_K)
-
-
-def _decontaminate_oracle() -> None:
-    from crawlspark.operators.decontam import decontaminate_sql
-
-    _ORACLES["decontaminate"] = decontaminate_sql(k=_DECON_K, bench_pred=_DECON_PRED)
-
-
-_register("decontaminate", _q_decontaminate, None)
-_decontaminate_oracle()
-
-
-# -- hashed linear quality-classifier inference -----------------------------
-def _q_classifier_score(spark, sf_dir):
-    """fastText-style hashed linear classifier inference
-    (classify.classifier_score): token → md5 bucket → integer weight,
-    exact BIGINT score sum + keep gate. The plan shape of learned
-    quality-filter scoring at corpus scale."""
-    from crawlspark.operators.classify import classifier_score
-
-    return classifier_score(_t(spark, sf_dir, "documents"))
-
-
-def _classifier_oracle() -> None:
-    from crawlspark.operators.classify import classifier_score_sql
-
-    _ORACLES["classifier_score"] = classifier_score_sql()
-
-
-_register("classifier_score", _q_classifier_score, None)
-_classifier_oracle()
-
-
-# labels for the classifier-eval pair: deterministic pseudo-random split
-# (Knuth mix mod 97), identical expression in both engines
-_EVAL_LABEL_SPARK = "(doc_id * 2654435761) % 97 < 48"
-
-
-def _eval_scored_labels(spark, sf_dir):
-    from crawlspark.operators.classify import classifier_score
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    scored = classifier_score(d)
-    labels = d.select("doc_id", F.expr(_EVAL_LABEL_SPARK).alias("label"))
-    return scored, labels
-
-
-def _q_calibration_bins(spark, sf_dir):
-    """Reliability table (classify.calibration_bins): equal-count rank
-    bins of the hashed-linear quality score vs deterministic labels —
-    exact integer bin cuts and positive rates."""
-    from crawlspark.operators.classify import calibration_bins
-
-    scored, labels = _eval_scored_labels(spark, sf_dir)
-    return calibration_bins(scored, labels, n_bins=10)
-
-
-def _q_classifier_auc(spark, sf_dir):
-    """Exact tie-aware ROC AUC (classify.classifier_auc) in integer
-    micro-units — Mann-Whitney U over the distinct-score relation,
-    floored once at the end."""
-    from crawlspark.operators.classify import classifier_auc
-
-    scored, labels = _eval_scored_labels(spark, sf_dir)
-    return classifier_auc(scored, labels)
-
-
-def _eval_oracles() -> tuple[str, str]:
-    from crawlspark.operators.classify import classifier_eval_sql
-
-    return classifier_eval_sql(
-        f"(d.{'doc_id'} * 2654435761) % 97 < 48", n_bins=10
-    )
-
-
-_register("calibration_bins", _q_calibration_bins, None)
-_register("classifier_auc", _q_classifier_auc, None)
-_TAIL_ORACLES["calibration_bins"], _TAIL_ORACLES["classifier_auc"] = _eval_oracles()
-
-
 def _pct_x10_expr(mult: int) -> str:
     """EXACT interpolated percentile in integer x10 micro-units over a
     sorted array column `arr` of BIGINTs with `n = size(arr)`:
@@ -1741,10 +1538,10 @@ def _q_fingerprint(spark, sf_dir):
     return docs.select("doc_id", fingerprint("text").alias("fp"))
 
 
-# demoted to the tail in round 5 (window rotation): winnow_overlap's
-# windowed oracle is built on the same fingerprint machinery
-_register("fingerprint", _q_fingerprint, None)
-_TAIL_ORACLES["fingerprint"] = "SELECT doc_id, md5(lower(text)) AS fp FROM documents"
+_register(
+    "fingerprint", _q_fingerprint,
+    "SELECT doc_id, md5(lower(text)) AS fp FROM documents",
+)
 
 _WIN_K, _WIN_W, _WIN_SHARED, _WIN_CAP = 8, 4, 2, 50
 
@@ -2290,61 +2087,10 @@ _register("gopher_quality", _q_gopher_quality, None)
 _TAIL_ORACLES["gopher_quality"] = _gopher_tail_oracle()
 
 
-# -- jusText boilerplate removal ----------------------------------------------
-# Block-level main-content extraction (operators/boilerplate.py). The
-# documents table is plain text, so the registered query synthesizes
-# HTML deterministically IN BOTH ENGINES: block tags every 12 words
-# (the lineify pattern with '</p><p>' instead of newline) and anchors
-# wrapped around three vocabulary words — then classifies with
-# corpus-aware thresholds (12-word blocks quantize stopword density in
-# 1/12 steps, so the paper's 0.30/0.32 band is unreachable; the paper
-# defaults are pinned by tests/test_boilerplate.py's planted pages).
-# Label mix at sf0.01: cf bad/short/near_good/good = 1419/190/646/222,
-# 153 context promotions — every rule and both passes exercised.
-_BP = dict(length_low=40, length_high=60,
-           stopwords_low_micro=160_000, stopwords_high_micro=250_000)
-
-
-def _q_boilerplate_blocks(spark, sf_dir):
-    from crawlspark.operators.boilerplate import classify_blocks
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    blocked = F.regexp_replace(
-        F.col("text"), r"((?:\S+ ){11})(\S+) ", "$1$2</p><p>"
-    )
-    anchored = F.regexp_replace(
-        blocked, r"\b(customer|query|stream)\b", "<a href=x>$1</a>"
-    )
-    html = F.concat(F.lit("<p>"), anchored, F.lit("</p>"))
-    return classify_blocks(
-        d.select("doc_id", html.alias("html")), **_BP
-    ).select(
-        "doc_id", "block_idx", "block_text",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.col("n_words").cast("long").alias("n_words"),
-        "link_density_micro", "stop_density_micro", "label_cf", "label",
-    )
-
-
-def _boilerplate_tail_oracle() -> str:
-    from crawlspark.operators.boilerplate import classify_blocks_sql
-
-    inner = r"""(SELECT doc_id,
-      '<p>' || regexp_replace(
-          regexp_replace(text, '((?:\S+ ){11})(\S+) ', '\1\2</p><p>', 'g'),
-          '\b(customer|query|stream)\b', '<a href=x>\1</a>', 'g') || '</p>' AS html
-      FROM documents) h"""
-    return classify_blocks_sql(inner, **_BP)
-
-
-_register("boilerplate_blocks", _q_boilerplate_blocks, None)
-_TAIL_ORACLES["boilerplate_blocks"] = _boilerplate_tail_oracle()
-
-
 # -- robots.txt Sitemap directive capture -------------------------------------
 # Host-global Sitemap: lines (sitemaps.org protocol) captured by the
 # same expression-only line fold as the disallow rules
-# (politeness.sitemaps_from_robots lists them). The oracle re-derives them
+# (politeness.parse_robots_txt's sitemap_urls). The oracle re-derives them
 # independently as a per-line regexp scan (group membership is
 # irrelevant for sitemaps, so the twin needs no fold).
 _ROBOTS_SM_BODIES = [
@@ -2608,10 +2354,12 @@ _TAIL_ORACLES["backoff_derate"] = """
 # the promoted ones were registered as tail oracles above. Demoted
 # queries stay exact-checked via tail_oracle_sql() + the pytest parity
 # gate, which runs the identical compare over windowed AND tail oracles.
+# A cut that deletes windowed queries refills the window from the tail:
+# register a tail oracle directly, or take a name off _DEMOTE.
 # ---------------------------------------------------------------------------
 _DEMOTE = [
-    "ngram_jaccard", "embedding_near_dups_exact", "top_token_frac",
-    "paragraph_dedup", "sequence_pack", "repetition_profile", "dedup_simhash",
+    "ngram_jaccard", "embedding_near_dups_exact", "paragraph_dedup",
+    "dedup_simhash",
 ]
 _PROMOTE = [
     "c4_line_filter", "gopher_quality", "robots_sitemaps",

@@ -56,8 +56,8 @@ def parse_robots_txt(
     :func:`budgets_from_crawl_delay` for per-host token budgets — and
     ``Sitemap:`` directives (sitemaps.org protocol: host-global, NOT
     scoped to any user-agent group, so they accumulate whether or not a
-    group applies to us) as ``sitemap_urls`` in file order
-    (:func:`sitemaps_from_robots` lists them). A Sitemap line is a
+    group applies to us) as ``sitemap_urls`` in file order (an empty
+    array when the body has none). A Sitemap line is a
     regular directive line: like any non-UA record it ends a stacked
     user-agent run."""
     body = F.col(body_col)
@@ -110,15 +110,6 @@ def parse_robots_txt(
         F.col("__r.alw").alias("allow_prefixes"),
         F.col("__r.cd").cast("double").alias("crawl_delay_s"),
         F.col("__r.sm").alias("sitemap_urls"),
-    )
-
-
-def sitemaps_from_robots(robots: DataFrame) -> DataFrame:
-    """(host, sitemap_url) rows from :func:`parse_robots_txt` output —
-    the fetch list for sitemap-based seed discovery. Hosts without
-    Sitemap directives drop out."""
-    return robots.select(
-        "host", F.explode("sitemap_urls").alias("sitemap_url")
     )
 
 

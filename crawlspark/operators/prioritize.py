@@ -6,9 +6,9 @@ frontier from graph signals — Cho, Garcia-Molina & Page, "Efficient
 Crawling Through URL Ordering" (WWW 1998) showed in-link-count /
 PageRank ordering finds important pages far sooner than BFS; OPIC
 (Abiteboul et al. 2003) made it incremental. This module is the glue:
-any (url, priority) relation — in-link counts, PageRank micro-units
-(operators/graph.py), sitemap <priority> — merges into the pending
-frontier before the politeness dequeue.
+any (url, priority) relation — in-link counts, PageRank scores,
+sitemap <priority> — merges into the pending frontier before the
+politeness dequeue.
 
 Scale shape: ONE left equi-join on url per epoch. The pending frontier
 is already hash-partitioned on url (plans/epoch.py width-normalizes on

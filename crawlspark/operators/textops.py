@@ -213,9 +213,8 @@ def simhash64(text: Column | str) -> Column:
     Evaluation-cost note: lambda bodies inside higher-order functions
     are RE-EVALUATED per element — an earlier shape closed over
     ``split(md5(t), '')`` from 64 bit-lambdas and silently computed 64
-    md5s per token (~10x the whole fetch stage, measured in
-    BENCH/BASELINE.md). The fix materializes each token's 16 hex
-    nibbles ONCE as an int array (outer transform), so the per-token
+    md5s per token instead of one. The fix materializes each token's 16
+    hex nibbles ONCE as an int array (outer transform), so the per-token
     cost is 1 md5 + 1 split + 16 nibble decodes + 64 adds."""
     toks = words_of(text)
     zero64 = F.array_repeat(F.lit(0).cast("long"), 64)
@@ -301,11 +300,11 @@ def _simhash64_py(t: str | None):
 @pandas_udf(T.LongType())
 def simhash64_udf(s: pd.Series) -> pd.Series:
     """Arrow-vectorized simhash for HOT paths (the crawl's inline
-    analyze): hashlib's C md5 + numpy bit math ≈ 40x the throughput of
-    the interpreted 64-lane HOF expression — Catalyst evaluates
+    analyze): hashlib's C md5 + numpy bit math instead of the
+    interpreted 64-lane HOF expression — Catalyst evaluates
     higher-order-function lambdas per element with per-token array
-    allocation, which made analyze=True ~8x slower than off at bench
-    scale. Bit-exact with :func:`simhash64`/`simhash64_agg`
+    allocation, which made analyze=True several times slower than off.
+    Bit-exact with :func:`simhash64`/`simhash64_agg`
     (pinned by test_analyze_inline.py and test_textops_props.py)."""
     import pandas as pd
 

@@ -239,17 +239,16 @@ class CrawlConfig:
     # plus one small write per epoch — opt-in.
     adaptive_backoff: bool = False
     # Inline text analysis on fetch (tokens/simhash/quality). COST NOTE:
-    # ~1.5x the analyze-off epoch wall at bench scale (the analyze
-    # on/off row in BENCH/BASELINE.md), dominated by the Arrow simhash
-    # UDF (textops.simhash64_udf — C md5 + numpy bit math with a
+    # it lengthens every epoch, dominated by the Arrow simhash UDF
+    # (textops.simhash64_udf — C md5 + numpy bit math with a
     # Zipf-friendly token-weight memo; the column-expression HOF shape
-    # was 8-10x because Catalyst re-evaluates HOF lambdas per element)
-    # plus quality_micro's stopword replace passes. No shuffle either
-    # way. The explode+agg shape (simhash64_agg) is cheaper per token
-    # but needs a token-level shuffle — at 100 TB that moves far more
-    # bytes than the UDF burns cycles; run it as a post-crawl batch pass
-    # when whole-corpus analysis is the goal, keep analyze=True for
-    # always-on QA that tolerates the 1.5x.
+    # was several times slower because Catalyst re-evaluates HOF lambdas
+    # per element) plus quality_micro's stopword replace passes. No
+    # shuffle either way. The explode+agg shape (simhash64_agg) is
+    # cheaper per token but needs a token-level shuffle — at 100 TB that
+    # moves far more bytes than the UDF burns cycles; run it as a
+    # post-crawl batch pass when whole-corpus analysis is the goal, keep
+    # analyze=True for always-on QA that tolerates the extra epoch time.
     analyze: bool = False
     broadcast_threshold: int = 100_000  # dequeues larger than this use a shuffle-hash join
 
@@ -553,8 +552,8 @@ def web_crawl(
                 if cfg.analyze:
                     # simhash via the Arrow UDF, not the HOF expression: Catalyst
                     # re-evaluates HOF lambdas per element, and the 64-lane
-                    # interpreted accumulate made analyze=True ~8x slower than
-                    # off (textops.simhash64_udf docstring; bench analyze row)
+                    # interpreted accumulate made analyze=True several times
+                    # slower than off (textops.simhash64_udf docstring)
                     from crawlspark.operators.textops import (
                         quality_micro,
                         simhash64_udf,

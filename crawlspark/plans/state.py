@@ -41,9 +41,9 @@ FETCHED_SCHEMA = T.StructType([
 # No ``host`` column: host is a pure function of url (regexp_extract,
 # functions/urls.py) and the crawl is memory-bandwidth-bound, so the
 # frontier carries the minimum row — host is re-derived AFTER the
-# dequeue read / dedup shuffle, trading register-bound compute (which
-# scales ~0.95 on this box) for bytes through every frontier shuffle,
-# parquet encode, and read (which scale ~0.66). See BENCH/BASELINE.md.
+# dequeue read / dedup shuffle, trading register-bound compute for
+# bytes through every frontier shuffle, parquet encode, and read, which
+# scale worse with cores.
 FRONTIER_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
     T.StructField("priority", T.IntegerType()),

@@ -3,6 +3,7 @@ thousands of docs share identical text must NOT produce a quadratic
 band bucket — the cap drops the degenerate bucket (its members belong
 to exact dedup) while distinct near-dup pairs still come through."""
 
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from crawlspark.operators.dedup import exact_dedup, minhash_bands, minhash_lsh_pairs
@@ -201,3 +202,26 @@ def test_duplicate_spans_merges_overlapping_islands(spark):
     for i, ss in per_doc.items():
         assert len(ss) == 1, f"doc {i}: expected one merged span, got {ss}"
         assert (ss[0].span_start, ss[0].span_end) == (0, 80)
+
+
+def test_paragraph_dedup_first_occurrence_golden(spark):
+    from crawlspark.operators.dedup import paragraph_dedup
+
+    boiler = "accept our cookies"
+    docs = spark.createDataFrame([
+        Row(doc_id=0, text=f"{boiler}\n\nunique zero\n\nshared tail"),
+        Row(doc_id=1, text=f"{boiler}\n\nunique one"),
+        Row(doc_id=2, text=f"shared tail\n\n{boiler}\n\nunique two"),
+        Row(doc_id=3, text=boiler),                      # fully boilerplate
+        Row(doc_id=4, text=f"unique four\n\n\n\nunique four b"),  # empty para dropped
+    ])
+    out = {r["doc_id"]: r for r in paragraph_dedup(docs).collect()}
+    assert out[0]["text_dedup"] == f"{boiler}\n\nunique zero\n\nshared tail"
+    assert (out[0]["n_paras"], out[0]["n_kept"]) == (3, 3)   # first doc keeps all
+    assert out[1]["text_dedup"] == "unique one"              # boiler seen in doc 0
+    assert (out[1]["n_paras"], out[1]["n_kept"]) == (2, 1)
+    assert out[2]["text_dedup"] == "unique two"              # both repeats dropped
+    assert out[3]["text_dedup"] == ""                        # reduced to nothing,
+    assert (out[3]["n_paras"], out[3]["n_kept"]) == (1, 0)   # ...but still emitted
+    assert out[4]["text_dedup"] == "unique four\n\nunique four b"
+    assert (out[4]["n_paras"], out[4]["n_kept"]) == (2, 2)

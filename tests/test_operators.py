@@ -243,10 +243,7 @@ def test_parse_robots_txt_goldens(spark):
 def test_parse_robots_sitemap_directives(spark):
     from pyspark.sql import Row
 
-    from crawlspark.operators.politeness import (
-        parse_robots_txt,
-        sitemaps_from_robots,
-    )
+    from crawlspark.operators.politeness import parse_robots_txt
 
     bodies = {
         # sitemaps are host-global: captured even inside a group that
@@ -280,9 +277,6 @@ def test_parse_robots_sitemap_directives(spark):
     dis = {r.host: list(r.disallow_prefixes) for r in parsed.collect()}
     assert dis["a.example"] == ["/p/"]
     assert dis["c.example"] == ["/x"]
-    fetch = {(r.host, r.sitemap_url) for r in sitemaps_from_robots(parsed).collect()}
-    assert ("b.example", "https://b.example/s.xml") in fetch
-    assert not any(h == "d.example" for h, _ in fetch)
 
 
 def test_parse_robots_txt_is_expression_only(spark):

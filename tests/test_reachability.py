@@ -9,6 +9,7 @@ the query registry must name a module that exists."""
 
 import ast
 import os
+import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ENTRY_POINTS = ("crawlspark.__main__", "crawlspark.testdata")
@@ -154,3 +155,68 @@ def test_every_package_definition_is_named_outside_itself():
             used |= names
     dead = sorted(f"{path}:{name}" for name, path in defined.items() if name not in used)
     assert not dead, f"top-level definitions nothing names: {dead}"
+
+
+COVERAGE = os.path.join(ROOT, "COVERAGE.md")
+# a backticked `path.py` or `path.py::name`, or a bare `::name` that
+# continues the last path of its table cell
+_COVERAGE_REF = re.compile(r"`([\w/]+\.py)?(?:::([^`]+))?`")
+
+
+def _coverage_file(ref: str) -> str | None:
+    """A path relative to the repo, ``crawlspark/`` or ``tests/``; a
+    bare module name is an operator."""
+    bases = ("", "crawlspark", "tests") + (("crawlspark/operators",) if "/" not in ref else ())
+    for base in bases:
+        path = os.path.join(ROOT, base, ref)
+        rel = os.path.relpath(path, ROOT)
+        if rel.split(os.sep)[0] in ("crawlspark", "tests") and os.path.isfile(path):
+            return path
+    return None
+
+
+def _top_level(body) -> dict[str, list]:
+    """name -> body (a class's statements, else []) of each def, class
+    and assigned name in ``body``."""
+    out = {}
+    for stmt in body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            out[stmt.name] = []
+        elif isinstance(stmt, ast.ClassDef):
+            out[stmt.name] = stmt.body
+        elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+            targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+            out.update((t.id, []) for t in targets if isinstance(t, ast.Name))
+    return out
+
+
+def _resolves(path: str, name: str) -> bool:
+    """``name`` is ``def``, ``Class.method`` or ``prefix*``, defined at
+    the top level of ``path``."""
+    scope = _top_level(ast.parse(open(path).read(), path).body)
+    head, *rest = name.split(".")
+    if head.endswith("*"):
+        return not rest and any(n.startswith(head[:-1]) for n in scope)
+    if head not in scope:
+        return False
+    return all(part in _top_level(scope[head]) for part in rest)
+
+
+def test_coverage_map_names_existing_code():
+    """Every file and definition COVERAGE.md names in backticks exists,
+    so a cut that deletes code has to take its rows out too."""
+    dead = []
+    for line in open(COVERAGE).read().splitlines():
+        for cell in line.split("|"):
+            path = None
+            for file_ref, names in _COVERAGE_REF.findall(cell):
+                if file_ref:
+                    ref, path = file_ref, _coverage_file(file_ref)
+                    if path is None:
+                        dead.append(ref)
+                if names and path is not None:
+                    dead.extend(
+                        f"{ref}::{n}" for n in names.split("/") if not _resolves(path, n)
+                    )
+    dead = sorted(set(dead))
+    assert not dead, f"COVERAGE.md names {len(dead)} missing files or definitions: {dead}"
