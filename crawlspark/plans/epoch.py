@@ -54,10 +54,11 @@ small runs, so the loop runs a FIXED, small number of actions per epoch):
     and later epochs of the state dir start there (functions/extract.py).
   * the per-host window is the salted two-phase top-K (politeness.py) —
     no hot-host task;
-  * the fetch is an equi-join on ``url`` — small dequeues broadcast (the
-    100 TB pages side is never shuffled), large ones use one right-outer
-    shuffle-hash join; at production scale the pages table is bucketed
-    by url hash so this join co-locates without shuffling pages.
+  * the fetch is ONE right-outer shuffle-hash equi-join on ``url`` at
+    every dequeue size: it yields hits and misses together, with one
+    scan of the pages snapshot and no broadcast build on the driver; at
+    production scale the pages table is bucketed by url hash so this
+    join co-locates without shuffling pages.
 
 Fetch retry (O1, Downloader.cs:297-318 — 3 attempts per url): a url
 whose fetch misses is re-queued to the next epoch's frontier with
@@ -250,7 +251,6 @@ class CrawlConfig:
     # post-crawl batch pass when whole-corpus analysis is the goal, keep
     # analyze=True for always-on QA that tolerates the extra epoch time.
     analyze: bool = False
-    broadcast_threshold: int = 100_000  # dequeues larger than this use a shuffle-hash join
 
     def validate(self) -> None:
         if self.default_budget < 1:
@@ -389,8 +389,6 @@ def web_crawl(
                 print(f"    [epoch trace] {label}: {now - tmark[0]:.2f}s", flush=True)
                 tmark[0] = now
 
-        seed_count: int | None = None
-
         for epoch in range(start, cfg.max_epochs):
             if cfg.max_total_urls is not None and total_final >= cfg.max_total_urls:
                 break
@@ -406,15 +404,12 @@ def web_crawl(
             #    The frontier invariant guarantees pending ∩ seen = ∅, so no
             #    seen-set filtering happens on this path at all.
             if epoch == 0:
-                if seed_count is None:
-                    seed_count = seeds.count()  # one tiny metadata-only job
                 pending = _normalize_seeds(seeds, cfg.normalize_urls)
                 if blocklist is not None:
                     # a blocked host is never fetched, even from the seed
                     # list; same suffix-match chain as link admission
                     pending = filter_blocked_hosts(pending, blocklist)
                 pending = pending.repartition(n_shuffle, "url")
-                est_dequeued = seed_count
             else:
                 fdir = state.frontier._epoch_dir(epoch - 1)
                 pending_rows, pending_files = _dir_row_count(fdir)
@@ -427,9 +422,6 @@ def web_crawl(
                 # is already wide (the at-scale case).
                 if pending_files < max(2, n_shuffle // 2):
                     pending = pending.repartition(n_shuffle, "url")
-                est_dequeued = pending_rows
-            if cfg.global_budget_per_epoch is not None:
-                est_dequeued = min(est_dequeued, cfg.global_budget_per_epoch)
 
             if priorities is not None:
                 # external visit-order signal (in-link counts / PageRank /
@@ -473,32 +465,13 @@ def web_crawl(
             else:
                 dequeued = pin(dequeued, epoch_pins)
 
-            # 3. "fetch": equi-join against the pages snapshot. Small dequeues
-            #    broadcast (one pages scan with all columns + one url-only
-            #    columnar scan for the misses semi-join — the 100 TB table is
-            #    never shuffled); large dequeues use ONE right-outer
-            #    shuffle-hash join that yields hits and misses together —
-            #    building a multi-hundred-MB broadcast relation is
-            #    single-threaded driver work and anti-scales.
-            small = est_dequeued <= cfg.broadcast_threshold
-            if small:
-                found = pages_sel.join(F.broadcast(dequeued), "url", "inner")
-                found_urls = pages_sel.select("url").join(
-                    F.broadcast(dequeued.select("url")), "url", "left_semi"
-                )
-                notfound = dequeued.join(found_urls, "url", "left_anti").select(
-                    "url", "host", "priority", "discovery_ts", "attempts",
-                    F.lit(None).cast("timestamp").alias("warc_ts"),
-                    F.lit(None).cast("binary").alias("html"),
-                    F.lit(None).cast("string").alias("lang"),
-                    *(
-                        [F.lit(None).cast("int").alias("available_from_attempt")]
-                        if has_avail else []
-                    ),
-                )
-                joined = found.select(*notfound.columns).unionByName(notfound)
-            else:
-                joined = pages_sel.join(dequeued.hint("SHUFFLE_HASH"), "url", "right")
+            # 3. "fetch": ONE right-outer shuffle-hash equi-join against the
+            #    pages snapshot, at every dequeue size. It yields hits and
+            #    misses (null html) together from a single pages scan; a
+            #    broadcast of the dequeued side cannot serve an outer join
+            #    that preserves it, and would cost a semi- and an anti-join
+            #    plus a second pages scan to recover the misses.
+            joined = pages_sel.join(dequeued.hint("SHUFFLE_HASH"), "url", "right")
 
             att1 = (F.col("attempts") + 1).cast("int")
             avail = (
@@ -666,7 +639,7 @@ def web_crawl(
                     # catalyst would pick broadcast for a sub-threshold seen
                     # side, but building a 10^5-10^6-url hashed relation is
                     # SERIAL driver work — a per-epoch constant that anti-scales
-                    # (same reason the large fetch join avoids broadcast). The
+                    # (same reason the fetch join avoids broadcast). The
                     # left side is already url-partitioned by the groupBy, so
                     # only the small right side shuffles, fully parallel.
                     next_frontier = next_frontier.join(

@@ -80,6 +80,44 @@ def test_crawl_rollback_flag(spark, tmp_path, capsys):
     assert fetched.count() == fetched.select("url").distinct().count()
 
 
+def test_max_total_urls_stops_at_the_first_epoch_boundary_at_the_limit(spark, tmp_path, capsys):
+    """--max-total-urls (CrawlConfig.max_total_urls) is checked at epoch
+    start against the final (ok + failed) URLs committed so far, resumed
+    epochs included: the crawl stops at the first epoch boundary where
+    that count is at least the limit, and the epoch that crosses it runs
+    whole. A later call on the same state dir makes no progress."""
+    from crawlspark.plans.epoch import CrawlConfig, web_crawl
+    from crawlspark.plans.state import CrawlState
+
+    d = _corpus(spark, tmp_path)
+    state = str(tmp_path / "state_cap")
+    args = ["crawl", "--corpus", d, "--state", state, "--budget", "6"]
+
+    def crawl(*extra) -> int:
+        assert main(args + list(extra)) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])["epochs"]
+
+    def finals() -> list[int]:
+        return [s["urls_fetched"] + s["urls_failed"] for s in CrawlState(state).epoch_stats()]
+
+    assert crawl("--max-epochs", "1") == 1
+    (final0,) = finals()
+    assert final0 > 0
+    # the limit is reached exactly: no further epoch starts
+    assert crawl("--max-total-urls", str(final0)) == 0
+    # one URL short of it: epoch 1 runs, and runs whole past the limit
+    assert crawl("--max-total-urls", str(final0 + 1)) == 1
+    assert finals()[1] > 1
+    assert CrawlState(state).epoch_stats()[-1]["urls_pending_after"] > 0  # not exhausted
+    # resumed at the limit, from the CLI and from the API: nothing more
+    assert crawl("--max-total-urls", str(final0 + 1)) == 0
+    pages = spark.read.parquet(os.path.join(d, "pages.parquet"))
+    seeds = spark.read.parquet(os.path.join(d, "seeds.parquet"))
+    cfg = CrawlConfig(default_budget=6, max_total_urls=final0 + 1)
+    assert web_crawl(spark, pages, state, seeds, config=cfg) == []
+    assert CrawlState(state).log.committed_epochs() == [0, 1]
+
+
 def test_default_cursor_value_with_an_offset_is_read_as_utc(spark, tmp_path, capsys):
     """Cursors are naive UTC: a --default-cursor-value with a UTC offset
     seeds the same cursor as the naive UTC value of the same instant."""

@@ -220,3 +220,25 @@ def test_coverage_map_names_existing_code():
                     )
     dead = sorted(set(dead))
     assert not dead, f"COVERAGE.md names {len(dead)} missing files or definitions: {dead}"
+
+
+def test_every_crawl_config_field_is_read():
+    """Every ``CrawlConfig`` field is read in the package as
+    ``cfg.<field>`` or ``config.<field>``; ``validate`` reads its fields
+    as ``self.<field>``, which does not count. A knob stays only while a
+    behaviour needs it, so one whose last reader is deleted fails here."""
+    epoch = os.path.join(ROOT, "crawlspark", "plans", "epoch.py")
+    tree = ast.parse(open(epoch).read(), epoch)
+    cls = next(n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "CrawlConfig")
+    fields = {s.target.id for s in cls.body if isinstance(s, ast.AnnAssign)}
+    assert fields, "the walk found no CrawlConfig field"
+    read = set()
+    for path in _package_files():
+        for n in ast.walk(ast.parse(open(path).read(), path)):
+            if (
+                isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load)
+                and isinstance(n.value, ast.Name) and n.value.id in ("cfg", "config")
+            ):
+                read.add(n.attr)
+    unread = sorted(fields - read)
+    assert not unread, f"CrawlConfig fields nothing reads: {unread}"

@@ -205,29 +205,6 @@ def test_bloom_activation_midcrawl_preserves_visited_set(spark, tmp_path):
     assert traces[40] == traces[10 ** 9]
 
 
-def test_fetch_join_strategies_agree(spark, tmp_path):
-    """The broadcast-inner and right-outer shuffle fetch paths must
-    produce identical traces (broadcast_threshold=0 forces the latter)."""
-    from crawlspark.testdata import write_corpus
-
-    d = str(tmp_path / "c")
-    paths = write_corpus(spark, d, n_pages=120, n_hosts=6)
-    pages = spark.read.parquet(paths["pages"])
-    seeds = spark.read.parquet(paths["seeds"])
-    traces = {}
-    for thr in (100_000, 0):
-        sd = str(tmp_path / f"s{thr}")
-        web_crawl(
-            spark, pages, sd, seeds,
-            config=CrawlConfig(default_budget=6, max_epochs=15, broadcast_threshold=thr),
-        )
-        traces[thr] = [
-            (r["epoch"], r["url"], r["status"], r["text"])
-            for r in CrawlState(sd).fetched.read(spark).orderBy("epoch", "url").collect()
-        ]
-    assert traces[100_000] == traces[0]
-
-
 def test_global_budget_caps_epoch(spark, tmp_path):
     from crawlspark.testdata import write_corpus
 
@@ -357,9 +334,13 @@ def test_respect_crawl_delay_budgets(spark, tmp_path):
 
 def test_polite_epoch_runs_few_jobs_over_pinned_relations(spark, corpus_dir, tmp_path, monkeypatch):
     """Epoch 1 of a polite crawl (robots, budgets, bloom from the
-    start) runs at most 20 jobs; over lazy caches it ran 26. A cached
+    start) runs at most 19 jobs; over lazy caches it ran 26, and with a
+    broadcast fetch join beside the shuffle-hash one 20. A cached
     relation runs a job per reference to it, and shows in the write's
-    plan as an InMemoryRelation; a pinned one is a Scan ExistingRDD."""
+    plan as an InMemoryRelation; a pinned one is a Scan ExistingRDD.
+    The epoch's plans read the pages snapshot once: the fetch is one
+    join that yields hits and misses together."""
+    import crawlspark.plans.epoch as epoch_mod
     from crawlspark.sources.tables import EpochTable
 
     pages, seeds, robots, budgets = _load_inputs(spark, corpus_dir)
@@ -368,13 +349,28 @@ def test_polite_epoch_runs_few_jobs_over_pinned_relations(spark, corpus_dir, tmp
     web_crawl(spark, pages, sd, seeds, robots=robots, host_budgets=budgets, config=cfg)
 
     plans = []
+    pages_scans = []
     split = EpochTable.write_epoch_split
+    pin = epoch_mod.pin
+
+    def count_pages_scans(df):
+        # a pages relation is the only one with an html column
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        pages_scans.append(
+            sum("html#" in line for line in plan.splitlines() if "Relation " in line)
+        )
 
     def spy(self, other, df, epoch):
+        count_pages_scans(df)
         plans.append(df._jdf.queryExecution().executedPlan().toString())
         return split(self, other, df, epoch)
 
+    def spy_pin(df, pinned=None):
+        count_pages_scans(df)
+        return pin(df, pinned)
+
     monkeypatch.setattr(EpochTable, "write_epoch_split", spy)
+    monkeypatch.setattr(epoch_mod, "pin", spy_pin)
     cfg.max_epochs = 2
     sc = spark.sparkContext
     sc.setJobGroup("polite-epoch-job-count", "web_crawl epoch 1")
@@ -386,6 +382,7 @@ def test_polite_epoch_runs_few_jobs_over_pinned_relations(spark, corpus_dir, tmp
         sc._jsc.clearJobGroup()
     jobs = sc.statusTracker().getJobIdsForGroup("polite-epoch-job-count")
     assert [s["epoch"] for s in stats] == [1] and stats[0]["urls_dequeued"] > 0
-    assert 0 < len(jobs) <= 20, len(jobs)
+    assert 0 < len(jobs) <= 19, len(jobs)
+    assert sum(pages_scans) == 1, pages_scans
     assert len(plans) == 1
     assert "InMemoryRelation" not in plans[0] and "Scan ExistingRDD" in plans[0], plans[0]
