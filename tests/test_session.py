@@ -4,6 +4,7 @@ and the ones a crawl's CPU cost depends on."""
 import glob
 import json
 import os
+import re
 import shutil
 import signal
 import subprocess
@@ -13,7 +14,14 @@ import time
 import pytest
 from pyspark.find_spark_home import _find_spark_home
 
-from crawlspark.session import ClassCache, default_driver_memory, master_cores
+from crawlspark.session import (
+    JIT_POLICY,
+    ClassCache,
+    _conf_file_java_opts,
+    _with_jit_policy,
+    default_driver_memory,
+    master_cores,
+)
 
 GIB = 2**30
 
@@ -71,20 +79,28 @@ def test_a_repeated_crawl_compiles_almost_no_generated_class(spark, corpus_dir, 
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# one session in a fresh process; prints what its JVM reports
+# one session in a fresh process; prints what its JVM reports, the
+# values of JIT_POLICY's flags among it
 SESSION = """
-import json, sys
+import json, re, sys
 sys.path.insert(0, sys.argv[1])
-from crawlspark.session import get_spark
+from crawlspark.session import JIT_POLICY, get_spark
 spark = get_spark("cds", master="local[1]", extra_conf=json.loads(sys.argv[2]))
 jvm = spark._jvm
+mxf = jvm.java.lang.management.ManagementFactory
+hotspot = mxf.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+)
 print(json.dumps({
     "info": jvm.java.lang.System.getProperty("java.vm.info"),
     "tmpdir": jvm.java.lang.System.getProperty("java.io.tmpdir"),
-    "args": list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()),
+    "args": list(mxf.getRuntimeMXBean().getInputArguments()),
     "probe": spark.conf.get("spark.crawlspark.probe", None),
+    "jit": {f: hotspot.getVMOption(f).getValue() for f in re.findall(r"-XX:(\\w+)=", JIT_POLICY)},
 }), flush=True)
 """
+# JIT_POLICY's flags and values
+POLICY = dict(re.findall(r"-XX:(\w+)=(\S+)", JIT_POLICY))
 
 
 def _session_cmd(extra_conf=None):
@@ -152,8 +168,9 @@ def cache_life(tmp_path_factory):
     built = os.path.getsize(cache.archive) if os.path.exists(cache.archive) else None
     left = sorted(os.listdir(cache.root))
     second = run_session(home, opts)
-    return dict(cache=cache, tmpdir=tmpdir, first=first, second=second, stale_size=stale_size,
-                built=built, left=left, other_key=other_key, dead_list=dead_list)
+    return dict(home=home, cache=cache, tmpdir=tmpdir, first=first, second=second,
+                stale_size=stale_size, built=built, left=left, other_key=other_key,
+                dead_list=dead_list)
 
 
 def test_a_caller_java_option_survives_next_to_the_cache_flags(cache_life):
@@ -190,6 +207,79 @@ def test_a_real_spark_conf_file_disables_the_archive(tmp_path):
     assert out["probe"] == "applied"
     assert not any("SharedArchiveFile" in a or "DumpLoadedClassList" in a for a in out["args"])
     assert not os.path.exists(home / "crawlspark")
+
+
+# -- the JIT policy ------------------------------------------------------------
+
+
+def _jit(values):
+    return {flag: float(v) for flag, v in values.items()}
+
+
+def test_both_archive_sessions_run_under_the_jit_policy(cache_life):
+    # the session that recorded the archive and the one that mapped it
+    assert _jit(cache_life["first"]["jit"]) == _jit(POLICY)
+    assert _jit(cache_life["second"]["jit"]) == _jit(POLICY)
+
+
+def test_without_the_archive_the_jit_policy_joins_the_conf_files_java_options(tmp_path):
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text(
+        "spark.driver.extraJavaOptions  -Dcrawlspark.probe=kept\n"
+    )
+    out = run_session(tmp_path / "xdg", SPARK_CONF_DIR=str(conf))
+    assert not any("SharedArchiveFile" in a or "DumpLoadedClassList" in a for a in out["args"])
+    assert "-Dcrawlspark.probe=kept" in out["args"]
+    assert _jit(out["jit"]) == _jit(POLICY)
+
+
+@pytest.mark.parametrize("where", ["extraJavaOptions", "JAVA_TOOL_OPTIONS"])
+def test_a_users_own_jit_flag_wins(cache_life, where):
+    """The user's value for one of the policy's flags applies, and the
+    policy's other flags keep the JVM's defaults. JAVA_TOOL_OPTIONS lose
+    to the command line, so there only skipping the policy lets it win."""
+    flag, value = next(iter(POLICY.items()))
+    own = f"-XX:{flag}={2 * float(value):g}"
+    if where == "JAVA_TOOL_OPTIONS":
+        out = run_session(cache_life["home"], JAVA_TOOL_OPTIONS=own)
+    else:
+        out = run_session(cache_life["home"], {"spark.driver.extraJavaOptions": own})
+    assert "sharing" in out["info"]
+    jit = _jit(out["jit"])
+    assert jit.pop(flag) == 2 * float(value)
+    assert all(jit[f] != float(v) for f, v in POLICY.items() if f != flag)
+    assert not any(a.startswith(f"-XX:{f}=") for f in POLICY for a in out["args"] if a != own)
+
+
+def test_any_jit_flag_of_the_users_turns_the_policy_off(monkeypatch):
+    for var in ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS"):
+        monkeypatch.delenv(var, raising=False)
+    assert _with_jit_policy("") == JIT_POLICY
+    monkeypatch.setenv("JAVA_TOOL_OPTIONS", "-XX:-UsePerfData")  # not a JIT flag
+    assert _with_jit_policy("-Da=1") == f"-Da=1 {JIT_POLICY}"
+    for own in ("-XX:TieredStopAtLevel=1", "-XX:-TieredCompilation",
+                "-XX:Tier3InvocationThreshold=100", "-XX:CompileThreshold=1000",
+                "-XX:CompileThresholdScaling=0.5"):
+        assert _with_jit_policy(f"-Da=1 {own}") == f"-Da=1 {own}"
+        monkeypatch.setenv("SPARK_SUBMIT_OPTS", own)
+        assert _with_jit_policy("-Da=1") == "-Da=1"
+        monkeypatch.delenv("SPARK_SUBMIT_OPTS")
+
+
+def test_the_conf_files_driver_java_options_are_read_as_spark_reads_them(monkeypatch, tmp_path):
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    assert _conf_file_java_opts() == ""  # no spark-defaults.conf
+    defaults = tmp_path / "spark-defaults.conf"
+    defaults.write_text(
+        "# spark.driver.extraJavaOptions -Dcommented\n"
+        "spark.driver.extraJavaOptionsX -Dother\n"
+        "spark.driver.extraJavaOptions   -Da=1 -Db=2  \n"
+        "spark.executor.extraJavaOptions -Dexecutor\n"
+    )
+    assert _conf_file_java_opts() == "-Da=1 -Db=2"
+    defaults.write_text("spark.driver.extraJavaOptions=-Da=1\nspark.driver.extraJavaOptions: -Dc=3\n")
+    assert _conf_file_java_opts() == "-Dc=3"  # the last one wins
 
 
 def test_user_sharing_flags_or_an_unwritable_cache_disable_the_archive(monkeypatch, tmp_path):
