@@ -7,18 +7,21 @@ CsvAggregateReportVisitor.cs:21-74). Here each report has its **own
 watermark cursor** (O30), and the reports that share a cursor (normally
 all three) share one aggregate scan of the pages log:
 
-    delta = pages WHERE warc_ts ∈ (cursor, head]                  (O5)
-    days  = delta.groupBy(day).agg(details, deletes, max(warc_ts)) (O18-O20)
+    delta = pages WHERE warc_ts > cursor                          (O5)
+    days  = delta.groupBy(day).agg(details, deletes, max(warc_ts),
+                                   collect_list(delete rows))     (O16, O18-O20)
 
-``days`` is O(days) rows and is collected: its max warc_ts is ``head``,
-and details + deletes is every report's delta row count. The aggregate
-reports are merged on the driver (O21): the latest version, O(days) rows
-read with pyarrow, key-summed with ``days``, sorted by day (O22) and
-written back with pyarrow, CSV included (O17/O23). An aggregate update
-therefore costs O(days) and no Spark job. Only the append report
-(``deleted_pages``, O16) is O(delta): one distributed write of the
-delta's rows sorted by (warc_ts, url), whose CSV rows the driver then
-appends from the written version.
+``days`` is O(days) rows plus the delta's delete rows, and is collected
+through Arrow: its max warc_ts is ``head``, details + deletes is every
+report's delta row count, and the delete rows (gathered only when the
+append report shares the cursor) are the append report's next version.
+That aggregate is the only Spark action of an update: every report is
+then written by the driver with pyarrow, CSV included (O17/O23). The
+aggregate reports are merged on the driver (O21): the latest version,
+O(days) rows read with pyarrow, key-summed with ``days`` and sorted by
+day (O22). The append report (``deleted_pages``, O16) is O(delta): the
+delete rows sorted by (warc_ts, url) on the driver (O22), written as one
+version and appended to its CSV.
 
 Each report commits exactly like the crawl state (``sources/tables.py``),
 through its own ``CommitLog``:
@@ -52,6 +55,7 @@ import os
 import shutil
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,17 +66,12 @@ from crawlspark.sources.tables import CommitLog, EpochTable
 
 ISO_O_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSSXXX"  # DateTimeOffset "O" analog (O23)
 
+# a delete page (O16): a /private/ page is the 'delete event' analog of
+# nuget:PackageDelete (DeletedPackagesReportUpdater.cs:14-25)
 _PRIVATE = r"^https://[^/]+/private/"
 
 
 # -- report extractors (pure column logic) ----------------------------------
-
-def deleted_pages(delta: DataFrame) -> DataFrame:
-    """Append-style filter+project report (O16): /private/ pages are the
-    'delete event' analog of nuget:PackageDelete
-    (DeletedPackagesReportUpdater.cs:14-25)."""
-    return delta.where(F.col("url").rlike(_PRIVATE)).select("warc_ts", "url")
-
 
 def page_count_by_day(delta: DataFrame) -> DataFrame:
     """Date-trunc group-count (O18, CatalogLeafCountReportUpdater.cs:18-25)."""
@@ -89,19 +88,26 @@ def page_count_by_day_kind(delta: DataFrame) -> DataFrame:
     return _day_counts(delta).drop("head")
 
 
-def _day_counts(delta: DataFrame) -> DataFrame:
+def _day_counts(delta: DataFrame, rows: T.StructType | None = None) -> DataFrame:
     """``page_count_by_day_kind`` plus each day's max warc_ts as ``head``:
-    the one aggregate an update runs per cursor."""
+    the one aggregate an update runs per cursor. Given the append
+    report's ``rows`` schema, it also gathers each day's delete pages as
+    a ``deleted`` list of such structs (O16)."""
     kind = F.when(F.col("url").rlike(_PRIVATE), "delete").otherwise("details")
+    delete = F.col("kind") == "delete"
+    aggs = [
+        F.sum(F.when(F.col("kind") == "details", 1).otherwise(0)).alias("details"),
+        F.sum(F.when(delete, 1).otherwise(0)).alias("deletes"),
+        F.count("*").alias("__total"),
+        F.max("warc_ts").alias("head"),
+    ]
+    if rows is not None:
+        page = F.struct(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in rows])
+        aggs.append(F.collect_list(F.when(delete, page)).alias("deleted"))  # skips nulls
     out = (
         delta.withColumn("kind", kind)
         .groupBy(F.date_trunc("DAY", F.col("warc_ts")).alias("day"))
-        .agg(
-            F.sum(F.when(F.col("kind") == "details", 1).otherwise(0)).alias("details"),
-            F.sum(F.when(F.col("kind") == "delete", 1).otherwise(0)).alias("deletes"),
-            F.count("*").alias("__total"),
-            F.max("warc_ts").alias("head"),
-        )
+        .agg(*aggs)
     )
     # O20 totals invariant, enforced IN the plan (raise_error fires during
     # the aggregate job, before any commit — the reference throws during
@@ -239,16 +245,19 @@ class ReportStore:
                 os.remove(path)
 
     def update(
-        self, name: str, delta: DataFrame, days: list[tuple[int, int, int]], head: dt.datetime,
+        self, name: str, days: list[tuple[int, int, int]], head: dt.datetime,
+        deleted: pa.Table | None,
     ) -> None:
         """Stage the next version of ``name``, write the CSV mirror, and
-        commit the version with cursor ``head``. ``delta`` is the pages
-        delta and ``days`` its collected ``(day micros, details,
-        deletes)`` rows.
+        commit the version with cursor ``head``. ``days`` is the delta's
+        collected ``(day micros, details, deletes)`` rows and ``deleted``
+        its delete pages' rows in any order, which only the append
+        report reads. Every version is written by the driver.
 
         Append report (O17, CsvAppendReportVisitor.cs:20-41): the version
-        is the delta's rows alone, so an update costs O(delta) and never
-        rewrites history. Aggregate reports (O21,
+        is ``deleted`` sorted by (warc_ts, url), so an update costs
+        O(delta) and never rewrites history; the CSV rows are appended
+        from the same table. Aggregate reports (O21,
         CsvAggregateReportVisitor.cs:21-74): the version is the latest
         one key-merged with ``days`` on the driver, O(days)."""
         schema, values = _SPECS[name]
@@ -257,19 +266,16 @@ class ReportStore:
         version = 0 if last is None else last + 1
         meta = {"cursors": {name: head.isoformat()}}
         if values is None:
-            rows = deleted_pages(delta).select(*[F.col(f.name).cast(f.dataType) for f in schema])
-            # one task sorts the delta's rows (O22): the driver reads them
-            # all back for the CSV anyway
-            table.write_epoch(rows.repartition(1).sortWithinPartitions("warc_ts", "url"), version)
-            committed = 0 if last is None else table.log.read()["meta"][str(last)]["csv_len"]
-            written = pq.read_table(table._epoch_dir(version))
-            meta["csv_len"] = self._write_csv(name, table, written, committed)
-            table.log.commit(version, meta)
+            # O22: Arrow compares strings bytewise, as Spark orders them
+            rows = deleted.sort_by([(c, "ascending") for c in schema.names])
+            append_at = 0 if last is None else table.log.read()["meta"][str(last)]["csv_len"]
         else:
-            merged = self._merge(name, table, last, days)
-            table.write_epoch_arrow(merged, version)
-            self._write_csv(name, table, merged, None)
-            table.log.commit(version, meta, expire=True)
+            rows, append_at = self._merge(name, table, last, days), None
+        table.write_epoch_arrow(rows, version)
+        length = self._write_csv(name, table, rows, append_at)
+        if values is None:
+            meta["csv_len"] = length
+        table.log.commit(version, meta, expire=values is not None)
         self.sweep(name)
 
     @staticmethod
@@ -354,17 +360,20 @@ def update_reports(
         delta = pages.where(F.col("warc_ts").isNotNull())
         if cursor > EPOCH_MIN:
             delta = delta.where(F.col("warc_ts") > utc_lit(cursor))
-        # the ONE aggregate job of these reports: O(days) rows
-        days = _day_counts(delta).select(
-            unix_micros(F.col("day")), "details", "deletes", unix_micros(F.col("head")),
-        ).collect()
-        if not days:
+        # the append report's row schema, if it shares this cursor
+        rows = next((_SPECS[n][0] for n in group if _SPECS[n][1] is None), None)
+        # the ONE Spark action of these reports: O(days) rows plus, for the
+        # append report, the delta's delete rows, collected as Arrow
+        days = _day_counts(delta, rows).select(
+            unix_micros(F.col("day")).alias("day"), "details", "deletes",
+            unix_micros(F.col("head")).alias("head"), *([] if rows is None else ["deleted"]),
+        ).toArrow()
+        if not days.num_rows:
             continue  # nothing after the cursor: the skip needs no other job
-        head = from_micros(max(r[3] for r in days))
-        day_rows = [tuple(r[:3]) for r in days]
-        # pin the append report's scan to what the aggregate saw
-        delta = delta.where(F.col("warc_ts") <= utc_lit(head))
+        head = from_micros(pc.max(days["head"]).as_py())
+        day_rows = list(zip(*(days[c].to_pylist() for c in ("day", "details", "deletes"))))
+        deleted = None if rows is None else pa.Table.from_struct_array(pc.list_flatten(days["deleted"]))
         for name in group:
-            store.update(name, delta, day_rows, head)
+            store.update(name, day_rows, head, deleted)
             updated[name] = sum(details + deletes for _, details, deletes in day_rows)
     return updated

@@ -98,7 +98,7 @@ def test_catalog_increment_and_reports_are_zstd_with_v2_pages(spark, corpus_dir,
     update_reports(spark, pages_only(pages), report_dir)
     assert _assert_zstd_v2(state_dir)[0] > 0
     spark_files, arrow_files = _assert_zstd_v2(report_dir)
-    assert spark_files > 0 and arrow_files > 0  # deleted_pages and the aggregates
+    assert spark_files == 0 and arrow_files > 0  # the driver writes every report version
 
 
 def test_table_read_launches_no_spark_job(spark, crawl_run):
