@@ -426,12 +426,6 @@ def get_spark(
         # epoch recompiles 50-100 of them through Janino and the JIT; with
         # room for a long crawl's working set, later epochs compile ~4
         .config("spark.sql.codegen.cache.maxEntries", "2000")
-        # no Python call site on each Column: every Column method and
-        # F.col otherwise looks up the session, its conf and the stack
-        # through Py4J (a warm 2-epoch polite crawl made about 6,600
-        # Py4J calls with it, 3,600 without). A Spark error then no
-        # longer names the Python line that built the expression.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -80,12 +80,10 @@ def test_a_repeated_crawl_compiles_almost_no_generated_class(spark, corpus_dir, 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # one session in a fresh process; prints what its JVM reports, the
-# values of JIT_POLICY's flags among it, and whether PySpark records a
-# call site on each Column
+# values of JIT_POLICY's flags among it
 SESSION = """
 import json, re, sys
 sys.path.insert(0, sys.argv[1])
-from pyspark.errors.utils import is_debugging_enabled
 from crawlspark.session import JIT_POLICY, get_spark
 spark = get_spark("cds", master="local[1]", extra_conf=json.loads(sys.argv[2]))
 jvm = spark._jvm
@@ -99,7 +97,6 @@ print(json.dumps({
     "args": list(mxf.getRuntimeMXBean().getInputArguments()),
     "probe": spark.conf.get("spark.crawlspark.probe", None),
     "jit": {f: hotspot.getVMOption(f).getValue() for f in re.findall(r"-XX:(\\w+)=", JIT_POLICY)},
-    "call_sites": is_debugging_enabled(),
 }), flush=True)
 """
 # JIT_POLICY's flags and values
@@ -210,12 +207,6 @@ def test_a_real_spark_conf_file_disables_the_archive(tmp_path):
     assert out["probe"] == "applied"
     assert not any("SharedArchiveFile" in a or "DumpLoadedClassList" in a for a in out["args"])
     assert not os.path.exists(home / "crawlspark")
-
-
-def test_column_call_sites_are_off_unless_the_user_turns_them_on(cache_life):
-    assert cache_life["first"]["call_sites"] is False
-    out = run_session(cache_life["home"], {"spark.python.sql.dataFrameDebugging.enabled": "true"})
-    assert out["call_sites"] is True
 
 
 # -- the JIT policy ------------------------------------------------------------
